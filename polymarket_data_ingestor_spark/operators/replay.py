@@ -1,9 +1,12 @@
 """Order-book reconstruction → tick emission (SURVEY §2.10 O1).
 
 The one operator Spark lacks natively: per-asset stateful replay of feed
-messages into a tick table, re-expressed as a grouped-map pandas UDF
-(``applyInPandas``) keyed on ``asset_id``. Semantics mirror
-``MarketState::update`` (``cli/src/tick_generator.rs:224-367``) exactly:
+messages into a tick table. Messages are hash-partitioned on the group key
+(``asset_id``, or ``(asset_id, segment)`` on the skew-split path), sorted
+within each partition by that key and the replay key, and replayed by a
+``mapInPandas`` kernel that walks each sorted partition once, resetting the
+book where the group key changes. Semantics mirror ``MarketState::update``
+(``cli/src/tick_generator.rs:224-367``) exactly:
 
 * ``book`` snapshot ⇒ replace both sides, emit 2 BBO rows;
 * ``price_change`` diff ⇒ upsert levels, ``size == 0`` deletes
@@ -24,17 +27,20 @@ Parity landmines encoded here (SURVEY §1.4):
   once, JVM-side — injective in the tick domain (≤4 dp prices), so keying
   and outputs are bit-identical to the reference's Decimal→f64 path;
 * state persists across hourly files — guaranteed here because *all* of an
-  asset's messages land in one group, sorted by ``(file_hour, line_id,
-  msg_idx)`` before the kernel runs (``cli/src/main.rs:142-164``).
+  asset's messages land in one partition, contiguous and sorted by
+  ``(file_hour, line_id, msg_idx)`` before the kernel runs
+  (``cli/src/main.rs:142-164``).
 
-Scale notes: state per asset is one small dict-of-dicts (books are tiny), so
-groups stream through Arrow batches with O(books) memory per task exactly
-like the reference's single pass — but parallel across assets. The only
-shuffle is the groupBy hash partitioning on ``asset_id``; at 1000 executors
-that is the minimal co-location the semantics permit. Skewed assets (one
-hyper-active market) are bounded by per-asset data volume, not by executor
-count — mitigate by replaying narrower time ranges, which the path pruning
-already gives us.
+Scale notes: state per group is one small dict-of-dicts (books are tiny),
+carried across Arrow batches when a group spans two, so Python memory per
+task is bounded by one batch — like the reference's single pass, but
+parallel across assets. The kernel's input exchange is a numbered
+repartition (``spark.sql.shuffle.partitions``), which AQE does not coalesce,
+so the CPU-bound kernel stage keeps one task per core however few bytes it
+reads; on the plain path it is the only shuffle. A hyper-active asset would
+bound its partition's task by its volume; the ``split_at_snapshots`` path
+cuts such an asset into segments at book snapshots, which fully reset its
+state, and spreads them over partitions.
 """
 
 from __future__ import annotations
@@ -73,7 +79,9 @@ REPLAY_OUTPUT_SCHEMA = StructType(
 )
 
 TICK_COLUMNS = ["timestamp", "kind", "market", "asset", "side", "price", "size"]
-ORDER_COLUMNS = ["file_hour", "line_id", "msg_idx", "emit_idx"]
+#: A message's position in the log; the kernel replays each group in this order.
+REPLAY_KEY = ["file_hour", "line_id", "msg_idx"]
+ORDER_COLUMNS = [*REPLAY_KEY, "emit_idx"]
 
 # Packed message kind codes (see replay_feed_messages).
 KIND_BOOK, KIND_CHANGE, KIND_TRADE = 0, 1, 2
@@ -98,14 +106,23 @@ try:  # pragma: no cover - environment-dependent
 except Exception:  # noqa: BLE001 - best-effort; PYTHONPATH fallback applies
     pass
 
-def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Replay one asset's *book events* in log order; emit BBO tick rows.
+def _replay_rows(pdf: pd.DataFrame, resets: list[int], book: list) -> pd.DataFrame:
+    """Replay a frame of packed messages, already in replay order; emit
+    tick rows.
+
+    ``resets`` lists, ascending, the row positions where a replay group
+    (an asset, or one segment of an asset) starts: the book is emptied
+    there. Rows before the first reset continue the group whose state
+    ``book`` carries in (``[bids, asks, best_bid, best_ask]``), and
+    ``book`` is left holding the state after the last row, so a group
+    that spans two frames replays exactly as if it were one.
 
     Input is the packed form produced by :func:`replay_feed_messages`:
     levels arrive as flat ``array<double>`` columns (``[p1, s1, p2, s2,
     ...]``; change prices sign-encode the side, BUY positive / SELL
-    negative) — numpy-friendly, no per-level dicts through Arrow. Trades
-    never reach this kernel (they're a stateless JVM projection).
+    negative) — numpy-friendly, no per-level dicts through Arrow. A
+    trade packs into ``changes_flat`` as one signed pair and leaves the
+    book untouched.
 
     Numeric note: the wire's decimal strings are cast to f64 JVM-side;
     within the tick domain (≤4 dp prices, ≤6 dp sizes) the string→double
@@ -113,15 +130,11 @@ def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
     ``BTreeMap<Decimal>`` keying exactly, and emitted values equal its
     ``to_f64`` downcasts (``tick_generator.rs:89-90``).
     """
-    pdf = pdf.sort_values(["file_hour", "line_id", "msg_idx"], kind="mergesort")
-    bids: dict[float, float] = {}
-    asks: dict[float, float] = {}
     # Incremental top-of-book: recomputing min/max over the dict per event
     # is O(depth) and dominates on deep books (a hot asset accumulating
     # hundreds of levels); tracking the best and recomputing only when the
     # best level is deleted is O(1) amortized.
-    best_bid: float | None = None
-    best_ask: float | None = None
+    bids, asks, best_bid, best_ask = book
 
     # The loop appends only to numeric buffers (cheap); per-row string
     # columns are recovered afterwards by vectorized fancy-indexing of the
@@ -152,7 +165,13 @@ def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
     b_col = pdf["bids_flat"].to_numpy()
     a_col = pdf["asks_flat"].to_numpy()
     c_col = pdf["changes_flat"].to_numpy()
+    reset_at = iter(resets)
+    next_reset = next(reset_at, -1)
     for i in range(len(kinds)):
+        if i == next_reset:
+            bids, asks = {}, {}
+            best_bid = best_ask = None
+            next_reset = next(reset_at, -1)
         kind = kinds[i]
         # A NULL flat array marks a message the packing pass rejected
         # (unparseable price/size, non-BUY/SELL side, or a missing/null
@@ -229,6 +248,8 @@ def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
             prices.append(0.0)
             sizes.append(0.0)
 
+    book[:] = (bids, asks, best_bid, best_ask)
+
     idx = np.asarray(src_idx, dtype=np.int64)
     trade_mask = np.asarray(is_trade, dtype=bool)
     ask_mask = np.asarray(is_ask_row, dtype=bool)
@@ -258,6 +279,41 @@ def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+def _replay_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Replay one group's messages (an asset, or one segment of an asset)
+    in any arrival order: sort them by the replay key, then run
+    :func:`_replay_rows` from an empty book."""
+    pdf = pdf.sort_values(REPLAY_KEY, kind="mergesort")
+    return _replay_rows(pdf, [0], [{}, {}, None, None])
+
+
+def _replay_partition(
+    batches: Iterable[pd.DataFrame], group_cols: Sequence[str]
+) -> Iterable[pd.DataFrame]:
+    """``mapInPandas`` kernel: replay one partition sorted by
+    ``group_cols`` and then the replay key, in one pass.
+
+    Each group's rows are contiguous and in replay order, so the book is
+    reset wherever the group key changes, found by comparing each row's
+    key with the previous row's. A group that spans two Arrow batches
+    continues with the state the previous batch left, so Python memory is
+    bounded by one batch rather than by the largest group.
+    """
+    book: list = [{}, {}, None, None]
+    last_key = None  # group key of the previous batch's last row
+    for pdf in batches:
+        n = len(pdf)
+        if not n:
+            continue
+        keys = [pdf[c].to_numpy() for c in group_cols]
+        starts = np.zeros(n, dtype=bool)
+        for k in keys:
+            starts[1:] |= k[1:] != k[:-1]
+        starts[0] = tuple(k[0] for k in keys) != last_key
+        last_key = tuple(k[-1] for k in keys)
+        yield _replay_rows(pdf, np.flatnonzero(starts).tolist(), book)
+
+
 def replay_feed_messages(
     feed: DataFrame,
     markets: Iterable[str] | None = None,
@@ -283,11 +339,11 @@ def replay_feed_messages(
     factors into independent segments at snapshot boundaries — segment 0
     (pre-snapshot diffs against an empty book, ``tick_generator.rs:339-343``)
     plus one segment per ``snapshots_per_segment`` snapshots (coarse on
-    purpose: each segment must stay big enough to amortize per-group
-    kernel overhead — a segment per *individual* snapshot on a
-    snapshot-heavy feed explodes the group count and the overhead eats
-    the win). The kernel then groups on ``(asset_id, segment)`` instead
-    of ``asset_id``, spreading a hyper-active asset across executors;
+    purpose: the stride is also the gate threshold below, and the window
+    and join that assign segments only pay off for an asset hot enough
+    to reach it). The kernel then partitions and resets on
+    ``(asset_id, segment)`` instead of ``asset_id``, spreading a
+    hyper-active asset across executors;
     outputs are identical row-for-row (the order columns still
     reconstruct global order).
 
@@ -334,9 +390,8 @@ def replay_feed_messages(
     # a NULL collection (the reference structs make changes/bids/asks
     # required Vecs, so a missing/null collection fails serde there)
     # transforms to NULL directly. The kernel then drops any message
-    # whose relevant flat array is NULL — one array traversal both
-    # validates and packs (the r2 version traversed each array twice:
-    # a forall validity pass plus the packing transform). Empty-but-
+    # whose relevant flat array is NULL — the packing transforms also
+    # validate, with no separate validity pass over the arrays. Empty-but-
     # present arrays stay valid: they pack to empty (non-NULL) arrays.
     # try_cast: under ANSI mode a plain cast would THROW on garbage
     # instead of classifying it for rejection.
@@ -351,34 +406,45 @@ def replay_feed_messages(
     # reference would not emit). Spark orders NaN above +Infinity, so
     # strictly-between-infinities excludes NaN and both infinities in
     # one predicate.
+    #
+    # Each level's strings are cast ONCE, into a struct, by a first
+    # transform; a second transform validates and packs from the struct's
+    # fields. Spark does no common-subexpression elimination inside
+    # lambda functions, so reusing a cast expression in one lambda
+    # re-parses the string at every use.
     def _finite(v):
-        return F.when(
-            (v > F.lit(float("-inf"))) & (v < F.lit(float("inf"))), v
-        )
+        return (v > F.lit(float("-inf"))) & (v < F.lit(float("inf")))
+
+    def _cast(lv):
+        return [
+            lv["price"].try_cast("double").alias("p"),
+            lv["size"].try_cast("double").alias("s"),
+        ]
 
     def level_pairs(col):
-        def pack(lv):
-            p = _finite(lv["price"].try_cast("double"))
-            s = _finite(lv["size"].try_cast("double"))
-            return F.when(p.isNotNull() & s.isNotNull(), F.array(p, s))
+        levels = F.transform(col, lambda lv: F.struct(*_cast(lv)))
+        return F.flatten(F.transform(levels, lambda lv: F.when(
+            _finite(lv["p"]) & _finite(lv["s"]), F.array(lv["p"], lv["s"])
+        )))
 
-        return F.flatten(F.transform(col, pack))
-
-    def signed_pack(side, price, size):
+    def signed_pairs(col):
         # Sign-encodes BUY(+)/SELL(-); an unknown side yields NULL (not
         # a sign-encoded guess), poisoning the element → message.
-        p = _finite(price.try_cast("double"))
-        s = _finite(size.try_cast("double"))
-        sp = F.when(side == "BUY", p).when(side == "SELL", -p)
-        return F.when(sp.isNotNull() & s.isNotNull(), F.array(sp, s))
-
-    change_pairs = F.flatten(
-        F.transform(
-            F.col("changes"),
-            lambda ch: signed_pack(ch["side"], ch["price"], ch["size"]),
+        levels = F.transform(
+            col, lambda ch: F.struct(ch["side"].alias("side"), *_cast(ch))
         )
+        return F.flatten(F.transform(levels, lambda ch: F.when(
+            _finite(ch["p"]) & _finite(ch["s"]),
+            F.when(ch["side"] == "BUY", F.array(ch["p"], ch["s"]))
+            .when(ch["side"] == "SELL", F.array(-ch["p"], ch["s"])),
+        )))
+
+    # a trade packs as a one-element change list: same rules, one pair
+    change_pairs = signed_pairs(
+        F.when(F.col("event_type") == "price_change", F.col("changes"))
+        .when(F.col("event_type") == "last_trade_price",
+              F.array(F.struct("price", "size", "side")))
     )
-    trade_pair = signed_pack(F.col("side"), F.col("price"), F.col("size"))
     packed = feed.filter(
         F.col("event_type").isin("book", "price_change", "last_trade_price")
         # malformed messages without a key would otherwise form a null
@@ -400,9 +466,7 @@ def replay_feed_messages(
         .alias("kind_code"),
         level_pairs(F.col("bids")).alias("bids_flat"),
         level_pairs(F.col("asks")).alias("asks_flat"),
-        F.when(F.col("event_type") == "price_change", change_pairs)
-        .when(F.col("event_type") == "last_trade_price", trade_pair)
-        .alias("changes_flat"),
+        change_pairs.alias("changes_flat"),
     )
     if split_at_snapshots:
         from pyspark.sql import Window
@@ -570,12 +634,28 @@ def replay_feed_messages(
                     F.lit(""),  # global prefix: empty-book replay
                 ),
             )
+            .drop("__snap_c", "__carry_seg", "__opens")
         )
         group_cols = ["asset_id", "__segment"]
     else:
         group_cols = ["asset_id"]
-    ticks = packed.groupBy(*group_cols).applyInPandas(
-        _replay_group, schema=REPLAY_OUTPUT_SCHEMA
+    # One explicit-count exchange, then one sorted pass per partition. A
+    # numbered repartition is an exchange AQE leaves alone: coalescing by
+    # shuffle bytes would squeeze this CPU-bound stage onto fewer tasks
+    # than cores. The sort puts each group's rows together and in replay
+    # order (nulls last, as pandas sorts them), so the kernel walks each
+    # partition once, with no pandas frame, sort or Arrow batch per group.
+    n_parts = int(feed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ticks = (
+        packed.repartition(n_parts, *group_cols)
+        .sortWithinPartitions(
+            *group_cols,
+            *(F.col(c).asc_nulls_last() for c in REPLAY_KEY),
+        )
+        .mapInPandas(
+            lambda batches: _replay_partition(batches, group_cols),
+            schema=REPLAY_OUTPUT_SCHEMA,
+        )
     )
     if in_log_order:
         ticks = ticks.orderBy(*ORDER_COLUMNS)
@@ -803,7 +883,12 @@ def replay(
         read_frames,
     )
 
-    if split_at_snapshots == "auto":
+    if isinstance(split_at_snapshots, str):
+        if split_at_snapshots != "auto":
+            raise ValueError(
+                "split_at_snapshots must be True, False or 'auto', got "
+                f"{split_at_snapshots!r}"
+            )
         split_at_snapshots = paths is not None
     if paths is not None:
         frames = read_frames(spark_or_frames, paths)

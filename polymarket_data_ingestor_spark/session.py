@@ -42,7 +42,7 @@ def get_spark(
       side turns out small, and splits skewed partitions (the Spark analogue
       of the reference's hot-shard connection splitting,
       ``collector/src/client/reconnecter.rs:280-350``).
-    * Arrow execution for the grouped-map replay kernel (SURVEY §2.10 O1).
+    * Arrow execution for the replay kernel (SURVEY §2.10 O1).
       Batch size 131072: a local sweep (10k/32k/64k/128k/256k rows on the
       sf0.1 replay fixture) shows the Python-worker hop cost is dominated
       by per-batch overhead — 128k-row batches run the replay kernel ~1.8×
@@ -54,6 +54,15 @@ def get_spark(
       past 128k are <15% and double that footprint, so this is the knee.
     * ``parquet.compression=snappy`` to match the reference tick sink
       (``cli/src/tick_generator.rs:60-63``).
+    * ``spark.buffer.pageSize=2m``: a sort or hash aggregate allocates
+      its first memory page at full page size however few rows it holds,
+      and Spark's default (heap / cores / 16, capped at 64 MB) gives a
+      16g driver 64 MB pages. Three replay-kernel sorts at once then pin
+      192 MB of page arrays for a few MB of rows, and G1 grew the heap by
+      about 400 MB. 2 MB is inside Spark's own default range (1-64 MB),
+      below G1's humongous-object size at the 16g default heap, and
+      still addresses 16 GB per task; a larger record gets a page of its
+      own size.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", _DEFAULT_CPUS))
     if master is None:
@@ -73,6 +82,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.buffer.pageSize", "2m")
         .config("spark.sql.session.timeZone", "UTC")
         # files.maxPartitionBytes default 128m is right for the 100 TB
         # target; do not shrink it for the local test scale.

@@ -100,6 +100,48 @@ def test_replay_single_shuffle(spark, tmp_path):
     assert plan.count("FileScan json") == 1
 
 
+def test_replay_kernel_sorted_partition_pass(spark, tmp_path):
+    """The replay kernel's plan contract: one sorted pass per partition
+    (MapInPandas, no per-group FlatMapGroupsInPandas), fed by exactly
+    one exchange, a numbered repartition on the group key that AQE
+    leaves alone, so the executed kernel stage has
+    spark.sql.shuffle.partitions tasks however few bytes it reads."""
+    import sys
+
+    sys.path.insert(0, "tests")
+    from fixture_gen import write_fixture_files
+
+    from polymarket_data_ingestor_spark.operators.replay import replay
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    paths = write_fixture_files(tmp_path, n_hours=1, msgs_per_hour=30, seed=3)
+    df = replay(spark, [str(p) for p in paths])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    assert f", {n}), REPARTITION_BY_NUM" in plan, plan
+
+    sc = spark.sparkContext
+    sc.setJobGroup("replay-kernel-contract", "replay kernel stage")
+    try:
+        df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final, final
+    assert "AQEShuffleRead" not in final, final
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(sid)
+              for jid in tracker.getJobIdsForGroup("replay-kernel-contract")
+              for sid in tracker.getJobInfo(jid).stageIds]
+    # the result stage runs the kernel: one task per shuffle partition
+    kernel = max((s for s in stages if s is not None),
+                 key=lambda s: s.stageId)
+    assert kernel.numTasks == n, [(s.stageId, s.numTasks) for s in stages if s]
+
+
 def test_replay_split_no_serial_stage(spark, tmp_path):
     """The skew-split path must have NO stage serial in one asset's
     volume: the ordinal window partitions on (asset_id, file_hour) —

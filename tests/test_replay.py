@@ -382,6 +382,15 @@ def test_auto_split_default_gates_and_matches_plain(spark, tmp_path):
     )
 
 
+@pytest.mark.parametrize("value", ["false", "true", "False", "", "AUTO"])
+def test_split_at_snapshots_rejects_other_strings(spark, fixture_paths, value):
+    """Only "auto" is accepted as a string: "false" read from a config
+    file must not silently enable splitting as a truthy value."""
+    with pytest.raises(ValueError, match="True, False or 'auto'"):
+        replay(spark, [str(p) for p in fixture_paths],
+               split_at_snapshots=value)
+
+
 def test_line_id_order_on_multisplit_jsonl(spark, tmp_path):
     """The line-ordering contract (sources/frames.py line_id) must hold
     even when a plain .jsonl file splits into many read partitions:

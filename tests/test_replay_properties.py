@@ -16,8 +16,10 @@ from polymarket_data_ingestor_spark.operators.replay import (
     KIND_BOOK,
     KIND_CHANGE,
     KIND_TRADE,
+    REPLAY_OUTPUT_SCHEMA,
     TICK_COLUMNS,
     _replay_group,
+    _replay_partition,
 )
 
 prices = st.integers(1, 60).map(lambda i: round(0.3 + i * 0.01, 2))
@@ -126,3 +128,63 @@ def test_kernel_row_count_invariants(msgs):
     bbo = got[got["kind"] == "BBO"]
     assert (bbo[bbo["emit_idx"] == 0]["side"] == "ASK").all()
     assert (bbo[bbo["emit_idx"] == 1]["side"] == "BID").all()
+
+
+@st.composite
+def sorted_partition(draw):
+    """Messages of several interleaved group keys, sorted as the replay
+    exchange delivers a partition (group key, then the replay key) and
+    cut into Arrow-batch-like frames, with at least one cut inside a
+    group. Keys are plain assets, or (asset, segment) pairs that share
+    assets; a rejected message (NULL flat array) may start a group."""
+    split = draw(st.booleans())
+    group_cols = ["asset_id", "__segment"] if split else ["asset_id"]
+    assets = ["a1", "a2", "a3"]
+    segments = ["", "h#1", "h#4"] if split else [""]
+    keys = st.tuples(st.sampled_from(assets), st.sampled_from(segments))
+    rows = []
+    for i, m in enumerate(draw(st.lists(message(), min_size=2,
+                                        max_size=60))):
+        kind, b, a, c = m
+        if draw(st.integers(0, 9)) == 0:  # rejected by the packing pass
+            b, a, c = (None, None, c) if kind == KIND_BOOK else (b, a, None)
+        asset, seg = draw(keys)
+        rows.append({
+            "asset_id": asset, "__segment": seg,
+            "file_hour": draw(st.sampled_from(["h0", "h1"])),
+            "line_id": i, "msg_idx": draw(st.integers(0, 2)),
+            "timestamp": str(1000 + i), "market": "m" + asset,
+            "kind_code": kind,
+            "bids_flat": b, "asks_flat": a, "changes_flat": c,
+        })
+    pdf = pd.DataFrame(rows)
+    if not split:
+        pdf = pdf.drop(columns="__segment")
+    pdf = pdf.sort_values([*group_cols, "file_hour", "line_id", "msg_idx"],
+                          kind="mergesort").reset_index(drop=True)
+    # one cut inside a group that has at least two rows, plus random cuts
+    key = pdf[group_cols].apply(tuple, axis=1)
+    inner = [i for i in range(1, len(pdf)) if key[i] == key[i - 1]]
+    cuts = set(draw(st.lists(st.integers(0, len(pdf)), max_size=4)))
+    if inner:
+        cuts.add(draw(st.sampled_from(inner)))
+    bounds = [0, *sorted(cuts), len(pdf)]
+    frames = [pdf.iloc[lo:hi].reset_index(drop=True)
+              for lo, hi in zip(bounds, bounds[1:])]
+    return group_cols, pdf, frames
+
+
+@given(sorted_partition())
+@settings(max_examples=200, deadline=None)
+def test_partition_kernel_matches_per_group_kernel(case):
+    """One sorted pass over a partition, with keys spanning frame
+    boundaries, equals the per-group kernel run on each group alone."""
+    group_cols, pdf, frames = case
+    got = pd.concat(list(_replay_partition(iter(frames), group_cols)),
+                    ignore_index=True)
+    want = pd.concat([_replay_group(g) for _, g in
+                      pdf.groupby(group_cols, sort=True)],
+                     ignore_index=True)
+    cols = REPLAY_OUTPUT_SCHEMA.fieldNames()
+    assert list(got.columns) == cols
+    pd.testing.assert_frame_equal(got, want[cols])
