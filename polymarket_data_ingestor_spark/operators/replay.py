@@ -396,7 +396,7 @@ def replay_feed_messages(
     # try_cast: under ANSI mode a plain cast would THROW on garbage
     # instead of classifying it for rejection.
     #
-    # _finite: try_cast ACCEPTS "NaN"/"Infinity"/"-Infinity" as doubles,
+    # finite: try_cast ACCEPTS "NaN"/"Infinity"/"-Infinity" as doubles,
     # but the reference's Decimal parse rejects those strings (serde
     # fails -> whole message dropped) — and a NaN price would corrupt
     # the kernel besides (NaN dict keys never equal themselves, so every
@@ -407,66 +407,64 @@ def replay_feed_messages(
     # strictly-between-infinities excludes NaN and both infinities in
     # one predicate.
     #
-    # Each level's strings are cast ONCE, into a struct, by a first
-    # transform; a second transform validates and packs from the struct's
-    # fields. Spark does no common-subexpression elimination inside
-    # lambda functions, so reusing a cast expression in one lambda
-    # re-parses the string at every use.
-    def _finite(v):
-        return (v > F.lit(float("-inf"))) & (v < F.lit(float("inf")))
+    # The projection and its filter are SQL text, parsed JVM-side in one
+    # py4j call each; Column lambdas would pay a round trip for every
+    # expression node they build. Each level's strings are cast once,
+    # into a struct, by an inner transform; the outer transform validates
+    # and packs from the struct's fields, so no string is parsed twice.
+    # The SELL price is negated with unary minus: a SELL at "0" packs as
+    # -0.0, whose sign bit the kernel reads, where 0 - p would give +0.0
+    # and flip the level to BUY.
+    def finite(v):
+        return f"{v} > double('-Infinity') AND {v} < double('Infinity')"
 
-    def _cast(lv):
-        return [
-            lv["price"].try_cast("double").alias("p"),
-            lv["size"].try_cast("double").alias("s"),
-        ]
+    def cast(lv):
+        return (f"'p', try_cast({lv}.price AS double), "
+                f"'s', try_cast({lv}.size AS double)")
 
     def level_pairs(col):
-        levels = F.transform(col, lambda lv: F.struct(*_cast(lv)))
-        return F.flatten(F.transform(levels, lambda lv: F.when(
-            _finite(lv["p"]) & _finite(lv["s"]), F.array(lv["p"], lv["s"])
-        )))
+        return (
+            f"flatten(transform(transform({col}, lv -> named_struct("
+            f"{cast('lv')})), lv -> CASE WHEN {finite('lv.p')} AND "
+            f"{finite('lv.s')} THEN array(lv.p, lv.s) END))"
+        )
 
     def signed_pairs(col):
         # Sign-encodes BUY(+)/SELL(-); an unknown side yields NULL (not
         # a sign-encoded guess), poisoning the element → message.
-        levels = F.transform(
-            col, lambda ch: F.struct(ch["side"].alias("side"), *_cast(ch))
+        return (
+            f"flatten(transform(transform({col}, ch -> named_struct("
+            f"'side', ch.side, {cast('ch')})), ch -> CASE WHEN "
+            f"{finite('ch.p')} AND {finite('ch.s')} THEN CASE ch.side "
+            f"WHEN 'BUY' THEN array(ch.p, ch.s) "
+            f"WHEN 'SELL' THEN array(-ch.p, ch.s) END END))"
         )
-        return F.flatten(F.transform(levels, lambda ch: F.when(
-            _finite(ch["p"]) & _finite(ch["s"]),
-            F.when(ch["side"] == "BUY", F.array(ch["p"], ch["s"]))
-            .when(ch["side"] == "SELL", F.array(-ch["p"], ch["s"])),
-        )))
 
     # a trade packs as a one-element change list: same rules, one pair
-    change_pairs = signed_pairs(
-        F.when(F.col("event_type") == "price_change", F.col("changes"))
-        .when(F.col("event_type") == "last_trade_price",
-              F.array(F.struct("price", "size", "side")))
+    changes = (
+        "CASE event_type WHEN 'price_change' THEN changes "
+        "WHEN 'last_trade_price' THEN "
+        "array(named_struct('price', price, 'size', size, 'side', side)) END"
     )
-    packed = feed.filter(
-        F.col("event_type").isin("book", "price_change", "last_trade_price")
+    packed = feed.where(
+        "event_type IN ('book', 'price_change', 'last_trade_price')"
         # malformed messages without a key would otherwise form a null
         # group; serde in the reference rejects them at parse time
-        & F.col("asset_id").isNotNull()
-        & F.col("market").isNotNull()
-        & F.col("timestamp").isNotNull()
-    ).select(
+        " AND asset_id IS NOT NULL AND market IS NOT NULL"
+        " AND timestamp IS NOT NULL"
+    ).selectExpr(
         "asset_id",
         "file_hour",
         "line_id",
         "msg_idx",
         "timestamp",
         "market",
-        F.when(F.col("event_type") == "book", KIND_BOOK)
-        .when(F.col("event_type") == "price_change", KIND_CHANGE)
-        .otherwise(KIND_TRADE)
-        .cast("int")
-        .alias("kind_code"),
-        level_pairs(F.col("bids")).alias("bids_flat"),
-        level_pairs(F.col("asks")).alias("asks_flat"),
-        change_pairs.alias("changes_flat"),
+        f"CASE event_type WHEN 'book' THEN {KIND_BOOK} "
+        f"WHEN 'price_change' THEN {KIND_CHANGE} ELSE {KIND_TRADE} END "
+        "AS kind_code",
+        f"{level_pairs('bids')} AS bids_flat",
+        f"{level_pairs('asks')} AS asks_flat",
+        f"{signed_pairs(changes)} AS changes_flat",
     )
     if split_at_snapshots:
         from pyspark.sql import Window

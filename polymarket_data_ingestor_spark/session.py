@@ -63,6 +63,27 @@ def get_spark(
       below G1's humongous-object size at the 16g default heap, and
       still addresses 16 GB per task; a larger record gets a page of its
       own size.
+    * ``spark.sql.files.openCostInBytes=256k``: file scans split the
+      input into about one share per core, so a big hour log is read by
+      several tasks. Spark's split target is ``min(maxPartitionBytes,
+      max(openCost, (bytes + files * openCost) / cores))``, and the
+      default 4 MB open cost pads every file. Twelve collector hour logs
+      of 21.7 MB on 3 cores then get a (21.7 + 12 × 4) / 3 = 23 MB
+      target, so the 12.2 MB hour holding 58% of the messages never
+      splits: its scan task ran 490-590 ms while the other two took
+      160-260 ms. At 256 KB the target is (21.7 + 12 × 0.25) / 3 =
+      8.2 MB, the big hour splits, and the longest of four scan tasks
+      ran 290-415 ms; a whole replay went from 1.28 to 1.00 s (median of
+      interleaved rounds, 3 cores of a 4-vCPU VM; an open cost of 0 read
+      1.04 s). The open cost is also the smallest split: 256 KB is about
+      what a core parses in the ~10 ms a task costs to start (JSON frames
+      scan at ~19 MB/s a core on that VM), and it keeps a small parquet file
+      whole, where a byte split without the row group's midpoint reads
+      nothing. At 0 such a file's layout changed with the core count,
+      and with it every result that depends on partitions, such as
+      ``DataFrame.sample`` (an IVF codebook fit's recall fell below its
+      test floor). ``maxPartitionBytes`` (128 MB) still caps every task,
+      so inputs above 128 MB per core keep the default splits.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", _DEFAULT_CPUS))
     if master is None:
@@ -83,6 +104,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.buffer.pageSize", "2m")
+        .config("spark.sql.files.openCostInBytes", "256k")
         .config("spark.sql.session.timeZone", "UTC")
         # files.maxPartitionBytes default 128m is right for the 100 TB
         # target; do not shrink it for the local test scale.

@@ -13,8 +13,11 @@ this module materializes the contract as explicit sort-key columns:
   non-splittable codec, so a compressed file is always a single read stream,
   and (b) for splittable plain ``.jsonl``, a file's splits are planned in
   offset order so partition index (the id's high bits) increases with offset.
-  For the streaming sink's ``hour=*/part-*`` layout, the sink's persisted
-  batch-major ``seq`` (falling back to ``unix_micros(timestamp)`` for
+  The multi-split case is the default, not an edge: ``get_spark`` sets a
+  256 KB file open cost, so a plain hour log bigger than about 1/cores of
+  the scanned bytes (the collector's busiest hour, say) is read by several
+  tasks. For the streaming sink's ``hour=*/part-*`` layout, the sink's
+  persisted batch-major ``seq`` (falling back to ``unix_micros(timestamp)`` for
   pre-``seq`` lakes — see :func:`read_frames`). ``line_id`` values are
   sparse; only their order within a ``file_hour`` is meaningful.
 * ``msg_idx`` — position of a feed message inside its frame's content array

@@ -111,9 +111,14 @@ def write_frames_stream(
     row counter comes from a tiny order-preserving ``mapInPandas``
     pass (``monotonically_increasing_id`` is rejected in streaming
     plans; the collector stream is low-volume, so one Arrow hop is
-    noise). The 20-bit row field wraps only past 2^20 rows per
-    partition per batch (order among SAME-batch frames is still
-    correct unless a single partition-batch exceeds 1M rows; equal
+    noise) over the batch coalesced to one partition: a source file
+    bigger than the scan's split size is read by several tasks, and a
+    per-task counter would restart at 0 in each of its splits, giving
+    lines of one file equal ``seq``. Coalescing reads the splits in
+    partition order, which is offset order within a file (the
+    ``line_id`` argument in :mod:`...sources.frames`). The 20-bit row
+    field wraps only past 2^20 rows per batch (order among SAME-batch
+    frames is still correct unless a batch exceeds 1M rows; equal
     ``seq`` can then only arise ACROSS part files, where relative
     order is fixed-for-a-given-lake); the product stays under 2^63
     until year ~2248. Readers prefer ``seq`` and fall back to the
@@ -144,7 +149,7 @@ def write_frames_stream(
         + F.pmod(F.col("__row"), F.lit(1 << 20))
     ).alias("seq")
     return (
-        frames.mapInPandas(_stamp_rows, schema=row_schema)
+        frames.coalesce(1).mapInPandas(_stamp_rows, schema=row_schema)
         .withColumn("hour", hour)
         .withColumn("seq", seq)
         .drop("__row")

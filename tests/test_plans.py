@@ -200,6 +200,89 @@ def test_replay_split_gate_cold_plan(spark, tmp_path):
     assert plan.count("FileScan json") == 1
 
 
+def test_big_hour_log_splits_across_scan_tasks(spark, tmp_path):
+    """A plain hour log holding most of the input bytes is read by
+    several scan tasks, not one: get_spark's small file open cost gives
+    every core about 1/cores of the bytes. The big file is bigger than
+    the small ones plus every file's open cost, so it splits on any
+    core count from 2 up. The split file still replays in log order,
+    equal to the naive oracle."""
+    import sys
+
+    sys.path.insert(0, "tests")
+    from fixture_gen import naive_replay, write_fixture_files
+
+    from pyspark.sql import functions as F
+
+    from polymarket_data_ingestor_spark.operators.replay import (
+        TICK_COLUMNS,
+        replay,
+    )
+    from polymarket_data_ingestor_spark.sources.frames import read_frames
+
+    assert spark.sparkContext.defaultParallelism >= 2
+    files = write_fixture_files(tmp_path, n_hours=3, msgs_per_hour=40,
+                                seed=11)
+    big_src = write_fixture_files(tmp_path / "big", n_hours=1,
+                                  msgs_per_hour=5000, seed=12)[0]
+    big = big_src.rename(tmp_path / "2025-09-30-17.jsonl")
+    files.append(big)
+    sizes = [f.stat().st_size for f in files]
+    assert big.stat().st_size > sum(sizes) / 2, sizes
+    paths = [str(f) for f in files]
+
+    reads = (
+        read_frames(spark, paths)
+        .select(F.spark_partition_id().alias("part"),
+                F.input_file_name().alias("file"))
+        .distinct()
+        .collect()
+    )
+    big_parts = {r.part for r in reads if r.file.endswith(big.name)}
+    assert len(big_parts) >= 2, sorted(reads)
+
+    got = replay(spark, paths, in_log_order=True, ticks_only=False)
+    rows = [tuple(r) for r in got.select(*TICK_COLUMNS).collect()]
+    assert rows == naive_replay(files)
+
+
+def test_replay_plan_build_py4j_budget(spark, tmp_path, monkeypatch):
+    """Building replay()'s plan over sidecar'd logs costs a bounded
+    number of py4j round trips: the packing projection and its filter
+    are SQL text parsed JVM-side in one call each, not Column lambdas
+    that pay a round trip for every node they build. Memory-release
+    commands are not counted: py4j flushes the releases of proxies freed
+    earlier in batches, at points no test controls."""
+    import sys
+
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    sys.path.insert(0, "tests")
+    from fixture_gen import write_fixture_files
+
+    from polymarket_data_ingestor_spark.operators.replay import (
+        replay,
+        write_gate_manifests,
+    )
+
+    paths = [str(p) for p in write_fixture_files(
+        tmp_path, n_hours=3, msgs_per_hour=30, seed=3)]
+    assert write_gate_manifests(spark, paths) == len(paths)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting_send(command, *args, **kwargs):
+        nonlocal calls
+        calls += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+    replay(spark, paths)
+    monkeypatch.undo()
+    assert 0 < calls < 1000, calls
+
+
 def test_approx_distinct_within_rsd_of_exact(spark):
     approx = {
         r.event_type: r.approx_users

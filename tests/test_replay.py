@@ -1031,3 +1031,46 @@ def test_nonfinite_prices_rejected_like_reference_serde(spark, tmp_path):
         ("3000", "BBO", mkt, asset, "ASK", 0.6, 2.0),
         ("3000", "BBO", mkt, asset, "BID", 0.45, 7.0),
     ]
+
+
+def test_zero_price_side_encoding(spark, tmp_path):
+    """A SELL at price "0" lands on ASK and a BUY at "0.0" on BID, for
+    changes and trades alike. The packing encodes the side in the sign
+    bit of the price (SELL as -p), so a SELL at zero must pack as -0.0:
+    0 - p would give +0.0 and flip it to BID."""
+    mkt, asset = _mkt_id(12), _asset_id(12, 0)
+    msgs = [
+        {"event_type": "book", "timestamp": "1000", "market": mkt,
+         "asset_id": asset, "bids": [{"price": "0.4", "size": "5"}],
+         "asks": [{"price": "0.6", "size": "2"}]},
+        {"event_type": "price_change", "timestamp": "2000", "market": mkt,
+         "asset_id": asset,
+         "changes": [{"price": "0", "size": "4", "side": "SELL"}]},
+        {"event_type": "last_trade_price", "timestamp": "3000",
+         "market": mkt, "asset_id": asset, "side": "SELL",
+         "price": "0", "size": "1"},
+        {"event_type": "price_change", "timestamp": "4000", "market": mkt,
+         "asset_id": asset,
+         "changes": [{"price": "0.0", "size": "3", "side": "BUY"},
+                     {"price": "0.4", "size": "0", "side": "BUY"}]},
+        {"event_type": "last_trade_price", "timestamp": "5000",
+         "market": mkt, "asset_id": asset, "side": "BUY",
+         "price": "0.0", "size": "2"},
+    ]
+    p = tmp_path / "2025-10-01-10.jsonl"
+    p.write_text("\n".join(
+        json.dumps({"timestamp": "t", "message_type": "feed_message",
+                    "content": json.dumps([m])}) for m in msgs) + "\n")
+    rows = _spark_rows(replay(spark, [str(p)], in_log_order=True,
+                              ticks_only=False))
+    assert rows == [
+        ("1000", "BBO", mkt, asset, "ASK", 0.6, 2.0),
+        ("1000", "BBO", mkt, asset, "BID", 0.4, 5.0),
+        ("2000", "BBO", mkt, asset, "ASK", 0.0, 4.0),
+        ("2000", "BBO", mkt, asset, "BID", 0.4, 5.0),
+        ("3000", "TRADE", mkt, asset, "ASK", 0.0, 1.0),
+        ("4000", "BBO", mkt, asset, "ASK", 0.0, 4.0),
+        ("4000", "BBO", mkt, asset, "BID", 0.0, 3.0),
+        ("5000", "TRADE", mkt, asset, "BID", 0.0, 2.0),
+    ]
+    assert rows == naive_replay([p])

@@ -2565,6 +2565,47 @@ def test_row_valid_null_collection_elements_rejected():
     assert _row_valid(poisoned_chg) is False
 
 
+def test_write_frames_stream_seq_orders_a_split_source_file(
+    spark, tmp_path
+):
+    """A source file read by several scan tasks in one micro-batch still
+    gets one ``seq`` per line in line order: the sink numbers the batch's
+    rows in one partition, so the counter does not restart at 0 in each
+    split of the file and tie lines of one hour."""
+    from polymarket_data_ingestor_spark.sources.frames import read_frames
+    from polymarket_data_ingestor_spark.streaming.live import (
+        write_frames_stream,
+    )
+
+    src = tmp_path / "flat"
+    write_fixture_files(src, n_hours=1, msgs_per_hour=200, seed=23)
+    flat = sorted(src.glob("*.jsonl"))
+    stream = spark.readStream.schema(
+        "timestamp string, message_type string, content string"
+    ).json(str(src) + "/*.jsonl")
+    lake = tmp_path / "frame_lake"
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 * 1024))
+    try:
+        assert spark.read.text([str(p) for p in flat]) \
+            .rdd.getNumPartitions() >= 3
+        q = write_frames_stream(
+            stream, str(lake), str(tmp_path / "ckpt"), compression="none"
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    back = read_frames(spark, str(lake))
+    n_lines = sum(len(p.read_text().splitlines()) for p in flat)
+    assert back.select("line_id").distinct().count() == n_lines
+    got = replay(back, in_log_order=True, ticks_only=False)
+    assert [tuple(r) for r in got.select(*TICK_COLUMNS).collect()] \
+        == naive_replay(flat)
+
+
 def test_write_frames_stream_roundtrip_preserves_replay_order(
     spark, tmp_path
 ):
