@@ -1,229 +1,21 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Calibration pair for ``perfbench/run.py``.
 
-Prints ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
-
-Includes an end-to-end replay benchmark (raw framed JSONL → stateful book
-reconstruction → tick count), the reference's own headline number
-(README.md:78: ~2 min for 24 h of feed data, single-threaded). The frame log
-is generated deterministically from the events table size so it scales with
-sf.
+``perfbench/run.py`` imports ``_calibrate`` (and through it
+``_min_of_2``) from here and records the pair as run metadata: a slow
+pair marks a noisy window on the host. This file keeps only that pair;
+moving it into ``perfbench/`` waits for a change to the benchmark.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
-from pathlib import Path
-
-_REPO = str(Path(__file__).resolve().parent)
-if _REPO not in sys.path:
-    sys.path.insert(0, _REPO)
-
-from polymarket_data_ingestor_spark.plans.catalog import CATALOG  # noqa: E402
-from polymarket_data_ingestor_spark.session import get_spark  # noqa: E402
-
-#: Arrow-heavy (pandas-UDF) queries run FIRST, right after the replay
-#: benchmarks: reused Python workers accumulate heap over a long session
-#: and degrade Arrow stages up to ~3x, so timing them late would charge
-#: them a local session artifact that doesn't exist on a fresh cluster.
-BENCH_QUERIES = [
-    "embedding_dup_pairs_lsh",
-    "minhash_lsh_pairs",
-    "benchmark_decontaminate",
-    "mixture_sample",
-    "cosine_topk",
-    "wordpiece_counts",
-    "pack_sequences_wordpiece",
-    "simhash_docs",
-    "simhash64_docs",
-    "hamming_dup_pairs",
-    # grouped-map (applyInPandas) kernels belong in this Arrow-first
-    # block too — appended at the tail in r8/r9 they were charged the
-    # aged-worker penalty the block exists to avoid
-    "ewma_smoothed",
-    "holt_smoothed",
-    "cusum_drift",
-    "quantile_rollup",
-    "heavy_hitters",
-    "sample_rollup",
-    "topk_rollup",
-    "minhash_rollup",
-    "minhash_source_similarity",
-    # the banded (above-broadcast-budget) twin — benched next to the
-    # exact path so the banding overhead at broadcastable scale stays
-    # measured (r13; at scale banding is the only non-cartesian path)
-    "minhash_pairs_banded",
-    # the PCA fit's numpy partial kernel is mapInPandas — Arrow block
-    # for the same reason (r13)
-    "pca_project_embeddings",
-    "filter_project",
-    "minute_last_bars",
-    "hourly_volume",
-    "summary_stats",
-    "region_revenue",
-    "outcome_lookup",
-    "topk_per_group",
-    "sessionize",
-    "running_total",
-    "token_explode",
-    "revenue_rollup",
-    "linreg_rollup",
-    "kmv_overlap",
-    "kmv_overlap_banded",
-    "corr_rollup",
-    "doc_quality",
-    "asof_join",
-    "asof_join_forward",
-    "asof_join_nearest",
-    "range_join_count",
-    "interval_overlap_join",
-    "multires_rollup",
-    "pack_sequences",
-    "stratified_sample",
-    "line_dedup_clean",
-    "cube_lineitem",
-    "doc_bigram_lm",
-    "substring_dup_pairs",
-    "substring_dedup_materialize",
-    "substring_trim_materialize",
-    "embedding_cluster_dedup",
-    "random_projection_embeddings",
-    "dsir_weights",
-    "dsir_resample",
-    "nb_classify_lang",
-    "cluster_balanced_sample",
-    "funnel_user_paths_multipass",
-    "chunk_documents",
-    "ohlc_candles",
-    "trailing_window_sum",
-    "twap_hourly",
-    "gap_fill_hourly",
-    "delta_volatility",
-    "hash_split_docs",
-    "hashed_embedding_docs",
-    "skew_profile",
-    "arrival_latency",
-    "snapshot_diff",
-    "dedup_histogram",
-    "cross_key_correlation",
-    "containment_pairs",
-    "bpe_pair_counts",
-    "length_bucket_batches",
-    "quantize_embeddings",
-    "rolling_zscore_flags",
-    "dq_profile_orders",
-    "dq_violations_orders",
-    "dq_split_clean",
-    "vwap_monthly",
-    "inverted_index",
-    "bm25_search",
-    "spend_quartiles",
-    "event_transitions",
-    "price_histogram",
-    "temperature_sample_docs",
-    "source_token_drift",
-    "term_pmi_pairs",
-    "doc_shards",
-    "price_outliers",
-    "morton_codes",
-    "doc_canonical",
-    "user_state_scd2",
-    "winsorized_prices",
-    "next_event_examples",
-    "robust_price_stats",
-    "grouping_sets_revenue",
-    "incremental_rollup",
-    # GK-sketch twins of the exact-percentile heavies: the 100 TB path
-    # (constant aggregation memory), benched alongside the exact forms
-    # so the exact-vs-sketch cost gap stays measured
-    "winsorized_prices_approx",
-    "price_outliers_approx",
-    "robust_price_stats_approx",
-    # pq_topk_recall intentionally NOT benched: the 8-subspace MLlib
-    # KMeans codebook fit (a training job, run once per corpus version
-    # in production) would dominate the search being measured;
-    # cosine_topk times the scan-shaped exact path instead.
-    # part_supplier_pagerank intentionally NOT benched: 8 iterative
-    # join+persist rounds (minutes at sf0.1) would dominate the sweep,
-    # same reasoning as bpe_train_merges.
-    # bpe_train_merges intentionally NOT benched: 8 iterative rounds
-    # (~10 s at sf0.1) would dominate the sweep; bpe_pair_counts times
-    # the per-round scale unit instead.
-]
-
-
-def _sf_of(sf_dir: str) -> float:
-    name = Path(sf_dir).name
-    try:
-        return float(name.replace("sf", ""))
-    except ValueError:
-        return -1.0
-
-
-def _ensure_replay_fixture(sf_dir: str, cache_root: Path) -> list[str]:
-    """Deterministic framed feed logs sized to the scale factor.
-
-    ~12 hourly files, total messages ≈ 10x the events row count at the same
-    sf (sf0.1 ⇒ ~1.2M messages), across 200 assets — enough to exercise the
-    parse → shuffle → kernel path with real skew.
-    """
-    sys.path.insert(0, str(Path(_REPO) / "tests"))
-    from fixture_gen import write_fixture_files  # noqa: E402
-
-    sf = _sf_of(sf_dir)
-    n_hours = 12
-    msgs_per_hour = max(200, int(1_000_000 * sf))
-    out = cache_root / f"replay_bench_sf{sf}"
-    marker = out / "_DONE"
-    if not marker.exists():
-        import fixture_gen
-
-        old_m, old_a = fixture_gen.N_MARKETS, fixture_gen.ASSETS_PER_MARKET
-        fixture_gen.N_MARKETS, fixture_gen.ASSETS_PER_MARKET = 100, 2
-        try:
-            write_fixture_files(out, n_hours=n_hours,
-                                msgs_per_hour=msgs_per_hour, seed=42)
-        finally:
-            fixture_gen.N_MARKETS, fixture_gen.ASSETS_PER_MARKET = old_m, old_a
-        marker.write_text("ok")
-    return sorted(str(p) for p in out.glob("*.jsonl"))
-
-
-def _ensure_skewed_fixture(sf_dir: str, cache_root: Path) -> list[str]:
-    """Hot-asset variant of the replay fixture: assets[0] carries ~50% of
-    all messages (the remaining half spreads over the other 199 assets).
-    Same size as the main fixture so the two replay numbers compare."""
-    sys.path.insert(0, str(Path(_REPO) / "tests"))
-    import fixture_gen
-    from fixture_gen import write_fixture_files  # noqa: E402
-
-    sf = _sf_of(sf_dir)
-    out = cache_root / f"replay_bench_skew_sf{sf}"
-    marker = out / "_DONE"
-    if not marker.exists():
-        old = (fixture_gen.N_MARKETS, fixture_gen.ASSETS_PER_MARKET,
-               fixture_gen.HOT_ASSET_WEIGHT)
-        fixture_gen.N_MARKETS, fixture_gen.ASSETS_PER_MARKET = 100, 2
-        fixture_gen.HOT_ASSET_WEIGHT = 0.5
-        try:
-            write_fixture_files(out, n_hours=12,
-                                msgs_per_hour=max(200, int(1_000_000 * sf)),
-                                seed=43)
-        finally:
-            (fixture_gen.N_MARKETS, fixture_gen.ASSETS_PER_MARKET,
-             fixture_gen.HOT_ASSET_WEIGHT) = old
-        marker.write_text("ok")
-    return sorted(str(p) for p in out.glob("*.jsonl"))
 
 
 def _calibrate(spark) -> dict[str, float]:
     """Fixed fixture-independent calibration pair, run at session start
     and end.
 
-    Cross-round wall-clock deltas on this VM are dominated by ambient
+    Run-to-run wall-clock deltas on a shared host are dominated by ambient
     drift (page cache, CPU contention, Python-worker aging), which moves
     JVM stages and Arrow stages by DIFFERENT factors. Timing the same
     two synthetic workloads every round lets a reader normalize each
@@ -276,245 +68,3 @@ def _min_of_2(fn) -> float:
     fn()
     b = time.perf_counter() - t0
     return round(min(a, b), 3)
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="pdi-spark-bench")
-    timings: dict[str, float] = {}
-
-    # Warm the JVM/session on a trivial action so q1 isn't charged for init.
-    spark.range(1000).count()
-    calibration: dict[str, dict[str, float]] = {}
-    calibration["replay_session_start"] = _calibrate(spark)
-
-    # End-to-end replay FIRST, in the fresh session: reused Python workers
-    # accumulate heap after many pandas-heavy queries and can slow later
-    # Arrow stages 2-3x, so the stateful benchmark runs before the query
-    # sweep. One untimed warmup faults the fixture into the page cache and
-    # spins up the worker pool before the min-of-2 timing.
-    from pyspark.sql import functions as F
-
-    from polymarket_data_ingestor_spark.operators.replay import (
-        replay,
-        write_tick_lake,
-    )
-
-    paths = _ensure_replay_fixture(sf_dir, Path("/tmp/pdi_bench"))
-    n_ticks = replay(spark, paths).count()
-    timings["replay_e2e"] = _min_of_2(lambda: replay(spark, paths).count())
-    # The hot-asset skew mitigation (group per (asset, snapshot-segment)):
-    # identical output; timed here so the window's overhead vs the skew
-    # win stays visible round-over-round.
-    timings["replay_e2e_segmented"] = _min_of_2(
-        lambda: replay(spark, paths, split_at_snapshots=True).count()
-    )
-    # Measured skew story: one asset carries ~50% of all messages. The
-    # default grouping serializes that asset on one task; the snapshot-
-    # split path factors it into segments — the bench pins the win as a
-    # number, and the order-insensitive row-hash pins output identity
-    # (the full row-identity property lives in tests/test_replay.py).
-    skew_paths = _ensure_skewed_fixture(sf_dir, Path("/tmp/pdi_bench"))
-
-    def _rowhash(df) -> int:
-        return df.selectExpr(
-            "sum(cast(hash(timestamp, kind, market, asset, side, "
-            "price, size) as bigint)) as h"
-        ).first().h
-
-    h_default = _rowhash(replay(spark, skew_paths))
-    timings["replay_e2e_skewed"] = _min_of_2(
-        lambda: replay(spark, skew_paths).count()
-    )
-    h_split = _rowhash(replay(spark, skew_paths, split_at_snapshots=True))
-    timings["replay_e2e_skewed_split"] = _min_of_2(
-        lambda: replay(spark, skew_paths,
-                       split_at_snapshots=True).count()
-    )
-    assert h_default == h_split, "skew split changed replay output"
-    # S7 at scale: replay → hour-partitioned parquet lake → pruned
-    # read-back of one hour (partition pruning is the reference's
-    # filename-range pruning, Catalyst-native).
-    lake = str(Path("/tmp/pdi_bench") / "tick_lake")
-    one_hour = Path(paths[len(paths) // 2]).stem
-
-    def lake_roundtrip() -> None:
-        write_tick_lake(replay(spark, paths, ticks_only=False), lake)
-        spark.read.parquet(lake).filter(
-            F.col("file_hour") == one_hour
-        ).count()
-
-    timings["tick_lake_roundtrip"] = _min_of_2(lake_roundtrip)
-
-    # Fresh session (and therefore a fresh Python worker pool) for the
-    # catalog sweep: reused pandas-UDF workers age measurably after the
-    # replay benchmarks above (~3x on Arrow-heavy stages locally), which
-    # is a single-JVM artifact a per-query cluster job never sees. The
-    # restart is untimed; each query is still min-of-2 within its
-    # session.
-    spark.stop()
-    spark = get_spark(app_name="pdi-spark-bench-sweep")
-    spark.range(1000).count()
-    calibration["sweep_session_start"] = _calibrate(spark)
-
-    for name in BENCH_QUERIES:
-        q = CATALOG[name]
-        # noop-format write: full execution of EVERY output column with
-        # no sink cost. count() (used through round 6) lets Catalyst
-        # prune output columns nothing downstream consumes — for entries
-        # whose expensive work lives in a projected column (the
-        # wordpiece tokenizer's ArrowEvalPython, the simhash kernels) it
-        # timed a bare scan. Round-7 baseline reset; deltas vs r6 are
-        # expected to be positive for the formerly-pruned entries.
-        timings[name] = _min_of_2(
-            lambda: q.spark(spark, sf_dir)
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-
-    # PQ serving path with a PRE-FIT codebook: the KMeans fit is a
-    # training job (once per corpus version — rightly excluded, like
-    # bpe_train_merges), but encode + ADC search is the recurring
-    # per-corpus-version serving cost and deserves a number next to
-    # cosine_topk. Fit untimed, then time the zero-shuffle Arrow encode
-    # and the codes-only ADC top-k separately.
-    from polymarket_data_ingestor_spark.operators.similarity import (
-        fit_pq_codebooks,
-        pq_encode,
-        pq_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pq_queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cbs = fit_pq_codebooks(emb, n_subspaces=8, n_centroids=16,
-                           fit_fraction=0.25)  # untimed: training job
-    timings["pq_encode"] = _min_of_2(
-        lambda: pq_encode(emb, cbs)
-        .write.format("noop").mode("overwrite").save()
-    )
-    timings["pq_topk_served"] = _min_of_2(
-        lambda: pq_topk(emb, pq_queries, k=5, codebooks=cbs, refine=8)
-        .write.format("noop").mode("overwrite").save()
-    )
-
-    # Bucketed-layout join: quantify the pay-the-shuffle-once claim
-    # (sinks.write_bucketed_table). Build untimed — a once-per-corpus
-    # layout job, like the PQ fit above. Timed: the same asset-keyed
-    # join over the plain lake (SMJ, both sides exchange) vs the
-    # bucketed tables (SMJ, zero Exchange). Broadcast is disabled for
-    # the pair: at 100 TB the per-asset dim outgrows the broadcast
-    # range, so SMJ is the honest comparison.
-    from polymarket_data_ingestor_spark.sinks import write_bucketed_table
-
-    ticks_flat = spark.read.parquet(lake)
-    asset_dim = ticks_flat.groupBy("asset").agg(
-        F.avg("price").alias("avg_price"), F.count("*").alias("n")
-    )
-    broot = Path("/tmp/pdi_bench/bucketed")
-    write_bucketed_table(ticks_flat, "bench_ticks_b", ("asset",), 16,
-                         path=str(broot / "ticks"))
-    write_bucketed_table(asset_dim, "bench_assets_b", ("asset",), 16,
-                         path=str(broot / "assets"))
-    dim_flat_path = str(broot / "assets_flat")
-    asset_dim.write.mode("overwrite").parquet(dim_flat_path)
-    dim_flat = spark.read.parquet(dim_flat_path)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        timings["asset_join_shuffled"] = _min_of_2(
-            lambda: ticks_flat.join(dim_flat, "asset")
-            .write.format("noop").mode("overwrite").save()
-        )
-        timings["asset_join_bucketed"] = _min_of_2(
-            lambda: spark.table("bench_ticks_b")
-            .join(spark.table("bench_assets_b"), "asset")
-            .write.format("noop").mode("overwrite").save()
-        )
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bench_ticks_b")
-        spark.sql("DROP TABLE IF EXISTS bench_assets_b")
-
-    calibration["sweep_session_end"] = _calibrate(spark)
-
-    total = round(sum(timings.values()), 3)
-    # Output contract (round 8): the driver captures only the LAST ~2000
-    # chars of stdout and parses the final JSON line. The full per-query
-    # map (80+ entries, ~5 KB) outgrew that in round 7 and the official
-    # record came back parsed:null — so the final stdout line is now a
-    # COMPACT summary guaranteed to fit (headline replay entries + the
-    # two skew ratios + calibration + total), and the complete map goes
-    # to BENCH_LOCAL.json at the repo root, committed with the round.
-    full = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": _sf_of(sf_dir),
-        "replay_ticks": n_ticks,
-        "calibration": calibration,
-    }
-    Path(_REPO, "BENCH_LOCAL.json").write_text(
-        json.dumps(full, indent=1) + "\n"
-    )
-    # ADDITIVE (r15): when the core count is pinned via the driver
-    # contract's env var, ALSO write a per-cpu-count map. A CPUS=8
-    # contract smoke overwriting the 32-core end-of-round map cost two
-    # rounds their committed artifact (the r14 judge flagged it) — the
-    # suffixed copy makes maps from different rungs coexist; the
-    # BENCH_LOCAL.json contract itself is unchanged.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus:
-        Path(_REPO, f"BENCH_LOCAL_c{cpus}.json").write_text(
-            json.dumps(full, indent=1) + "\n"
-        )
-    print(build_compact_line(timings, total, _sf_of(sf_dir), n_ticks,
-                             calibration))
-
-
-#: Driver stdout-tail budget is ~2000 chars; the compact line must stay
-#: comfortably inside it even as fields accrete (r7 lost its official
-#: record to exactly this). Pinned by tests/test_bench_contract.py.
-COMPACT_LINE_BUDGET = 1500
-
-HEADLINE_KEYS = [
-    "replay_e2e", "replay_e2e_segmented",
-    "replay_e2e_skewed", "replay_e2e_skewed_split",
-    "tick_lake_roundtrip",
-]
-
-
-def build_compact_line(timings, total, sf, n_ticks, calibration) -> str:
-    """The single stdout JSON line the driver parses — compact by
-    contract (see COMPACT_LINE_BUDGET); the full per-query map lives in
-    BENCH_LOCAL.json. Oversize falls back to dropping calibration (the
-    bulkiest field) rather than ever exceeding the budget."""
-    compact = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": {k: timings[k] for k in HEADLINE_KEYS if k in timings},
-        "sf": sf,
-        "replay_ticks": n_ticks,
-        "n_queries": len(timings),
-        "segmented_over_default": round(
-            timings["replay_e2e_segmented"] / timings["replay_e2e"], 3
-        ),
-        "skew_split_over_default": round(
-            timings["replay_e2e_skewed_split"]
-            / timings["replay_e2e_skewed"], 3
-        ),
-        "calibration": calibration,
-        "full_map": "BENCH_LOCAL.json",
-    }
-    line = json.dumps(compact)
-    if len(line) > COMPACT_LINE_BUDGET:  # drop the bulkiest field
-        compact.pop("calibration")
-        line = json.dumps(compact)
-    return line
-
-
-if __name__ == "__main__":
-    main()

@@ -23,7 +23,7 @@ N_MARKETS = 4
 ASSETS_PER_MARKET = 2
 
 #: Probability mass concentrated on assets[0] when generating messages —
-#: 0.0 keeps the uniform spread; bench.py sets ~0.5 to build the
+#: 0.0 keeps the uniform spread; perfbench sets ~0.5 to build the
 #: hot-asset skew fixture (one asset carrying half of all messages).
 HOT_ASSET_WEIGHT = 0.0
 
