@@ -1,7 +1,8 @@
 from polymarket_data_ingestor_spark.functions.scalars import (
+    SQL_HASH32,
     hash32,
     side_sink_label,
     side_wire_label,
 )
 
-__all__ = ["hash32", "side_sink_label", "side_wire_label"]
+__all__ = ["hash32", "SQL_HASH32", "side_sink_label", "side_wire_label"]

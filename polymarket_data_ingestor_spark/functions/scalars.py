@@ -1,10 +1,10 @@
-"""Shared scalar column helpers.
+"""Shared scalar column helpers (SURVEY §2.8).
 
 ``hash32`` is the engine's portable content hash: the first 8 hex chars of
 md5 as a non-negative int64. It is chosen over ``xxhash64``/``hash`` because
-md5 is identically defined in Spark, DuckDB and Python, so the sketches built
-on it (the bottom-k sample and MinHash rollups in ``operators.analytics``)
-can be checked bit-for-bit across engines.
+md5 is identically defined in Spark, DuckDB, and Python — every sketch
+operator built on it (MinHash, SimHash, fingerprints) is therefore
+oracle-checkable bit-for-bit across engines.
 """
 
 from __future__ import annotations
@@ -14,13 +14,24 @@ from pyspark.sql import functions as F
 
 
 def hash32(col: Column | str, seed: int = 0) -> Column:
-    """Deterministic 32-bit content hash as int64 (DuckDB:
-    ``('0x' || substr(md5(x), 1, 8))::BIGINT``). ``seed`` derives
-    independent hash functions by prefixing the input."""
+    """Deterministic 32-bit content hash as int64 (same in DuckDB: see
+    ``SQL_HASH32``). ``seed`` derives independent hash functions by
+    prefixing the input."""
     c = F.col(col) if isinstance(col, str) else col
     if seed:
         c = F.concat(F.lit(f"s{seed}:"), c)
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast("long")
+
+
+def sql_hash32(expr: str, seed: int = 0) -> str:
+    """DuckDB-dialect equivalent of :func:`hash32` over a SQL expression."""
+    if seed:
+        expr = f"('s{seed}:' || {expr})"
+    return f"(('0x' || substr(md5(CAST({expr} AS VARCHAR)), 1, 8))::BIGINT)"
+
+
+#: doc-string example of the SQL form, for catalog authors.
+SQL_HASH32 = sql_hash32("x")
 
 
 def side_sink_label(wire: Column | str) -> Column:

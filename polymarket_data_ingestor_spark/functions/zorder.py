@@ -8,7 +8,7 @@ gives every file a narrow range in both columns at once, so selective
 predicates on either column skip most files — the same layout trick
 behind Delta/Iceberg Z-ordering and the classic UB-tree, expressed here
 as pure Catalyst bitwise expressions (JVM-side, whole-stage codegen,
-reproducible in any engine).
+reproducible in any engine — see the DuckDB oracle twin).
 
 Inputs clamp to 31 bits each (non-negative), so the interleaved code
 fills bit positions 0..61 and stays a positive int64 — the sign bit can
@@ -52,3 +52,16 @@ def morton_code(a: Column | str, b: Column | str) -> Column:
     return _spread_bits(ca).bitwiseOR(
         F.shiftleft(_spread_bits(cb), 1)
     )
+
+
+def sql_morton_code(a: str, b: str) -> str:
+    """DuckDB-dialect twin of :func:`morton_code` over two SQL
+    expressions — the same shift-and-mask pipeline, bit-exact."""
+
+    def spread(expr: str) -> str:
+        x = f"(CAST({expr} AS BIGINT) & 2147483647)"
+        for shift, mask in _SPREAD_STEPS:
+            x = f"(({x} | ({x} << {shift})) & {mask})"
+        return x
+
+    return f"({spread(a)} | ({spread(b)} << 1))"

@@ -47,8 +47,11 @@ def get_spark(
       sf0.1 replay fixture) shows the Python-worker hop cost is dominated
       by per-batch overhead — 128k-row batches run the replay kernel ~1.8×
       faster than the 10k the reference buffers at
-      (``cli/src/tick_generator.rs:69``). Gains past 128k are <15% and
-      double the in-flight batch footprint, so this is the knee.
+      (``cli/src/tick_generator.rs:69``), and every Arrow-stage catalog
+      query improves too. 128k rows of the widest bench schema
+      (embeddings: 64 float32 + id ≈ 0.5 KB/row) is ~70 MB per in-flight
+      batch per task — inside a 4 GiB-executor budget at 100 TB; gains
+      past 128k are <15% and double that footprint, so this is the knee.
     * ``parquet.compression=snappy`` to match the reference tick sink
       (``cli/src/tick_generator.rs:60-63``).
     * ``spark.buffer.pageSize=2m``: a sort or hash aggregate allocates

@@ -133,11 +133,11 @@ def delete_from_lake(
     write. That is safe here even under executor loss: the checkpoint
     blocks exist before any file is touched, and dynamic overwrite
     deletes directories only at COMMIT — a failure anywhere before
-    that leaves the lake intact and the job simply re-runs. (Checkpoint
-    blocks live on executors, so losing one after the checkpoint means
-    a recompute; the alternative is a staging-directory double write,
-    and for a maintenance job with job-level retry the checkpoint is
-    the cheaper correct choice.)
+    that leaves the lake intact and the job simply re-runs. (The
+    general lineage caveat on executor-held checkpoint blocks —
+    see ``dedup.dup_components`` — trades against a staging-directory
+    double write; for a maintenance job with job-level retry the
+    checkpoint is the cheaper correct choice.)
 
     Fully-emptied partitions (every row matched a target id) need
     explicit handling: dynamic partition overwrite rewrites only
@@ -317,7 +317,8 @@ def upsert_lake_partitions(
     migrating keys across partitions must ``delete_from_lake`` first.
     Keys are expected unique per batch; if a key repeats in ``updates``
     both rows land (this is a row replacement, not a last-writer-wins
-    aggregation — dedup the batch upstream).
+    aggregation — dedup the batch upstream, e.g. ``snapshot_diff``'s
+    typed-CDC output is already unique per key).
 
     First load (no lake at ``path`` yet) degrades to a plain
     partitioned write of the batch — detected by an explicit Hadoop

@@ -564,21 +564,24 @@ def live_sessions(
     user_col: str = "user_id",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Streaming gap-based sessionization on Spark's native
-    ``session_window`` (merging session state, watermark-bounded; no
-    custom stateful UDF).
+    """Streaming gap-based sessionization — the live twin of the batch
+    ``sessionize`` catalog entry, on Spark's native ``session_window``
+    (merging session state, watermark-bounded; no custom stateful UDF).
 
     Emits one row per finalized session: ``(user, session_start,
     session_last, n_events)`` where ``session_start``/``session_last``
     are the first/last event times (NOT the window end — Spark pads the
     window end by ``gap`` past the last event; we report observed
-    times, the min/max of each session).
+    times so the columns line up with the batch form's min/max).
 
-    Boundary convention: ``session_window`` merges an event only while
-    it lands strictly inside the padded window, so an event exactly
-    ``gap`` after its predecessor starts a new session here, where a
-    batch lag-compare ``>`` would continue it. Continuous event times
-    never hit the boundary.
+    Boundary convention differs from batch by one instant: the batch
+    form starts a new session when the inter-event gap is STRICTLY
+    greater than ``gap`` (lag-compare ``>``), while ``session_window``
+    merges an event only while it lands strictly inside the padded
+    window — an event exactly ``gap`` after its predecessor starts a
+    new session here but continues the session in batch. Continuous
+    event times never hit the boundary; document-aligned consumers
+    should pick one form, not mix them.
 
     Scale shape: session aggregation state is per (user, open-session)
     and bounded by the watermark; the shuffle is hash(user) like any
@@ -655,7 +658,7 @@ def live_ewma(
     order_col: str = "event_id",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming EWMA — the recursion
+    """Streaming twin of ``analytics.ewma`` — the recursion
     ``e_t = α·v_t + (1−α)·e_{t−1}`` is the textbook stateful streaming
     operator: per-key state is ONE double (the running ``e_{t−1}``),
     carried across micro-batches (and across restarts, via the
@@ -665,18 +668,17 @@ def live_ewma(
 
     Ordering contract (live mode, same as ``live_ticks``): rows are
     sorted by (ts, order) WITHIN each micro-batch, and batches apply in
-    arrival order — equal to each key's full (ts, order) total order
-    whenever the stream delivers in order (an ``availableNow`` drain of
-    hourly logs, or the collector's monotone-timestamp feed). A late
-    row landing in a later batch smooths forward from the state at its
-    arrival, not its timestamp — retro-insertion needs a batch pass
-    over the durable table.
+    arrival order — equal to the batch operator's full (ts, order)
+    total order whenever the stream delivers in order (an
+    ``availableNow`` drain of hourly logs, or the collector's
+    monotone-timestamp feed). A late row landing in a later batch
+    smooths forward from the state at its arrival, not its timestamp —
+    retro-insertion needs the batch operator over the durable table.
 
-    The per-event float ops come from ``analytics.ewma_series``
+    The per-event float ops are literally the batch kernel's
     (``α·v`` then ``(1−α)·e`` then one add), so an in-order drain is
-    bit-identical to one pass of that kernel over each key's whole
-    series (pinned in pytest, including a cross-restart continuation
-    through the checkpoint).
+    bit-identical to ``analytics.ewma`` (pinned in pytest, including a
+    cross-restart continuation through the checkpoint).
 
     State growth: one row per DISTINCT key ever seen. For a bounded key
     universe (assets, instruments) that is genuinely flat; for an
@@ -748,7 +750,7 @@ def live_holt(
     order_col: str = "event_id",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming Holt linear smoothing — per-key state is
+    """Streaming twin of ``analytics.holt_linear`` — per-key state is
     the ``(level, trend)`` double pair, carried across micro-batches
     and restarts by ``applyInPandasWithState``; every arriving event
     emits its level/trend/one-step forecast immediately.
@@ -756,7 +758,7 @@ def live_holt(
     Same ordering contract, TTL semantics, and bit-parity policy as
     :func:`live_ewma` (the float steps come from the SHARED
     ``analytics.holt_series`` kernel, so an in-order drain is
-    bit-identical to one pass of it per key by construction — pinned in
+    bit-identical to the batch operator by construction — pinned in
     pytest including a cross-restart continuation). An evicted or new
     key re-seeds ``level = v, trend = 0``.
     """
@@ -827,7 +829,8 @@ def live_interval_join(
     Emits ALL in-band matches, not the single latest one: a streaming
     "as-of" pick needs custom ordered state (``transformWithState``) —
     the standard pipeline does this interval join live and the exact
-    as-of pick in batch. ``right_ts`` must differ from ``left_ts``
+    :func:`~polymarket_data_ingestor_spark.operators.asof.asof_join`
+    in the batch layer. ``right_ts`` must differ from ``left_ts``
     (both survive into the output).
 
     Scale shape: both streams shuffle on the key; per-key state holds
@@ -890,7 +893,9 @@ def live_active_users(
     counts, then a per-window rollup (multiple stateful operators in
     append mode, a Spark 3.4+/4.x capability) — exact counts at the
     cost of state per distinct user in each open window; fine for
-    bounded populations.
+    bounded populations, and the batch ``count_distinct_users`` entry
+    is the exact reference the sketch mode is accuracy-pinned against
+    in EXACTNESS tier 3.
 
     Scale shape: hash(window) shuffle of map-side partially-merged
     sketches (approx) or hash(window, user) then hash(window) (exact);
@@ -1375,7 +1380,9 @@ def live_rollup(
     with a ``_SUCCESS`` marker, so a torn write is invisible.
 
     Cost per trigger ∝ batch + state table (one row per key — tiny
-    relative to the corpus), never the history. Versions older than
+    relative to the corpus), never the history: the streaming form of
+    the incremental-maintenance claim pinned by the
+    ``incremental_rollup`` catalog oracle. Versions older than
     ``retain_versions`` below the current one are garbage-collected
     each commit (single-writer contract — same as any checkpointed
     stream). Why not a native streaming groupBy: ``complete`` mode
@@ -1560,12 +1567,13 @@ def live_minhash_rollup(
 ):
     """Continuously maintained per-key MinHash signatures — the
     set-identity monoid through the MVCC materializer (query with
-    ``read_rollup_state`` → ``finalize_minhash_rollup``). Elementwise
-    min is a TRUE monoid (idempotent on re-folded items), so the
-    maintained signature
+    ``read_rollup_state`` → ``finalize_minhash_rollup`` /
+    ``minhash_similarity_pairs``). Elementwise min is a TRUE monoid
+    (idempotent on re-folded items), so the maintained signature
     equals a full recompute bit-for-bit at every commit — live
     "which shards share content" without ever storing item sets.
-    Pre-shingle the stream if items should be n-grams."""
+    Pre-shingle the stream if items should be n-grams (the batch
+    entry uses ``word_ngrams``)."""
     from polymarket_data_ingestor_spark.operators.analytics import (
         merge_minhash_rollup,
         minhash_rollup_state,
@@ -1923,7 +1931,8 @@ def live_dedup_stream(
     """Exactly-once streaming incremental dedup: each micro-batch keeps
     only documents never seen before — within the batch OR in any prior
     batch — completing the matrix next to the in-stream watermark dedup
-    (:func:`live_feed_dedup` family).
+    (:func:`live_feed_dedup` family) and the batch cross-corpus
+    :func:`~polymarket_data_ingestor_spark.operators.dedup.dedup_against`.
 
     Per micro-batch: (1) in-batch exact dedup (keep the min id per
     digest — deterministic, not first-seen); (2) anti-join the batch's
@@ -1964,7 +1973,7 @@ def live_dedup_stream(
     compact the digest lake periodically
     (``compact_lake_partitions`` works on it as-is). Near-dup banding
     composes the same way (persist band keys per batch next to the
-    digests) and is not done here.
+    digests) and is left to the batch op by design.
     """
     if bloom_bits is not None and (bloom_bits < 64 or bloom_bits % 8):
         raise ValueError(
@@ -1986,9 +1995,9 @@ def live_dedup_stream(
         )
         # dropDuplicates closes the identical-row gap: at-least-once
         # redelivery can put two byte-identical rows in ONE micro-batch
-        # and a semi-join alone would land both in out_path/b=N (no
-        # extra exchange — the semi-join already partitions on these
-        # keys).
+        # and a semi-join alone would land both in out_path/b=N (same
+        # fix as the batch drop_exact_dupes; no extra exchange — the
+        # semi-join already partitions on these keys).
         dedup_in = dg.join(
             keep, ["__digest", id_col], "left_semi"
         ).dropDuplicates(["__digest", id_col])
@@ -2217,7 +2226,7 @@ def live_cusum(
     order_col: str = "event_id",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming two-sided CUSUM — per-key state is the
+    """Streaming twin of ``analytics.cusum`` — per-key state is the
     ``(s_hi, s_lo)`` double pair carried across micro-batches and
     restarts by ``applyInPandasWithState``; every arriving event emits
     its drift statistics (and alarm, with ``threshold``) immediately —
@@ -2227,9 +2236,9 @@ def live_cusum(
     Same ordering contract, TTL semantics, and bit-parity policy as
     those twins (the float steps come from the SHARED
     ``analytics.cusum_series`` kernel, so an in-order drain is
-    bit-identical to one pass of it per key by construction). An
-    evicted or new key re-seeds at ``(0, 0)`` — which is also the
-    kernel's start, so TTL eviction RESTARTS the test rather than
+    bit-identical to the batch operator by construction). An evicted
+    or new key re-seeds at ``(0, 0)`` — which is also the batch
+    operator's start, so TTL eviction RESTARTS the test rather than
     corrupting it (the documented CUSUM restart-after-decision
     semantics).
     """
@@ -2292,7 +2301,8 @@ def bootstrap_dedup_state(
 ) -> int:
     """Seed :func:`live_dedup_stream`'s digest lake from an EXISTING
     corpus, so the stream dedups against history from its very first
-    micro-batch.
+    micro-batch (the streaming bootstrap of
+    ``operators.dedup.dedup_against``'s persist-the-artifacts advice).
 
     The digests are written as partition ``b=-1`` — strictly below
     every stream batch id, so the replay-safety filter

@@ -6,7 +6,8 @@ counts (``collector/src/client/mod.rs:144-191``). The Spark-native
 equivalents:
 
 * batch / micro-batch: ``df.observe(Observation | name, exprs...)`` —
-  metrics ride the job, no second pass;
+  metrics ride the job, no second pass (the ``throughput_15s`` catalog
+  query is the historical/windowed version);
 * streaming: a ``StreamingQueryListener`` reading each progress event's
   ``numInputRows`` / ``batchDuration`` — the direct analogue of the
   reference's periodic sampler.

@@ -1,8 +1,149 @@
-"""Property-based test for the CUSUM kernel behind ``live_cusum``."""
+"""Property-based tests for the round-7 analytics operators.
+
+Hypothesis drives gap_fill and delta_volatility against naive Python
+models over small randomized event sets. Few examples (each runs real
+Spark jobs) but adversarial shapes: same-bucket ties where event_id
+order disagrees with insertion order, multi-hour gaps, single-event
+keys, and cross-key timestamp collisions.
+"""
 
 from __future__ import annotations
 
+import datetime as dt
+import statistics
+
 from hypothesis import given, settings, strategies as st
+
+from polymarket_data_ingestor_spark.operators.analytics import (
+    delta_volatility,
+    gap_fill,
+)
+
+BASE = dt.datetime(2024, 4, 1)
+
+# (key, minutes-offset, value) triples; minutes up to 5 hours so real
+# gaps appear; values from a tiny grid so same-bucket ties happen
+event_sets = st.lists(
+    st.tuples(
+        st.sampled_from(["A", "B"]),
+        st.integers(min_value=0, max_value=300),
+        st.sampled_from([1.0, 2.5, 7.25]),
+    ),
+    min_size=1,
+    max_size=12,
+)
+
+
+def _rows(events):
+    return [
+        (i + 1, k, BASE + dt.timedelta(minutes=m), v)
+        for i, (k, m, v) in enumerate(events)
+    ]
+
+
+def _naive_gap_fill(rows):
+    """LOCF over hourly buckets, last-in-bucket by (ts, event_id)."""
+    per_key: dict[str, dict[int, tuple]] = {}
+    for eid, k, ts, v in rows:
+        hour = ts.replace(minute=0, second=0, microsecond=0)
+        h = int(hour.timestamp()) // 3600
+        cur = per_key.setdefault(k, {})
+        if h not in cur or (ts, eid) > cur[h][0]:
+            cur[h] = ((ts, eid), v)
+    want = {}
+    for k, buckets in per_key.items():
+        lo, hi = min(buckets), max(buckets)
+        last = None
+        for h in range(lo, hi + 1):
+            if h in buckets:
+                last = buckets[h][1]
+                want[(k, h)] = (last, True)
+            else:
+                want[(k, h)] = (last, False)
+    return want
+
+
+@settings(max_examples=12, deadline=None)
+@given(event_sets)
+def test_gap_fill_matches_naive_locf(spark, events):
+    df = spark.createDataFrame(
+        _rows(events),
+        "event_id long, event_type string, ts timestamp, value double",
+    )
+    got = {
+        (r.event_type, int(r.bucket_ts.timestamp()) // 3600): (
+            r.value_filled,
+            r.is_observed,
+        )
+        for r in gap_fill(df).collect()
+    }
+    assert got == _naive_gap_fill(_rows(events))
+
+
+def _naive_delta_vol(rows):
+    per_key: dict[str, list] = {}
+    for eid, k, ts, v in sorted(rows, key=lambda r: (r[1], r[2], r[0])):
+        per_key.setdefault(k, []).append((ts, v))
+    want = {}
+    for k, seq in per_key.items():
+        deltas: dict[int, list[float]] = {}
+        for (pt, pv), (t, v) in zip(seq, seq[1:]):
+            h = int(
+                t.replace(minute=0, second=0, microsecond=0).timestamp()
+            ) // 3600
+            deltas.setdefault(h, []).append(round(v, 2) - round(pv, 2))
+        for h, ds in deltas.items():
+            var = statistics.variance(ds) if len(ds) >= 2 else None
+            want[(k, h)] = (len(ds), round(sum(ds), 6), var)
+    return want
+
+
+@settings(max_examples=12, deadline=None)
+@given(event_sets)
+def test_delta_volatility_matches_naive(spark, events):
+    df = spark.createDataFrame(
+        _rows(events),
+        "event_id long, event_type string, ts timestamp, value double",
+    )
+    got = {
+        (r.event_type, int(r.bucket_ts.timestamp()) // 3600): (
+            r.n_moves,
+            round(r.net_move, 6),
+            r.move_var,
+        )
+        for r in delta_volatility(df).collect()
+    }
+    want = _naive_delta_vol(_rows(events))
+    assert set(got) == set(want)
+    for key in want:
+        gn, gnet, gvar = got[key]
+        wn, wnet, wvar = want[key]
+        assert (gn, gnet) == (wn, wnet), key
+        if wvar is None:
+            assert gvar is None, key
+        else:
+            assert abs(gvar - wvar) < 1e-9, (key, gvar, wvar)
+
+
+def test_delta_volatility_constant_huge_deltas_exact_zero(spark):
+    """Constant deltas must report variance EXACTLY 0.0 via the decimal
+    min/max witnesses, and the identity is clamped non-negative: past
+    ~2^53 the n·S2 − S1² double cancellation leaves random-signed
+    noise, and this exact input (6 constant moves of 8602516521735.17)
+    emitted move_var = −3.7e10 — a NEGATIVE variance — with the DuckDB
+    oracle agreeing on the garbage (the linreg/corr witness class)."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 5, 0, 0)
+    rows, v = [], 0.0
+    for i in range(7):
+        rows.append((i, "A", t0 + dt.timedelta(minutes=i), v))
+        v += 8602516521735.17
+    df = spark.createDataFrame(
+        rows, "event_id long, event_type string, ts timestamp, value double"
+    )
+    r = delta_volatility(df).collect()[0]
+    assert r.n_moves == 6 and r.move_var == 0.0, r
 
 
 @given(

@@ -13,6 +13,7 @@ from polymarket_data_ingestor_spark.operators.analytics import (
     finalize_quantile_rollup,
     finalize_sample_rollup,
     heavy_hitters_state,
+    kmv_distinct_estimate,
     merge_quantile_rollup,
     merge_sample_rollup,
     quantile_rollup_state,
@@ -80,12 +81,41 @@ def test_sample_rollup_empty_k1_and_duplicate_ids(spark):
     st = sample_rollup_state(df, ("g",), "item", k=1, seed=2)
     rows = finalize_sample_rollup(st).collect()
     assert len(rows) == 1 and rows[0]["sample_id"] in ("x", "y")
+    # below capacity the KMV estimate is the exact distinct count
     st2 = sample_rollup_state(df, ("g",), "item", k=8, seed=2)
+    est = kmv_distinct_estimate(st2).collect()[0]["n_distinct_est"]
+    assert est == 2.0
     # merging with the empty state is the identity
     merged = merge_sample_rollup(st2, empty_state, keys=("g",))
     assert sorted(
         r["sample_id"] for r in finalize_sample_rollup(merged).collect()
     ) == ["x", "y"]
+
+
+def test_kmv_estimate_zero_hash_is_finite(spark):
+    """ADVICE-r10: hash32 can legitimately be 0 (md5 prefix
+    "00000000"); at capacity the k-th smallest hash being 0 must give
+    the clamped finite ceiling (k−1)·2³², never Infinity."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    # two ids colliding at hash 0 fill a k=2 state: h_k = 0
+    st = spark.createDataFrame(
+        [("a", [0, 0], ["i0", "i1"], 2, 1)],
+        "g string, s_hash array<bigint>, s_id array<string>, "
+        "s_k int, s_seed int",
+    )
+    est = kmv_distinct_estimate(st).collect()[0]["n_distinct_est"]
+    assert math.isfinite(est) and est == (2 - 1) * 2.0 ** 32
+    # a zero NOT in the k-th slot keeps the normal estimator
+    st2 = spark.createDataFrame(
+        [("a", [0, 1 << 31], ["i0", "i1"], 2, 1)],
+        "g string, s_hash array<bigint>, s_id array<string>, "
+        "s_k int, s_seed int",
+    )
+    est2 = kmv_distinct_estimate(st2).collect()[0]["n_distinct_est"]
+    assert est2 == (2 - 1) * 2.0 ** 32 / float(1 << 31)
 
 
 def test_dq_split_empty_and_all_bad(spark):
@@ -336,6 +366,7 @@ def test_minhash_rollup_empty_nulls_and_contract(spark):
         finalize_minhash_rollup,
         merge_minhash_rollup,
         minhash_rollup_state,
+        minhash_similarity_pairs,
     )
 
     assert minhash_rollup_state(_empty(spark), ("g",), "item").count() == 0
@@ -357,6 +388,21 @@ def test_minhash_rollup_empty_nulls_and_contract(spark):
     # finalize: n_hashes rows per key, slot is long
     fin = finalize_minhash_rollup(st)
     assert fin.count() == 8 and dict(fin.dtypes)["slot"] == "bigint"
+    # single-key state: similarity has no pairs, not an error
+    only_a = minhash_rollup_state(
+        df.filter(F.col("g") == "a"), ("g",), "item", 4, 2
+    )
+    assert minhash_similarity_pairs(only_a, ("g",)).count() == 0
+    # identical item sets -> est_jaccard 1.0
+    twin = spark.createDataFrame(
+        [("a", 0.0, "x"), ("b", 0.0, "x")], SCHEMA
+    )
+    sim = minhash_similarity_pairs(
+        minhash_rollup_state(twin, ("g",), "item", 4, 2), ("g",)
+    ).collect()
+    assert [(r["g_a"], r["g_b"], r["est_jaccard"]) for r in sim] == [
+        ("a", "b", 1.0)
+    ]
     # n_hashes bounds
     import pytest as _pytest
 
@@ -370,12 +416,13 @@ def test_topk_nan_inf_scores_and_minhash_multikey_similarity(spark):
     """r11 deliberate edge sweep, pinned: genuine Spark-side NaN
     scores are dropped (JVM dropna keeps NaN; the pandas prepare
     drops it), ±inf order correctly with dense ranks; minhash
-    state builds over MULTI-COLUMN keys, and n_hashes=1 self-merge is
-    idempotent."""
+    similarity works over MULTI-COLUMN keys (struct<struct ordering),
+    honors min_similarity, and n_hashes=1 self-merge is idempotent."""
     from polymarket_data_ingestor_spark.operators.analytics import (
         finalize_topk_rollup,
         merge_minhash_rollup,
         minhash_rollup_state,
+        minhash_similarity_pairs,
         topk_rollup_state,
     )
 
@@ -397,9 +444,16 @@ def test_topk_nan_inf_scores_and_minhash_multikey_similarity(spark):
     )
     st = minhash_rollup_state(mk, ("uid", "side"), "item",
                               n_hashes=4, seed=2)
-    sigs = {(r["uid"], r["side"]): list(r["mh_sig"]) for r in st.collect()}
-    assert sorted(sigs) == [(1, "a"), (1, "b"), (2, "a")]
-    assert sigs[(1, "a")] == sigs[(2, "a")]  # identical item sets
+    pairs = {
+        ((r["uid_a"], r["side_a"]), (r["uid_b"], r["side_b"])):
+        r["est_jaccard"]
+        for r in minhash_similarity_pairs(st, ("uid", "side")).collect()
+    }
+    assert len(pairs) == 3
+    assert pairs[((1, "a"), (2, "a"))] == 1.0  # identical item sets
+    n_flt = minhash_similarity_pairs(
+        st, ("uid", "side"), min_similarity=0.9).count()
+    assert 1 <= n_flt < 3
 
     one = minhash_rollup_state(mk, ("uid",), "item", n_hashes=1, seed=2)
     m = merge_minhash_rollup(one, one, keys=("uid",))
@@ -646,6 +700,41 @@ def test_minhash_prehashed_range_guard(spark):
             bad_st.collect()
         assert isinstance(ei.value, Py4JJavaError) or "hash32" in str(
             ei.value)
+
+
+def test_minhash_similarity_broadcast_guard(spark):
+    """r11 verdict #3 + r12 second review, pinned: above the
+    broadcast_max_bytes BUDGET (bytes, not keys — a k=1024 sample row
+    is ~64x a minhash row, so one key-count threshold cannot fit both)
+    the pair join is forced to a DISTRIBUTED cartesian
+    (shuffle_replicate_nl) — a caller keying by DOCUMENT would
+    broadcast-explode a corpus-sized table into every executor, and
+    merely dropping the hint lets the planner's size stats re-pick
+    BNLJ — and the results are identical either way."""
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        minhash_rollup_state,
+        minhash_similarity_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [("a", "x"), ("a", "y"), ("b", "x"), ("c", "z")],
+        "g string, item string",
+    )
+    st = minhash_rollup_state(df, ("g",), "item", n_hashes=4, seed=2)
+    st = st.persist()
+    try:
+        hinted = minhash_similarity_pairs(st, ("g",))
+        plain = minhash_similarity_pairs(st, ("g",),
+                                         broadcast_max_bytes=1)
+        hp = hinted._jdf.queryExecution().executedPlan().toString()
+        pp = plain._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in hp or "BroadcastNestedLoopJoin" in hp
+        assert "Broadcast" not in pp and "CartesianProduct" in pp, pp
+        key = lambda r: (r["g_a"], r["g_b"])  # noqa: E731
+        assert sorted(map(key, hinted.collect())) == sorted(
+            map(key, plain.collect()))
+    finally:
+        st.unpersist()
 
 
 def test_fold_labeled_state_multi_file(spark, tmp_path):
@@ -1025,6 +1114,148 @@ def test_cli_lake_stats_linreg_flow(spark, tmp_path, monkeypatch,
     out = capsys.readouterr().out
     assert "'slope': 2.0" in out and "'intercept': 1.0" in out
     assert "'r2': 1.0" in out
+
+
+def test_kmv_overlap_exact_regime_capacity_bound_and_plan(spark):
+    """r12 KMV set-overlap: in the exact regime (both keys below k)
+    n_common/jaccard equal the true set intersection/Jaccard computed
+    naively; at CAPACITY the estimator lands within the ~1/√K rank
+    error of the truth; mixed (k, seed) contracts raise; the plan
+    reads the checkpointed state (zero FileScans) and broadcasts."""
+    import math
+
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        kmv_overlap_pairs,
+        sample_rollup_state,
+    )
+
+    # exact regime: known sets via a naive python model
+    sets = {
+        "a": {f"u{i}" for i in range(40)},
+        "b": {f"u{i}" for i in range(20, 70)},
+        "c": {f"v{i}" for i in range(10)},
+    }
+    rows = [(g, u) for g, us in sets.items() for u in us]
+    df = spark.createDataFrame(rows, "g string, uid string")
+    st = sample_rollup_state(df, ("g",), "uid", k=256, seed=5)
+    got = {(r["g_a"], r["g_b"]): r.asDict()
+           for r in kmv_overlap_pairs(st, ("g",)).collect()}
+    for (ga, gb), r in got.items():
+        inter = len(sets[ga] & sets[gb])
+        union = len(sets[ga] | sets[gb])
+        assert r["n_common"] == inter, r
+        assert r["jaccard"] == inter / union, r
+        assert r["n_common_est"] == _pytest.approx(inter, abs=1e-9), r
+        assert r["k_used"] == union
+
+    # capacity regime: 5000-element sets, 60% overlap, k=128 — the
+    # estimate must land within 4/√K relative error of the truth
+    big_a = {f"w{i}" for i in range(5000)}
+    big_b = {f"w{i}" for i in range(2000, 7000)}
+    rows2 = [("A", u) for u in big_a] + [("B", u) for u in big_b]
+    df2 = spark.createDataFrame(rows2, "g string, uid string")
+    st2 = sample_rollup_state(df2, ("g",), "uid", k=128, seed=5)
+    r = kmv_overlap_pairs(st2, ("g",)).collect()[0]
+    true_inter = len(big_a & big_b)
+    assert r["k_used"] == 128
+    tol = 4.0 / math.sqrt(128)  # ~0.35 relative
+    assert abs(r["n_common_est"] - true_inter) <= tol * true_inter, r
+
+    # mixed contract raises at execution
+    st3 = sample_rollup_state(df, ("g",), "uid", k=64, seed=5)
+    with _pytest.raises(Exception, match="identity contract"):
+        kmv_overlap_pairs(st.unionByName(st3), ("g",)).collect()
+    # ... and the guard survives ANY projection: the r12 advisor found
+    # the k_used-only guard let a (keys, jaccard) select prune the
+    # raise and silently mix hash families. The guard now lives inside
+    # kk, which every value column builds on.
+    mixed = kmv_overlap_pairs(st.unionByName(st3), ("g",))
+    for col in ("jaccard", "n_common", "n_common_est"):
+        with _pytest.raises(Exception, match="identity contract"):
+            mixed.select("g_a", "g_b", col).collect()
+
+    # plan: checkpointed state (no FileScan/Python), broadcast join;
+    # the guard falls back to a distributed cartesian above the bound
+    out = kmv_overlap_pairs(st, ("g",))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan and "EvalPython" not in plan, plan
+    assert "Broadcast" in plan, plan
+    guarded = kmv_overlap_pairs(st, ("g",), broadcast_max_bytes=1)
+    gp = guarded._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" in gp and "Broadcast" not in gp, gp
+    assert sorted(map(lambda q: (q["g_a"], q["g_b"]), guarded.collect())) \
+        == sorted(got.keys())
+
+
+def test_pairwise_state_banded_matches_exact_and_plan(spark):
+    """r13 (r12 verdict #2): above the broadcast budget the state-pair
+    family no longer has to eat a keys² cartesian — the scaffold bands
+    the maintained sketch itself. Pins: banded output IDENTICAL to the
+    exact path on a planted corpus (both operators, threshold > 0);
+    banded plans contain NO cartesian and NO BroadcastNestedLoopJoin;
+    banded without a positive threshold refuses; the auto path picks
+    banding above budget, and the threshold-0 above-budget fallback
+    warns loudly."""
+    import warnings as _warnings
+
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        kmv_overlap_pairs,
+        minhash_rollup_state,
+        minhash_similarity_pairs,
+        sample_rollup_state,
+    )
+
+    # planted corpus: overlapping item sets across 6 keys, plus one
+    # isolated key that must appear in NO thresholded pair
+    rows = []
+    for g in range(6):
+        rows += [(f"g{g}", f"i{j}") for j in range(g * 10, g * 10 + 40)]
+    rows += [("lone", f"z{j}") for j in range(30)]
+    df = spark.createDataFrame(rows, "g string, item string")
+
+    def _pin(make):
+        exact = make(banded=False)
+        band = make(banded=True)
+        ex = sorted(map(tuple, exact.collect()))
+        bd = sorted(map(tuple, band.collect()))
+        assert ex == bd and ex, (ex[:3], bd[:3])
+        plan = band._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoop" not in plan, plan
+        assert not any("lone" in str(r) for r in ex)
+
+    mh = minhash_rollup_state(df, ("g",), "item", n_hashes=16, seed=3)
+    _pin(lambda banded: minhash_similarity_pairs(
+        mh, ("g",), min_similarity=0.05, banded=banded))
+    sm = sample_rollup_state(df, ("g",), "item", k=64, seed=3)
+    _pin(lambda banded: kmv_overlap_pairs(
+        sm, ("g",), min_jaccard=0.05, banded=banded))
+
+    # banded without a positive threshold would silently lose score-0
+    # pairs from the output — refuse
+    with _pytest.raises(ValueError, match="positive"):
+        minhash_similarity_pairs(mh, ("g",), banded=True)
+    with _pytest.raises(ValueError, match="positive"):
+        kmv_overlap_pairs(sm, ("g",), banded=True)
+
+    # auto: above budget + positive threshold -> banded (no cartesian)
+    auto = minhash_similarity_pairs(
+        mh, ("g",), min_similarity=0.05, broadcast_max_bytes=1)
+    ap = auto._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in ap and "BroadcastNestedLoop" \
+        not in ap, ap
+    # above budget + threshold 0 -> cartesian, loudly warned
+    with _warnings.catch_warnings(record=True) as w:
+        _warnings.simplefilter("always")
+        fb = minhash_similarity_pairs(
+            mh, ("g",), broadcast_max_bytes=1)
+        assert any("DISTRIBUTED CARTESIAN" in str(x.message) for x in w)
+    fp = fb._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" in fp, fp
 
 
 def test_corr_rollup_edges_merge_and_naive_model(spark):

@@ -1,13 +1,987 @@
-"""Tests for the mergeable rollup states, the serial smoothing kernels
-and the data-quality rules in ``operators.analytics`` — each against a
-naive Python model or a one-pass recompute over crafted inputs that hit
-the documented edge semantics."""
+"""Tests for the monitoring/profiling operators: rolling_zscore,
+dq_profile, inverted_index — each against a naive Python model over
+crafted inputs that hit the documented edge semantics (constant
+baselines, short baselines, NULL columns, posting truncation)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import math
 
 from pyspark.sql import functions as F
+
+from polymarket_data_ingestor_spark.operators.analytics import (
+    dq_profile,
+    rolling_zscore,
+)
+from polymarket_data_ingestor_spark.operators.text import inverted_index
+
+BASE = dt.datetime(2024, 4, 1)
+
+
+def _count_events(counts_per_key: dict[str, list[int]]):
+    """Rows (event_id, ts, key): bucket i of a key gets counts[i] events."""
+    rows, eid = [], 0
+    for key, counts in counts_per_key.items():
+        for i, c in enumerate(counts):
+            for j in range(c):
+                eid += 1
+                rows.append(
+                    (eid, BASE + dt.timedelta(hours=i, seconds=j), key)
+                )
+    return rows
+
+
+def _naive_zscore(counts, trailing, threshold, min_baseline):
+    """Per ordered bucket: (n, baseline_n, z, flag) over the row frame."""
+    out = []
+    for i, x in enumerate(counts):
+        base = counts[max(0, i - trailing): i]
+        m = len(base)
+        if m < min_baseline:
+            out.append((x, None, None, False))
+            continue
+        s, ss = sum(base), sum(v * v for v in base)
+        num, var_n = x * m - s, m * ss - s * s
+        z = num / math.sqrt(var_n) if var_n > 0 else None
+        flag = num * num > threshold * threshold * var_n
+        out.append((x, m, z, flag))
+    return out
+
+
+def test_rolling_zscore_matches_naive_model(spark):
+    # A: burst over a constant baseline (zero variance -> NULL z, flag);
+    # B: burst over a varying baseline; C: dead-flat (never flags);
+    # B also exercises the short-baseline NULL region (first 4 buckets).
+    data = {
+        "A": [5, 5, 5, 5, 9, 5],
+        "B": [1, 2, 3, 4, 10, 2],
+        "C": [2, 2, 2, 2, 2],
+    }
+    df = spark.createDataFrame(
+        _count_events(data), ["event_id", "ts", "event_type"]
+    )
+    got = (
+        rolling_zscore(
+            df, key_cols=("event_type",), trailing_buckets=4,
+            threshold=3, min_baseline=4,
+        )
+        .toPandas()
+        .sort_values(["event_type", "bucket_ts"])
+        .reset_index(drop=True)
+    )
+    for key, counts in data.items():
+        sub = got[got["event_type"] == key].reset_index(drop=True)
+        want = _naive_zscore(counts, 4, 3, 4)
+        assert sub["n_events"].tolist() == [w[0] for w in want]
+        assert [
+            None if v != v else int(v) for v in sub["baseline_n"]
+        ] == [w[1] for w in want]
+        for gz, (_, _, wz, _) in zip(sub["zscore"], want):
+            if wz is None:
+                assert gz != gz  # NaN <- NULL
+            else:
+                assert gz == wz  # exact: integer sums + one IEEE div/sqrt
+        assert sub["is_anomaly"].tolist() == [w[3] for w in want]
+    # the A burst flags with NULL z (infinite surprise, no finite score)
+    a_burst = got[(got["event_type"] == "A") & (got["n_events"] == 9)]
+    assert bool(a_burst["is_anomaly"].iloc[0])
+    assert a_burst["zscore"].isna().all()
+
+
+def test_dq_profile_metrics(spark):
+    df = spark.createDataFrame(
+        [(1, "x", None), (2, "x", 1.0), (3, None, 2.0), (4, "y", 2.0)],
+        ["id", "s", "v"],
+    )
+    got = {
+        r["col_name"]: r.asDict() for r in dq_profile(df).collect()
+    }
+    assert got["id"] == {
+        "col_name": "id", "n_rows": 4, "n_nulls": 0, "n_distinct": 4,
+        "completeness_permyriad": 10000, "is_unique": True,
+    }
+    assert got["s"]["n_nulls"] == 1 and got["s"]["n_distinct"] == 2
+    assert got["s"]["completeness_permyriad"] == 7500
+    assert got["s"]["is_unique"] is False
+    assert got["v"]["n_distinct"] == 2 and got["v"]["is_unique"] is False
+
+
+def test_dq_profile_empty_and_approx(spark):
+    df = spark.createDataFrame([], "id bigint, s string")
+    got = dq_profile(df).collect()
+    assert len(got) == 2
+    for r in got:
+        # empty input: NULL completeness (not a divide-by-zero), trivially unique
+        assert r["n_rows"] == 0 and r["completeness_permyriad"] is None
+    approx = dq_profile(
+        spark.createDataFrame([(1, "a")], "id bigint, s string"),
+        exact_distinct=False,
+    ).collect()
+    assert {r["col_name"] for r in approx} == {"id", "s"}
+    assert all(r["n_distinct"] == 1 for r in approx)
+
+
+def test_inverted_index_matches_naive_model(spark):
+    docs = [(1, "a b a"), (2, "b c"), (3, " b  a ")]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = {
+        r["term"]: r.asDict()
+        for r in inverted_index(df, min_df=1).collect()
+    }
+    assert got["a"] == {
+        "term": "a", "tf": 3, "df": 2, "postings": [1, 3]
+    }
+    assert got["b"]["df"] == 3 and got["b"]["postings"] == [1, 2, 3]
+    assert got["c"] == {
+        "term": "c", "tf": 1, "df": 1, "postings": [2]
+    }
+    # min_df prunes; df stays exact while postings truncate to the
+    # smallest doc ids (sorted before the slice)
+    pruned = {
+        r["term"]: r.asDict()
+        for r in inverted_index(df, min_df=2, max_postings=2).collect()
+    }
+    assert set(pruned) == {"a", "b"}
+    assert pruned["b"]["df"] == 3 and pruned["b"]["postings"] == [1, 2]
+
+
+def _naive_bm25(docs, query, k1=1.2, b=0.75):
+    """Independent BM25 model: dict-based, no Spark."""
+    toks = {d: t.split() for d, t in docs}
+    n = len(docs)
+    avgdl = sum(len(t) for t in toks.values()) / n
+    dfs = {
+        q: sum(1 for t in toks.values() if q in t) for q in query
+    }
+    out = {}
+    for d, t in toks.items():
+        s = 0.0
+        matched = 0
+        for q in query:
+            tf = t.count(q)
+            if tf == 0:
+                continue
+            matched += 1
+            idf = math.log(1 + (n - dfs[q] + 0.5) / (dfs[q] + 0.5))
+            s += idf * tf * (k1 + 1) / (
+                tf + k1 * (1 - b + b * len(t) / avgdl)
+            )
+        if matched:
+            out[d] = (round(s, 6), matched)
+    return out
+
+
+def test_bm25_matches_naive_model(spark):
+    from polymarket_data_ingestor_spark.operators.text import bm25_scores
+
+    docs = [
+        (1, "spark shuffle join shuffle"),
+        (2, "join the window please"),
+        (3, "completely unrelated text here"),
+        (4, "shuffle"),
+        (5, "window window window shuffle join window"),
+    ]
+    query = ("shuffle", "window")
+    got = bm25_scores(
+        spark.createDataFrame(docs, ["doc_id", "text"]), query, top_n=10
+    ).collect()
+    want = _naive_bm25(docs, query)
+    assert {r["doc_id"] for r in got} == set(want)  # doc 3 absent
+    for r in got:
+        w_score, w_matched = want[r["doc_id"]]
+        assert r["score"] == w_score, (r, want)
+        assert r["n_matched_terms"] == w_matched
+    # rows arrive ranked: (score desc, doc_id) total order
+    keys = [(-r["score"], r["doc_id"]) for r in got]
+    assert keys == sorted(keys)
+    # top_n truncates the ranked list deterministically
+    top2 = bm25_scores(
+        spark.createDataFrame(docs, ["doc_id", "text"]), query, top_n=2
+    ).collect()
+    assert [r["doc_id"] for r in top2] == [r["doc_id"] for r in got[:2]]
+
+
+def test_quantile_bucket_matches_numpy(spark):
+    import numpy as np
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        quantile_bucket,
+    )
+
+    vals = [3, 1, 4, 1, 5, 9, 2, 6, 5, 3]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals)], ["id", "v"]
+    )
+    got = {
+        r["id"]: r["b"] for r in quantile_bucket(df, "v", 4, "b").collect()
+    }
+    qs = np.percentile(vals, [25, 50, 75], method="linear")
+    for i, v in enumerate(vals):
+        want = 1 + sum(v > q for q in qs)
+        assert got[i] == want, (i, v, got[i], want, qs)
+    # median split
+    got2 = {
+        r["id"]: r["b"] for r in quantile_bucket(df, "v", 2, "b").collect()
+    }
+    med = np.percentile(vals, 50, method="linear")
+    assert all(got2[i] == (2 if v > med else 1) for i, v in enumerate(vals))
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError):
+        quantile_bucket(df, "v", 1)
+
+
+def test_transition_matrix_matches_naive_model(spark):
+    from collections import Counter, defaultdict
+
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        transition_matrix,
+    )
+
+    # two users; u2 has a same-ts tie broken by event_id
+    rows = [
+        (1, "u1", BASE, "a"),
+        (2, "u1", BASE + dt.timedelta(minutes=1), "b"),
+        (3, "u1", BASE + dt.timedelta(minutes=2), "a"),
+        (4, "u2", BASE, "b"),
+        (5, "u2", BASE + dt.timedelta(minutes=1), "b"),
+        (6, "u2", BASE + dt.timedelta(minutes=1), "c"),  # tie: after 5
+    ]
+    df = spark.createDataFrame(rows, ["event_id", "user_id", "ts", "event_type"])
+    got = {
+        (r["from_type"], r["to_type"]): (r["n"], r["share_permyriad"])
+        for r in transition_matrix(df, key_col="user_id").collect()
+    }
+    seqs = defaultdict(list)
+    for eid, u, ts, t in sorted(rows, key=lambda r: (r[2], r[0])):
+        seqs[u].append(t)
+    want = Counter()
+    for s in seqs.values():
+        for a, b in zip(s, s[1:]):
+            want[(a, b)] += 1
+    outdeg = Counter()
+    for (a, _), n in want.items():
+        outdeg[a] += n
+    assert set(got) == set(want)
+    for k, n in want.items():
+        assert got[k] == (n, n * 10000 // outdeg[k[0]]), (k, got[k])
+    # shares leaving a state sum to <= 10000 (floor division)
+    for a in outdeg:
+        assert sum(s for (f, _), (_, s) in got.items() if f == a) <= 10000
+
+
+def test_value_histogram_edges_and_overflow(spark):
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        value_histogram,
+    )
+
+    # span=10 over 3 bins: DIV edges are ceil(b*10/3) = 0,4,7,10 —
+    # a float width (3.33) would misplace v=4 and v=7; the two NULLs
+    # must land in a NULL bin, NOT the overflow bin (F.least skips
+    # NULL arguments, so an unguarded least(NULL, n) returns n)
+    vals = [-2, 0, 3, 4, 6, 7, 9, 10, 15, None, None]
+    df = spark.createDataFrame([(v,) for v in vals], "v int")
+    got = {r["bin"]: r.asDict() for r in
+           value_histogram(df, "v", lo=0, hi=10, n_bins=3).collect()}
+    assert got[None] == {"bin": None, "bin_lo": None,
+                         "bin_hi": None, "n": 2}
+    assert got[-1]["n"] == 1 and got[-1]["bin_lo"] is None
+    assert got[0] == {"bin": 0, "bin_lo": 0, "bin_hi": 4, "n": 2}   # 0,3
+    assert got[1] == {"bin": 1, "bin_lo": 4, "bin_hi": 7, "n": 2}   # 4,6
+    assert got[2] == {"bin": 2, "bin_lo": 7, "bin_hi": 10, "n": 2}  # 7,9
+    assert got[3]["n"] == 2 and got[3]["bin_lo"] is None            # 10,15
+    assert sum(r["n"] for r in got.values()) == len(vals)
+    with _pytest.raises(ValueError):
+        value_histogram(df, "v", lo=5, hi=5)
+    with _pytest.raises(ValueError):
+        value_histogram(df, "v", lo=0, hi=10, n_bins=0)
+
+
+def _hash_permyriad(doc_id, seed):
+    import hashlib
+
+    return int(
+        hashlib.md5(f"s{seed}:{doc_id}".encode()).hexdigest()[:8], 16
+    ) % 10000
+
+
+def test_temperature_sample_matches_naive_model(spark):
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.sampling import (
+        temperature_sample,
+    )
+
+    rows = (
+        [(i, "A") for i in range(100)]
+        + [(1000 + i, "B") for i in range(10)]
+        + [(2000, "C")]
+    )
+    df = spark.createDataFrame(rows, ["doc_id", "source"])
+    got = {
+        r["doc_id"]
+        for r in temperature_sample(
+            df, temperature=2.0, target_fraction=0.5, seed=7
+        ).collect()
+    }
+    # naive model replicating the exact arithmetic
+    counts = {"A": 100, "B": 10, "C": 1}
+    wm = sum(math.floor((n ** 0.5) * 1e6) for n in counts.values())
+    grand = sum(counts.values())
+    rates = {
+        s: min(
+            10000,
+            math.floor(0.5 * grand / (wm / 1e6) * (n ** -0.5) * 10000),
+        )
+        for s, n in counts.items()
+    }
+    # temperature=2 oversamples the tail: B and C hit the cap (kept whole)
+    assert rates["B"] == 10000 and rates["C"] == 10000
+    assert rates["A"] < 5000
+    want = {
+        d for d, s in rows if _hash_permyriad(d, 7) < rates[s]
+    }
+    assert got == want
+    # tau=1 degenerates to plain Bernoulli at the target fraction
+    got1 = {
+        r["doc_id"]
+        for r in temperature_sample(
+            df, temperature=1.0, target_fraction=0.5, seed=7
+        ).collect()
+    }
+    assert got1 == {d for d, _ in rows if _hash_permyriad(d, 7) < 5000}
+    with _pytest.raises(ValueError):
+        temperature_sample(df, temperature=0, target_fraction=0.5)
+    with _pytest.raises(ValueError):
+        temperature_sample(df, temperature=2.0, target_fraction=1.5)
+
+
+def test_source_token_drift_matches_naive_model(spark):
+    from collections import Counter
+
+    from polymarket_data_ingestor_spark.operators.text import (
+        source_token_drift,
+    )
+
+    docs = [
+        (1, "a a b", "s1"),
+        (2, "a b b c", "s1"),
+        (3, "c c c d", "s2"),
+        (4, "a d", "s2"),
+    ]
+    df = spark.createDataFrame(docs, ["doc_id", "text", "source"])
+    got = {
+        r["source"]: r.asDict()
+        for r in source_token_drift(df).collect()
+    }
+    per_source = {}
+    for _, text, s in docs:
+        per_source.setdefault(s, Counter()).update(text.split())
+    corpus = Counter()
+    for c in per_source.values():
+        corpus.update(c)
+    big_n = sum(corpus.values())
+    for s, c in per_source.items():
+        n_s = sum(c.values())
+        scaled = sum(
+            math.floor(
+                (cst / n_s)
+                * math.log((cst * big_n) / (n_s * corpus[t]))
+                * 1e12
+            )
+            for t, cst in c.items()
+        )
+        want_kl = round(scaled / 1e12, 6)
+        assert got[s]["kl_vs_corpus"] == want_kl, (s, got[s], want_kl)
+        assert got[s]["n_terms"] == len(c)
+        assert got[s]["n_tokens"] == n_s
+        assert got[s]["kl_vs_corpus"] >= 0  # Gibbs
+    # single-source corpus: p == q exactly -> KL exactly 0
+    solo = source_token_drift(
+        spark.createDataFrame([(1, "x y x", "only")],
+                              ["doc_id", "text", "source"])
+    ).collect()
+    assert solo[0]["kl_vs_corpus"] == 0.0
+
+
+def test_doc_pair_partials_kernel(spark):
+    """r15 Arrow pair kernel: batch-combined (ta, tb, c) partials from
+    sorted-distinct arrays must sum to exactly the per-doc unordered
+    pair counts under ANY batching/partitioning; degenerate arrays
+    (empty, singleton, NULL) contribute nothing."""
+    from pyspark.sql import functions as F
+
+    from polymarket_data_ingestor_spark.operators.text import (
+        _doc_pair_partials,
+    )
+
+    rows = [
+        (["a", "b", "c"],),
+        (["a", "b"],),
+        (["z"],),
+        ([],),
+        (None,),
+        (["a", "b"],),
+    ]
+    df = spark.createDataFrame(rows, "__arr array<string>")
+    for parts in (1, 4):
+        got = {
+            (r["ta"], r["tb"]): r["c"]
+            for r in _doc_pair_partials(df.repartition(parts))
+            .groupBy("ta", "tb")
+            .agg(F.sum("c").alias("c"))
+            .collect()
+        }
+        assert got == {
+            ("a", "b"): 3,
+            ("a", "c"): 1,
+            ("b", "c"): 1,
+        }, (parts, got)
+
+
+def test_term_pmi_pairs_matches_naive_model(spark):
+    from collections import Counter
+    from itertools import combinations
+
+    from polymarket_data_ingestor_spark.operators.text import term_pmi_pairs
+
+    docs = [
+        (1, "new york city"),
+        (2, "new york times"),
+        (3, "new york new york"),  # duplicates collapse: presence counts
+        (4, "city times"),
+        (5, "unrelated words here"),
+    ]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = term_pmi_pairs(df, min_pair_docs=2, top_k=50).collect()
+    n = len(docs)
+    term_docs = Counter()
+    pair_docs = Counter()
+    for _, text in docs:
+        terms = sorted(set(text.split()))
+        term_docs.update(terms)
+        pair_docs.update(combinations(terms, 2))
+    want = {}
+    for (a, b), nab in pair_docs.items():
+        if nab >= 2:
+            want[(a, b)] = (
+                nab,
+                round(
+                    math.log(
+                        (n * nab) / (term_docs[a] * term_docs[b])
+                    ),
+                    6,
+                ),
+            )
+    assert {(r["ta"], r["tb"]) for r in got} == set(want)
+    for r in got:
+        nab, pmi = want[(r["ta"], r["tb"])]
+        assert r["n_ab"] == nab and r["pmi"] == pmi, (r, want)
+    # ("new","york") co-occur always: highest association
+    ranked = [(r["ta"], r["tb"]) for r in got]
+    assert ranked[0] == ("new", "york")
+    # output arrives in (pmi desc, ta, tb) order
+    keys = [(-r["pmi"], r["ta"], r["tb"]) for r in got]
+    assert keys == sorted(keys)
+
+
+def test_term_pmi_vocab_restriction_never_changes_survivor_scores(spark):
+    """min_df <= min_pair_docs is a pure fan-out optimization (bit-
+    identical output: n_ab <= min(n_a, n_b), so surviving pairs'
+    marginals already clear the threshold); any restriction (higher
+    min_df, max_vocab) may only REMOVE pairs — a survivor's
+    (n_ab, pmi) must be byte-identical to the unrestricted run,
+    because marginals are computed before the vocabulary filter."""
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.text import term_pmi_pairs
+
+    docs = [
+        (1, "new york city rare1"),
+        (2, "new york times rare2"),
+        (3, "new york new york"),
+        (4, "city times rare3"),
+        (5, "unrelated words here"),
+        (6, "new city words"),
+    ]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+
+    def as_map(rows):
+        return {(r["ta"], r["tb"]): (r["n_ab"], r["pmi"]) for r in rows}
+
+    unrestricted = as_map(
+        term_pmi_pairs(df, min_pair_docs=2, top_k=50, min_df=1).collect()
+    )
+    # default min_df (= min_pair_docs) is identity-preserving
+    default = as_map(term_pmi_pairs(df, min_pair_docs=2, top_k=50).collect())
+    assert default == unrestricted
+    # a HIGHER min_df only drops pairs; survivors keep exact scores
+    strict = as_map(
+        term_pmi_pairs(df, min_pair_docs=2, top_k=50, min_df=3).collect()
+    )
+    assert set(strict) < set(unrestricted) or strict == unrestricted
+    for k, v in strict.items():
+        assert unrestricted[k] == v, (k, v, unrestricted[k])
+    # max_vocab likewise: subset with unchanged survivor scores
+    capped = as_map(
+        term_pmi_pairs(df, min_pair_docs=2, top_k=50, max_vocab=3).collect()
+    )
+    assert set(capped) <= set(unrestricted)
+    for k, v in capped.items():
+        assert unrestricted[k] == v, (k, v, unrestricted[k])
+    with _pytest.raises(ValueError):
+        term_pmi_pairs(df, min_df=0)
+    with _pytest.raises(ValueError):
+        term_pmi_pairs(df, max_vocab=0)
+
+
+def test_shard_and_order_matches_naive_model(spark):
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.sampling import (
+        shard_and_order,
+    )
+
+    docs = [(i, f"t{i}") for i in range(40)]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = {
+        r["doc_id"]: (r["shard"], r["pos"])
+        for r in shard_and_order(df, n_shards=4, seed=9).collect()
+    }
+    by_shard = {}
+    for d, _ in docs:
+        h = int(
+            __import__("hashlib")
+            .md5(f"s9:{d}".encode())
+            .hexdigest()[:8],
+            16,
+        )
+        by_shard.setdefault(h % 4, []).append((h, d))
+    want = {}
+    for sh, members in by_shard.items():
+        for pos, (_, d) in enumerate(sorted(members)):
+            want[d] = (sh, pos)
+    assert got == want
+    # shard assignment is row-local: a half corpus keeps every shard
+    half = {
+        r["doc_id"]: r["shard"]
+        for r in shard_and_order(
+            spark.createDataFrame(docs[:20], ["doc_id", "text"]),
+            n_shards=4, seed=9,
+        ).collect()
+    }
+    assert all(half[d] == got[d][0] for d in half)
+    with _pytest.raises(ValueError):
+        shard_and_order(df, n_shards=0)
+
+
+def test_iqr_outliers_matches_naive_model(spark):
+    import numpy as np
+
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        iqr_outliers,
+    )
+
+    rows = (
+        [(i, "A", v) for i, v in enumerate([10, 12, 11, 13, 12, 11, 99])]
+        + [(100 + i, "B", v) for i, v in enumerate([5, 500, 6, 7, 5, -400])]
+    )
+    df = spark.createDataFrame(rows, ["id", "grp", "v"])
+    got = {r["id"]: r["is_outlier"] for r in
+           iqr_outliers(df, "v", "grp").collect()}
+    for grp in ("A", "B"):
+        vals = [v for _, g, v in rows if g == grp]
+        q1, q3 = np.percentile(vals, [25, 75], method="linear")
+        lo, hi = q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)
+        for i, g, v in rows:
+            if g == grp:
+                assert got[i] == (v < lo or v > hi), (i, v, lo, hi)
+    assert got[6] and got[101] and got[105]  # the planted outliers
+
+
+def test_pagerank_deterministic_and_matches_float_model(spark):
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import pagerank
+
+    # star a-{b,c,d} plus chain d-e; self-loop and duplicate edge ignored
+    edges = [("a", "b"), ("a", "c"), ("a", "d"), ("d", "e"),
+             ("b", "a"), ("e", "e")]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    got = {r["node"]: float(r["rank"])
+           for r in pagerank(df, n_iter=8).collect()}
+    # independent float power iteration
+    adj = {}
+    for u, v in edges:
+        if u != v:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+    n = len(adj)
+    r = {u: 1 / n for u in adj}
+    for _ in range(8):
+        nxt = {}
+        for u in adj:
+            s = sum(r[w] / len(adj[w]) for w in adj[u])
+            nxt[u] = 0.15 / n + 0.85 * s
+        r = nxt
+    assert set(got) == set(r)
+    for u in r:
+        assert got[u] == _pytest.approx(r[u], abs=1e-12)
+    assert sum(got.values()) == _pytest.approx(1.0, abs=1e-9)
+    assert got["a"] == max(got.values())  # hub dominates
+    # the real guarantee: bit-identical under any partitioning
+    a = pagerank(df.repartition(7), n_iter=3).collect()
+    b = pagerank(df.coalesce(1), n_iter=3).collect()
+    assert {(x["node"], x["rank"]) for x in a} == {
+        (x["node"], x["rank"]) for x in b
+    }
+    with _pytest.raises(ValueError):
+        pagerank(df, n_iter=0)
+    with _pytest.raises(ValueError):
+        pagerank(df, damping="1.5")
+
+
+def test_canonicalize_matches_naive_model(spark):
+    import re
+
+    from polymarket_data_ingestor_spark.operators.text import canonicalize
+
+    docs = [
+        (1, "Hello,   World!"),
+        (2, "hello world"),
+        (3, "  HELLO-WORLD  "),
+        (4, "Café déjà-vu 42"),   # accents strip (ASCII-deliberate)
+        (5, ""),
+        (6, "a\tb\nc"),
+        # edge whitespace runs containing tab/newline: F.trim strips
+        # only ASCII spaces, so collapse-then-trim order is load-bearing
+        # ('a b\t' must equal 'a b', not 'a b ')
+        (7, "a b\t"),
+        (8, "\n\t a b \t\n"),
+    ]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = {
+        r["doc_id"]: r["canonical"] for r in canonicalize(df).collect()
+    }
+
+    def naive(t):
+        t = re.sub(r"[^a-z0-9\s]+", "", t.lower())
+        return re.sub(r"\s+", " ", t).strip()
+
+    for d, t in docs:
+        assert got[d] == naive(t), (d, t, got[d])
+    assert got[7] == got[8] == "a b"
+    # the near-dup modality: case/punct/spacing variants collapse —
+    # but a HYPHEN strips to a joined word, not a space (3 differs)
+    assert got[1] == got[2] == "hello world"
+    assert got[3] == "helloworld"
+    assert got[4] == "caf djvu 42"
+    assert got[5] == "" and got[6] == "a b c"
+
+
+def test_scd2_build_matches_naive_model(spark):
+    from polymarket_data_ingestor_spark.operators.analytics import scd2_build
+
+    rows = [
+        # u1: a -> a (collapse) -> b -> b (collapse) -> a
+        (1, "u1", BASE, "a"),
+        (2, "u1", BASE + dt.timedelta(minutes=1), "a"),
+        (3, "u1", BASE + dt.timedelta(minutes=2), "b"),
+        (4, "u1", BASE + dt.timedelta(minutes=3), "b"),
+        (5, "u1", BASE + dt.timedelta(minutes=4), "a"),
+        # u2: leading NULL state still opens version 1; NULL->x changes
+        (6, "u2", BASE, None),
+        (7, "u2", BASE + dt.timedelta(minutes=1), "x"),
+        # u3: same-ts tie broken by event_id (9 after 8)
+        (8, "u3", BASE, "p"),
+        (9, "u3", BASE, "q"),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id string, ts timestamp, event_type string"
+    )
+    got = {
+        (r["user_id"], r["version"]): r.asDict()
+        for r in scd2_build(df, key_cols=("user_id",)).collect()
+    }
+
+    def ms(minutes):
+        return int((BASE + dt.timedelta(minutes=minutes)).timestamp() * 1000)
+
+    assert len(got) == 7
+    u1 = [got[("u1", v)] for v in (1, 2, 3)]
+    assert [r["state"] for r in u1] == ["a", "b", "a"]
+    assert [r["valid_from_ms"] for r in u1] == [ms(0), ms(2), ms(4)]
+    assert [r["valid_to_ms"] for r in u1] == [ms(2), ms(4), None]
+    assert [r["is_current"] for r in u1] == [False, False, True]
+    assert got[("u2", 1)]["state"] is None
+    assert got[("u2", 2)]["state"] == "x" and got[("u2", 2)]["is_current"]
+    assert got[("u3", 1)]["state"] == "p" and got[("u3", 2)]["state"] == "q"
+    # no collapse: every log row opens a version
+    raw = scd2_build(df, key_cols=("user_id",), collapse_unchanged=False)
+    assert raw.count() == len(rows)
+
+
+def test_winsorize_matches_numpy(spark):
+    import numpy as np
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import winsorize
+
+    vals = [1, 2, 3, 4, 5, 6, 7, 8, 9, 1000, -500]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], ["id", "v"])
+    got = {r["id"]: r["v_winsorized"]
+           for r in winsorize(df, "v", 0.1, 0.9).collect()}
+    lo, hi = np.percentile(vals, [10, 90], method="linear")
+    for i, v in enumerate(vals):
+        assert got[i] == min(max(float(v), lo), hi), (i, v, lo, hi)
+    assert got[9] == hi and got[10] == lo  # the planted tails clip
+    with _pytest.raises(ValueError):
+        winsorize(df, "v", 0.9, 0.1)
+
+
+def test_approx_percentile_twins_within_rank_error(spark):
+    """The three GK-sketch twins (winsorize / iqr_outliers /
+    robust_stats with approx_accuracy) must land within the sketch's
+    rank-error bound of their exact counterparts: bounds at ranks
+    within n/accuracy of target, and row-level disagreements confined
+    to values BETWEEN the exact and approx bounds."""
+    import numpy as np
+
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        iqr_outliers,
+        robust_stats,
+        winsorize,
+    )
+
+    # deterministic, dense, non-uniform: 10k values, ~quadratic ramp
+    n, acc = 10_000, 100
+    vals = sorted(((i * i) // 997) % 50_000 for i in range(n))
+    df = spark.createDataFrame(
+        [(i, v, "g") for i, v in enumerate(vals)], ["id", "v", "grp"]
+    )
+    arr = np.array(vals, dtype=float)
+    rank_err = n / acc  # GK guarantee: |rank(est) - target_rank| <= n/acc
+
+    def rank_of(x):
+        return np.searchsorted(arr, x, side="left")
+
+    # --- winsorize: approx bounds sit within rank error of p05/p95
+    wa = winsorize(df, "v", 0.05, 0.95, approx_accuracy=acc)
+    we = winsorize(df, "v", 0.05, 0.95)
+    lo_a = wa.agg(F.min("v_winsorized")).first()[0]
+    hi_a = wa.agg(F.max("v_winsorized")).first()[0]
+    assert abs(rank_of(lo_a) - 0.05 * n) <= rank_err + 1, (lo_a,)
+    assert abs(rank_of(hi_a) - 0.95 * n) <= rank_err + 1, (hi_a,)
+    # a clipped row's output differs exactly by the bound gap, and
+    # UNCLIPPED-by-both rows must be identical: disagreements are
+    # confined to the tails, with magnitude <= the bound gap (itself
+    # bounded by the value-space width of the rank-error band)
+    lo_e, hi_e = np.percentile(arr, [5, 95], method="linear")
+    diffs = (
+        wa.select("id", "v", F.col("v_winsorized").alias("a"))
+        .join(we.select("id", F.col("v_winsorized").alias("e")), "id")
+        .filter("a <> e")
+        .collect()
+    )
+    gap = max(abs(lo_a - lo_e), abs(hi_a - hi_e))
+    for r in diffs:
+        assert r["v"] <= max(lo_a, lo_e) or r["v"] >= min(hi_a, hi_e), r
+        assert abs(r["a"] - r["e"]) <= gap + 1e-9, r
+    # and the bound gap spans at most the rank-error band in value space
+    lo_band = arr[int(max(0.05 * n - rank_err - 1, 0)):
+                  int(min(0.05 * n + rank_err + 2, n))]
+    hi_band = arr[int(max(0.95 * n - rank_err - 1, 0)):
+                  int(min(0.95 * n + rank_err + 2, n))]
+    assert abs(lo_a - lo_e) <= (lo_band.max() - lo_band.min()) + 1e-9
+    assert abs(hi_a - hi_e) <= (hi_band.max() - hi_band.min()) + 1e-9
+
+    # --- iqr_outliers: flags may differ only between the two fences
+    oa = iqr_outliers(df, "v", "grp", approx_accuracy=acc)
+    oe = iqr_outliers(df, "v", "grp")
+    diff = (
+        oa.select("id", "v", F.col("is_outlier").alias("a"))
+        .join(oe.select("id", F.col("is_outlier").alias("e")), "id")
+        .filter("a <> e")
+        .collect()
+    )
+    if diff:
+        q1e, q3e = np.percentile(arr, [25, 75], method="linear")
+        # approx fences from the sketch values
+        q1a = float(arr[min(max(int(0.25 * n), 0), n - 1)])
+        q3a = float(arr[min(max(int(0.75 * n), 0), n - 1)])
+        k = 1.5
+        fences = sorted([
+            q1e - k * (q3e - q1e), q1a - k * (q3a - q1a),
+            q3e + k * (q3e - q1e), q3a + k * (q3a - q1a),
+        ])
+        for r in diff:
+            assert fences[0] <= r["v"] <= fences[-1], r
+
+    # --- robust_stats: approx median/mad within rank error of exact.
+    # Tie-robust: a value occupies the rank interval [left, right);
+    # the GK guarantee is that SOME rank in that interval is within
+    # n/acc of the target.
+    def rank_interval_hits(sorted_arr, x, target):
+        left = np.searchsorted(sorted_arr, x, side="left")
+        right = np.searchsorted(sorted_arr, x, side="right")
+        return left - (rank_err + 2) <= target <= right + (rank_err + 2)
+
+    ra = {r["grp"]: r.asDict()
+          for r in robust_stats(df, "v", "grp",
+                                approx_accuracy=acc).collect()}["g"]
+    assert rank_interval_hits(arr, ra["median"], 0.5 * n), ra
+    # mad = sketch_median(|2x − 2m|)/2, so the sketch value in the
+    # UN-doubled deviation array is mad itself, at rank ~n/2
+    dev = np.sort(np.abs(arr - ra["median"]))
+    assert rank_interval_hits(dev, ra["mad"], 0.5 * n), ra
+    assert ra["n"] == n
+
+
+def test_next_event_examples_matches_naive_model(spark):
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        next_event_examples,
+    )
+
+    rows = [
+        (1, "u1", BASE, "a"),
+        (2, "u1", BASE + dt.timedelta(minutes=1), "b"),
+        (3, "u1", BASE + dt.timedelta(minutes=2), "c"),
+        (4, "u1", BASE + dt.timedelta(minutes=3), "d"),
+        (5, "u1", BASE + dt.timedelta(minutes=3), "e"),  # tie by id
+        (6, "u2", BASE, "x"),
+        (7, "u2", BASE + dt.timedelta(minutes=1), "y"),  # too short
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id string, ts timestamp, event_type string"
+    )
+    got = {
+        r["event_id"]: (r["context"], r["label"])
+        for r in next_event_examples(df, k=2).collect()
+    }
+    # u1: examples start at the 3rd event; context preserves order
+    assert set(got) == {3, 4, 5}
+    assert got[3] == (["a", "b"], "c")
+    assert got[4] == (["b", "c"], "d")
+    assert got[5] == (["c", "d"], "e")  # same-ts tie broken by event_id
+
+
+def test_robust_stats_matches_numpy(spark):
+    import numpy as np
+
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        robust_stats,
+    )
+
+    data = {
+        "A": [1, 2, 3, 4, 100],          # odd n, wild outlier
+        "B": [10, 20, 30, 40],           # even n: interpolated halves
+    }
+    rows = [(g, v) for g, vs in data.items() for v in vs]
+    df = spark.createDataFrame(rows, ["grp", "v"])
+    got = {r["grp"]: r.asDict() for r in
+           robust_stats(df, "v", "grp").collect()}
+    for g, vs in data.items():
+        med = float(np.median(vs))
+        mad = float(np.median(np.abs(np.array(vs, dtype=float) - med)))
+        assert got[g]["median"] == med, (g, got[g], med)
+        assert got[g]["mad"] == mad, (g, got[g], mad)
+        assert got[g]["n"] == len(vs)
+    # the outlier barely moves the robust stats: A's median is 3, mad 1
+    assert got["A"]["median"] == 3.0 and got["A"]["mad"] == 1.0
+    assert got["B"]["median"] == 25.0 and got["B"]["mad"] == 10.0
+
+
+def test_grouping_sets_levels(spark):
+    import pytest
+
+    from polymarket_data_ingestor_spark.plans.catalog import CATALOG
+
+    rows = CATALOG["grouping_sets_revenue"].spark(
+        spark, "/root/testdata/sf0.001"
+    ).collect()
+    by_level = {"both": [], "flag": [], "grand": []}
+    for r in rows:
+        if r["l_returnflag"] is None:
+            by_level["grand"].append(r)
+        elif r["l_linestatus"] is None:
+            by_level["flag"].append(r)
+        else:
+            by_level["both"].append(r)
+    assert len(by_level["grand"]) == 1
+    assert len(by_level["flag"]) >= 2
+    assert len(by_level["both"]) >= len(by_level["flag"])
+    # levels are internally consistent: flag rows sum to the grand total
+    grand = by_level["grand"][0]
+    assert sum(r["n"] for r in by_level["flag"]) == grand["n"]
+    assert sum(r["n"] for r in by_level["both"]) == grand["n"]
+    assert sum(r["revenue"] for r in by_level["flag"]) == pytest.approx(
+        grand["revenue"]
+    )
+
+
+def test_ewma_matches_pandas_and_validates(spark):
+    """ewma == pandas ewm(adjust=False).mean() per key over the
+    (ts, event_id) total order, including same-timestamp tie-breaks."""
+    import pandas as pd
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import ewma
+
+    rows = [
+        (1, 10, BASE, 4.0),
+        (2, 10, BASE + dt.timedelta(minutes=1), 8.0),
+        (3, 10, BASE + dt.timedelta(minutes=1), 2.0),  # tie → event_id
+        (4, 10, BASE + dt.timedelta(minutes=2), 6.0),
+        (5, 20, BASE, 100.0),                          # singleton key
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, value double"
+    )
+    got = {r["event_id"]: r["ewma"]
+           for r in ewma(df, alpha=0.3).collect()}
+    for uid in (10, 20):
+        sub = sorted([r for r in rows if r[1] == uid],
+                     key=lambda r: (r[2], r[0]))
+        want = pd.Series([r[3] for r in sub]).ewm(
+            alpha=0.3, adjust=False).mean()
+        for (eid, *_), w in zip(sub, want):
+            assert got[eid] == _pytest.approx(w, abs=1e-12), (eid, w)
+    # first value is the seed exactly
+    assert got[1] == 4.0 and got[5] == 100.0
+    with _pytest.raises(ValueError):
+        ewma(df, alpha=0.0)
+
+
+def test_ewma_typed_keys_and_submillisecond_order(spark):
+    """Schema derives from the input (string keys work), and ordering
+    uses FULL timestamp precision: two events 500µs apart in the same
+    millisecond must recurse in time order, not order-column order."""
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import ewma
+
+    t0 = BASE
+    rows = [
+        # event_id order (7 then 3) OPPOSES sub-ms time order
+        (7, "assetA", t0 + dt.timedelta(microseconds=400), 10.0),
+        (3, "assetA", t0 + dt.timedelta(microseconds=900), 20.0),
+        (9, "assetB", t0, 5.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, asset string, ts timestamp, value double"
+    )
+    got = {r["event_id"]: r.asDict()
+           for r in ewma(df, alpha=0.5, key_col="asset").collect()}
+    # time order: 7 seeds, 3 follows — an ms-truncated sort would have
+    # let event_id decide and seed with 3 instead
+    assert got[7]["ewma"] == 10.0
+    assert got[3]["ewma"] == _pytest.approx(0.5 * 20.0 + 0.5 * 10.0)
+    assert got[9]["ewma"] == 5.0
+    # string key survives with its real type; ts_us carries full µs
+    assert got[7]["asset"] == "assetA"
+    assert got[3]["ts_us"] - got[7]["ts_us"] == 500
 
 
 def test_ewma_series_c_path_bit_identical_to_loop_and_seeding():
@@ -80,6 +1054,84 @@ def test_ewma_series_c_path_bit_identical_to_loop_and_seeding():
     assert ewma_series(np.array([]), 0.5).size == 0
     with _pytest.raises(ValueError, match="null/NaN"):
         ewma_series(np.array([1.0, float("nan")]), 0.5)
+
+
+def test_ewma_null_value_raises_loudly(spark):
+    """A NULL value must not silently poison the key's recursion (nor
+    silently be skipped, pandas-style): the kernel raises."""
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import ewma
+
+    df = spark.createDataFrame(
+        [(1, 10, BASE, 4.0), (2, 10, BASE + dt.timedelta(minutes=1), None)],
+        "event_id long, user_id long, ts timestamp, value double",
+    )
+    with _pytest.raises(Exception, match="null/NaN"):
+        ewma(df, alpha=0.5).collect()
+
+
+def test_holt_linear_matches_naive_model_and_reduces_to_ewma(spark):
+    """holt_linear == the literal coupled recursion per key over the
+    (ts, event_id) total order; with beta=0 the trend stays 0 and the
+    level recursion IS the ewma recursion — pinned bitwise."""
+    import pytest as _pytest
+
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        ewma,
+        holt_linear,
+    )
+
+    rows = [
+        (1, 10, BASE, 4.0),
+        (2, 10, BASE + dt.timedelta(minutes=1), 8.0),
+        (3, 10, BASE + dt.timedelta(minutes=1), 2.0),  # tie → event_id
+        (4, 10, BASE + dt.timedelta(minutes=2), 6.0),
+        (5, 20, BASE, 100.0),                          # singleton key
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, value double"
+    )
+    a, b = 0.3, 0.4
+    got = {r["event_id"]: r.asDict()
+           for r in holt_linear(df, alpha=a, beta=b).collect()}
+    for uid in (10, 20):
+        sub = sorted([r for r in rows if r[1] == uid],
+                     key=lambda r: (r[2], r[0]))
+        lv = tr = None
+        for eid, *_rest, v in [(r[0], r[1], r[2], r[3]) for r in sub]:
+            if lv is None:
+                lv, tr = v, 0.0
+            else:
+                prev = lv
+                s = lv + tr
+                lv = a * v + (1.0 - a) * s
+                tr = b * (lv - prev) + (1.0 - b) * tr
+            assert got[eid]["level"] == lv, eid
+            assert got[eid]["trend"] == tr, eid
+            assert got[eid]["forecast"] == lv + tr, eid
+    # seeds: level = first value exactly, trend = 0
+    assert got[1]["level"] == 4.0 and got[1]["trend"] == 0.0
+    assert got[5]["forecast"] == 100.0
+
+    # beta=0 degenerates to the EWMA recursion, bit-for-bit
+    lv_by_id = {r["event_id"]: r["level"]
+                for r in holt_linear(df, alpha=a, beta=0.0).collect()}
+    ew_by_id = {r["event_id"]: r["ewma"]
+                for r in ewma(df, alpha=a).collect()}
+    assert lv_by_id == ew_by_id
+
+    with _pytest.raises(ValueError):
+        holt_linear(df, alpha=0.0)
+    with _pytest.raises(ValueError):
+        holt_linear(df, beta=1.5)
+    # null value raises loudly (same contract as ewma)
+    dfn = spark.createDataFrame(
+        [(1, 10, BASE, 4.0), (2, 10, BASE + dt.timedelta(minutes=1), None)],
+        "event_id long, user_id long, ts timestamp, value double",
+    )
+    with _pytest.raises(Exception, match="null/NaN"):
+        holt_linear(dfn).collect()
 
 
 def test_finalize_rollup_constant_key_exact_zero_variance(spark):
@@ -425,12 +1477,14 @@ def test_sample_rollup_true_monoid_and_kmv(spark):
     """Bottom-k sample: merged per-split states equal the one-pass
     state BIT-FOR-BIT (true monoid, no approximation regime); the
     selection equals the window-form computation over distinct ids;
+    KMV estimates land within ~3/sqrt(k) of the exact distinct count;
     mixed-contract refusal."""
     import pytest as _pytest
 
     from polymarket_data_ingestor_spark.functions.scalars import hash32
     from polymarket_data_ingestor_spark.operators.analytics import (
         finalize_sample_rollup,
+        kmv_distinct_estimate,
         merge_sample_rollup,
         sample_rollup_state,
     )
@@ -478,6 +1532,21 @@ def test_sample_rollup_true_monoid_and_kmv(spark):
         for r in finalize_sample_rollup(full).collect()
     }
     assert got == want
+
+    # KMV: per-lang estimate within 3/sqrt(k-2) relative of exact
+    exact = {
+        r["lang"]: r["n"]
+        for r in docs.groupBy("lang")
+        .agg(F.count_distinct("doc_id").alias("n")).collect()
+    }
+    k = 8
+    for r in kmv_distinct_estimate(full).collect():
+        n = exact[r["lang"]]
+        if n < k:
+            assert r["n_distinct_est"] == float(n), r
+        else:
+            rel = abs(r["n_distinct_est"] - n) / n
+            assert rel <= 3.0 / (k - 2) ** 0.5, (r, n)
 
     with _pytest.raises(Exception, match="different \\(k, seed\\)"):
         merge_sample_rollup(
@@ -556,7 +1625,8 @@ def test_minhash_rollup_true_monoid_vs_naive(spark):
     """MinHash signature monoid: merged per-split states equal the
     one-pass state BIT-FOR-BIT (elementwise min — true monoid,
     idempotent even on OVERLAPPING splits); each slot equals the
-    naive groupBy-min of the derived hash; mixed contracts raise."""
+    naive groupBy-min of the derived hash; similarity equals the
+    slot-agreement fraction computed by hand; mixed contracts raise."""
     import pytest as _pytest
 
     from polymarket_data_ingestor_spark.functions.scalars import hash32
@@ -564,6 +1634,7 @@ def test_minhash_rollup_true_monoid_vs_naive(spark):
         finalize_minhash_rollup,
         merge_minhash_rollup,
         minhash_rollup_state,
+        minhash_similarity_pairs,
     )
 
     docs = spark.read.parquet(
@@ -588,8 +1659,8 @@ def test_minhash_rollup_true_monoid_vs_naive(spark):
 
     assert canon(merged) == canon(full)
 
-    # slot-by-slot naive cross-check (the Carter-Wegman family over one
-    # seeded base hash)
+    # slot-by-slot naive cross-check (the repo-standard Carter-Wegman
+    # family over one seeded base hash, same as minhash_signatures)
     from polymarket_data_ingestor_spark.operators.dedup import (
         MINHASH_PRIME,
     )
@@ -610,6 +1681,17 @@ def test_minhash_rollup_true_monoid_vs_naive(spark):
             .filter(F.col("slot") == slot).collect()
         }
         assert got == want, slot
+
+    # similarity == hand-computed slot agreement over the signatures
+    sigs = canon(full)
+    got_sim = {
+        (r["lang_a"], r["lang_b"]): r["est_jaccard"]
+        for r in minhash_similarity_pairs(full, keys).collect()
+    }
+    for (a, b), est in got_sim.items():
+        agree = sum(x == y for x, y in zip(sigs[a], sigs[b]))
+        assert est == agree / n, (a, b)
+    assert len(got_sim) == len(sigs) * (len(sigs) - 1) // 2
 
     with _pytest.raises(Exception, match="n_hashes, seed"):
         merge_minhash_rollup(
@@ -825,31 +1907,228 @@ def test_dq_split_routes_rows_with_labels(spark):
 
 
 def test_cusum_matches_naive_model_and_alarms(spark):
-    """CUSUM kernel against a hand recursion: resets at zero,
-    accumulates a sustained shift; seeding continues the recursion
-    bit-for-bit; NaN raises."""
+    """CUSUM against a hand recursion: resets at zero, accumulates a
+    sustained shift, alarms past the threshold; seeding continues the
+    recursion bit-for-bit; NaN raises; no-threshold form omits alarm."""
+    import datetime as dt
+
     import pytest as _pytest
 
     from polymarket_data_ingestor_spark.operators.analytics import (
+        cusum,
         cusum_series,
     )
 
+    BASE = dt.datetime(2024, 5, 1)
     vals = [50.0, 53.0, 52.0, 47.0, 46.0, 55.0]
-    h_all, l_all = cusum_series(vals, 50.5, 49.5)
+    rows = [
+        (i, 10, BASE + dt.timedelta(minutes=i), v)
+        for i, v in enumerate(vals)
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, value double"
+    )
+    got = {
+        r["event_id"]: (r["s_hi"], r["s_lo"], r["alarm"])
+        for r in cusum(df, target=50.0, slack=0.5, threshold=3.0).collect()
+    }
     # hand model: k_hi=50.5, k_lo=49.5
     sh = sl = 0.0
     for i, v in enumerate(vals):
         sh = max(0.0, sh + (v - 50.5))
         sl = max(0.0, sl + (49.5 - v))
-        assert (h_all[i], l_all[i]) == (sh, sl), i
-    # the sustained +shift accumulates on the high side: s_hi hits
-    # exactly 4.0 at step 2 (2.5 at step 1)
-    assert h_all[1] == 2.5 and h_all[2] == 4.0
+        assert got[i] == (sh, sl, sh > 3.0 or sl > 3.0), (i, got[i])
+    # the sustained +shift alarmed on the high side mid-series (s_hi
+    # hits exactly 4.0 > 3.0 at step 2; a pointwise test on 52 never
+    # would), and the strict > boundary is pinned: 2.5 at step 1 stays
+    # quiet
+    assert got[2][2] is True and got[1][2] is False
 
     # seeding continues bit-for-bit (streaming-restart contract)
+    h_all, l_all = cusum_series(vals, 50.5, 49.5)
     h2, l2 = cusum_series(vals[3:], 50.5, 49.5,
                           seed=(h_all[2], l_all[2]))
     assert h2 == h_all[3:] and l2 == l_all[3:]
 
+    # no threshold → no alarm column
+    assert "alarm" not in cusum(df, target=50.0).columns
+
     with _pytest.raises(ValueError, match="null/NaN"):
         cusum_series([1.0, float("nan")], 50.5, 49.5)
+
+
+_MINHASH_ROLLUP_SQL = r"""
+WITH
+  toks AS (SELECT source, string_split_regex(trim(text), '\s+') AS toks
+           FROM documents WHERE text IS NOT NULL),
+  grams AS (SELECT source,
+                   (('0x' || substr(md5(CAST(gram AS VARCHAR)), 1, 8))::BIGINT)
+                   AS h
+            FROM (SELECT source, unnest(list_distinct(list_transform(
+                    generate_series(0, greatest(len(toks) - 3, 0)),
+                    i -> array_to_string(toks[i+1:i+3], ' ')))) AS gram
+                  FROM toks)
+            WHERE gram <> ''),
+  slots AS (SELECT unnest(generate_series(0, 15)) AS slot),
+  sig AS (
+    SELECT source, CAST(slot AS BIGINT) AS slot,
+           min(((2 * slot + 1) * h + slot * 987654321)
+               % 2147483647) AS min_hash
+    FROM grams CROSS JOIN slots GROUP BY 1, 2
+  )
+SELECT source, slot, min_hash FROM sig
+"""
+
+
+def test_minhash_entry_empty_text_parity_with_oracle(spark, tmp_path):
+    """r11 review finding, pinned: the Arrow gram kernel drops the ''
+    gram (produced only by empty/whitespace-only texts) in-kernel, and
+    the catalog oracle's `gram <> ''` filter mirrors it — a
+    whitespace-only document contributes NOTHING on either side, and a
+    source whose docs are ALL empty has no signature row on either
+    side. The shipped test data has zero empty texts, so this is the
+    only pin exercising the divergence the old oracle had. The oracle
+    is the DuckDB form of the rollup the retired catalog entry carried."""
+    import duckdb
+
+    from polymarket_data_ingestor_spark.operators import dedup as D
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        finalize_minhash_rollup,
+        minhash_rollup_state,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta", "s_mixed"),
+         (2, "   ", "s_mixed"),       # whitespace-only: '' gram only
+         (3, "", "s_empty"),          # all-empty source
+         (4, None, "s_mixed")],       # NULL text: filtered either way
+        "doc_id long, text string, source string",
+    )
+    p = str(tmp_path / "docs")
+    docs.write.parquet(p)
+
+    # Spark side: the exact entry pipeline over this table
+    hashes = docs.filter(F.col("text").isNotNull()).select(
+        "source",
+        F.explode(D.gram_hashes_vectorized("text", 3)).alias("gh"),
+    )
+    got = [
+        (r["source"], r["slot"], r["min_hash"])
+        for r in finalize_minhash_rollup(
+            minhash_rollup_state(hashes, ("source",), "gh",
+                                 n_hashes=16, seed=0, prehashed=True)
+        ).orderBy("source", "slot").collect()
+    ]
+    assert {g[0] for g in got} == {"s_mixed"}  # s_empty: no row
+
+    # oracle side: the same rollup in DuckDB SQL over the same parquet
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}/*.parquet'")
+    want = con.execute(_MINHASH_ROLLUP_SQL).fetchall()
+    want = sorted((r[0], r[1], r[2]) for r in want)
+    assert got == want
+
+
+def test_dq_profile_and_funnel_survive_hostile_names(spark):
+    """stack()-free unpivots: quoted/dashed column names and
+    quote-bearing step names must neither break the plan nor inject
+    into it (review finding — the defect class dq_check documents)."""
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        dq_profile,
+        funnel_counts,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "x"), (2, None)], ["bid-ask", "o'brien"]
+    )
+    rows = {r["col_name"]: r for r in dq_profile(df).collect()}
+    assert set(rows) == {"bid-ask", "o'brien"}
+    assert rows["o'brien"]["n_nulls"] == 1
+    assert rows["bid-ask"]["completeness_permyriad"] == 10000
+
+    events = spark.createDataFrame(
+        [(1, "signup", "2024-01-01T00:00:00"),
+         (1, "O'Brien's market", "2024-01-01T00:00:01"),
+         (2, "signup", "2024-01-01T00:00:02")],
+        "user_id long, event_type string, ts string",
+    )
+    out = {
+        r["step_name"]: r["n_users"]
+        for r in funnel_counts(
+            events, ["signup", "O'Brien's market"]
+        ).collect()
+    }
+    assert out == {"signup": 2, "O'Brien's market": 1}
+
+
+def test_value_histogram_expression_like_column_name(spark):
+    """Bins must come from the NAMED column, not from arithmetic over
+    other columns that happen to spell its name (review finding: the
+    old f-string DIV parsed 'a-b' as a minus b)."""
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        value_histogram,
+    )
+
+    df = spark.createDataFrame(
+        [(100, 1, 5), (100, 1, 15)], ["a", "b", "a-b"]
+    )
+    rows = {r["bin"]: r["n"] for r in
+            value_histogram(df, "a-b", 0, 20, 2).collect()}
+    # values 5 and 15 -> bins 0 and 1; the old parse (a - b = 99)
+    # would put both in overflow
+    assert rows == {0: 1, 1: 1}
+
+
+def test_iqr_outliers_keeps_null_stratum_rows(spark):
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        iqr_outliers,
+    )
+
+    df = spark.createDataFrame(
+        [("a", 10), ("a", 12), ("a", 11), ("a", 1000),
+         (None, 5), (None, 6), (None, 7), (None, 900)],
+        "g string, v long",
+    )
+    out = iqr_outliers(df, "v", "g")
+    assert out.count() == 8  # NULL-stratum rows kept (review finding)
+    flags = {(r["g"], r["v"]): r["is_outlier"] for r in out.collect()}
+    assert flags[("a", 1000)] is True and flags[(None, 900)] is True
+    assert flags[("a", 11)] is False and flags[(None, 6)] is False
+
+
+def test_funnel_multipass_parity_on_null_timestamps(spark):
+    """A user whose step-0 events all have NULL ts must drop from BOTH
+    funnel forms (review finding: multipass kept the user with a NULL
+    frontier, diverging from the array form's contract)."""
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        funnel_steps,
+        funnel_steps_multipass,
+    )
+
+    events = spark.createDataFrame(
+        [(1, "view", "2024-01-01T00:00:00"),
+         (1, "click", "2024-01-01T00:00:01"),
+         (2, "view", None),
+         (2, "click", "2024-01-01T00:00:02")],
+        "user_id long, event_type string, ts string",
+    )
+    a = sorted(map(tuple, funnel_steps(
+        events, ["view", "click"]).collect()))
+    b = sorted(map(tuple, funnel_steps_multipass(
+        events, ["view", "click"]).collect()))
+    assert a == b
+    assert [r[0] for r in a] == [1]
+
+
+def test_robust_stats_n_counts_value_population(spark):
+    from polymarket_data_ingestor_spark.operators.analytics import (
+        robust_stats,
+    )
+
+    df = spark.createDataFrame(
+        [("a", 10), ("a", 20), ("a", None), ("a", None)],
+        "g string, v long",
+    )
+    row = robust_stats(df, "v", "g").first()
+    # median/MAD describe the 2 non-null values; n must agree
+    assert row["n"] == 2 and row["median"] == 15.0

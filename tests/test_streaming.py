@@ -943,30 +943,15 @@ def test_apply_cdc_stream_merges_into_lake(spark, tmp_path):
     assert after == day2_state             # untouched partition
 
 
-def _one_pass_per_key(rows, kernel):
-    """Run a serial kernel once over each user's whole series in event
-    order: the no-restart answer a stream split across runs must
-    reproduce. ``kernel(values)`` returns per-value output tuples."""
-    out = {}
-    for uid in sorted({r["user_id"] for r in rows}):
-        own = sorted((r for r in rows if r["user_id"] == uid),
-                     key=lambda r: (r["ts"], r["event_id"]))
-        for r, o in zip(own, kernel([r["value"] for r in own])):
-            out[r["event_id"]] = o
-    return out
-
-
 @pytest.mark.slow
 def test_live_ewma_matches_batch_across_restart(spark, tmp_path):
     """Streaming EWMA over an in-order availableNow drain must be
-    bit-identical to one pass of the EWMA kernel over each key's whole
-    series — INCLUDING when the stream is split across two runs sharing
-    a checkpoint (per-key state, one double, survives the restart)."""
+    bit-identical to the batch operator — INCLUDING when the stream is
+    split across two runs sharing a checkpoint (per-key state, one
+    double, survives the restart)."""
     import json as _json
 
-    from polymarket_data_ingestor_spark.operators.analytics import (
-        ewma_series,
-    )
+    from polymarket_data_ingestor_spark.operators.analytics import ewma
     from polymarket_data_ingestor_spark.streaming.live import live_ewma
 
     src = tmp_path / "ev"
@@ -1012,9 +997,13 @@ def test_live_ewma_matches_batch_across_restart(spark, tmp_path):
         r["event_id"]: r["ewma"]
         for r in spark.read.parquet(out).collect()
     }
-    want = _one_pass_per_key(
-        all_rows, lambda vs: ewma_series(vs, 0.25).tolist()
+    batch_df = spark.createDataFrame(
+        [(r["event_id"], r["user_id"],
+          datetime.fromisoformat(r["ts"]), r["value"])
+         for r in all_rows], schema
     )
+    want = {r["event_id"]: r["ewma"]
+            for r in ewma(batch_df, alpha=0.25).collect()}
     assert got == want and len(got) == 20  # bit-identical, incl. restart
 
     # TTL wiring: state_ttl_ms switches the plan to ProcessingTimeTimeout
@@ -1039,14 +1028,13 @@ def test_live_ewma_matches_batch_across_restart(spark, tmp_path):
 
 def test_live_holt_matches_batch_across_restart(spark, tmp_path):
     """Streaming Holt over an in-order availableNow drain must be
-    bit-identical to one pass of the Holt kernel over each key's whole
-    series — including when the stream is split across two runs sharing
-    a checkpoint (per-key state, the (level, trend) pair, survives the
-    restart)."""
+    bit-identical to the batch operator — including when the stream is
+    split across two runs sharing a checkpoint (per-key state, the
+    (level, trend) pair, survives the restart)."""
     import json as _json
 
     from polymarket_data_ingestor_spark.operators.analytics import (
-        holt_series,
+        holt_linear,
     )
     from polymarket_data_ingestor_spark.streaming.live import live_holt
 
@@ -1090,9 +1078,15 @@ def test_live_holt_matches_batch_across_restart(spark, tmp_path):
         r["event_id"]: (r["level"], r["trend"], r["forecast"])
         for r in spark.read.parquet(out).collect()
     }
-    want = _one_pass_per_key(
-        all_rows, lambda vs: zip(*holt_series(vs, 0.25, 0.5))
+    batch_df = spark.createDataFrame(
+        [(r["event_id"], r["user_id"],
+          datetime.fromisoformat(r["ts"]), r["value"])
+         for r in all_rows], schema
     )
+    want = {
+        r["event_id"]: (r["level"], r["trend"], r["forecast"])
+        for r in holt_linear(batch_df, alpha=0.25, beta=0.5).collect()
+    }
     assert got == want and len(got) == 20  # bit-identical, incl. restart
 
     # TTL plan switch + validation, same contract as live_ewma
@@ -2186,14 +2180,12 @@ def test_live_dedup_bloom_covers_bootstrap_and_exact_history(
 
 def test_live_cusum_matches_batch_across_restart(spark, tmp_path):
     """Streaming CUSUM over an in-order availableNow drain must be
-    bit-identical to one pass of the CUSUM kernel over each key's whole
-    series — including when the stream is split across two runs sharing
-    a checkpoint (per-key state, two doubles, survives the restart)."""
+    bit-identical to the batch operator — including when the stream is
+    split across two runs sharing a checkpoint (per-key state, two
+    doubles, survives the restart)."""
     import json as _json
 
-    from polymarket_data_ingestor_spark.operators.analytics import (
-        cusum_series,
-    )
+    from polymarket_data_ingestor_spark.operators.analytics import cusum
     from polymarket_data_ingestor_spark.streaming import live_cusum
 
     src = tmp_path / "cs"
@@ -2238,12 +2230,17 @@ def test_live_cusum_matches_batch_across_restart(spark, tmp_path):
         r["event_id"]: (r["s_hi"], r["s_lo"], r["alarm"])
         for r in spark.read.parquet(out).collect()
     }
-
-    def kernel(vs):
-        his, los = cusum_series(vs, 25.5, 24.5)  # target ± slack
-        return [(h, lo, h > 30.0 or lo > 30.0) for h, lo in zip(his, los)]
-
-    want = _one_pass_per_key(all_rows, kernel)
+    batch_df = spark.createDataFrame(
+        [(r["event_id"], r["user_id"],
+          datetime.fromisoformat(r["ts"]), r["value"])
+         for r in all_rows], schema
+    )
+    want = {
+        r["event_id"]: (r["s_hi"], r["s_lo"], r["alarm"])
+        for r in cusum(
+            batch_df, target=25.0, slack=0.5, threshold=30.0
+        ).collect()
+    }
     assert got == want and len(got) == 20
     assert any(a for _, _, a in got.values())  # the drift actually fired
 

@@ -1,9 +1,8 @@
-"""Local stand-in for the driver's correctness gate.
+"""Cross-engine check of the query catalog.
 
 Runs every catalog query on Spark AND its oracle SQL on DuckDB over the same
 parquet tables, then compares row count, column names, and (order-insensitive)
-values. Reports max float deltas so near-misses are visible before the real
-driver hashes them.
+values. Reports max float deltas so near-misses are visible.
 
 Usage: python tools/check.py [sf_dir] [query ...]
 """
