@@ -3015,7 +3015,7 @@ def minhash_rollup_state(
 
     ``prehashed=True`` takes ``item_col`` as the already-computed
     hash32 long instead of hashing here — the hot path when an Arrow
-    kernel produces item hashes directly (e.g.
+    kernel produces item hashes directly (the catalog entries feed
     ``dedup.gram_hashes_vectorized``, which shingles AND hashes ~4.5×
     faster than the Catalyst HOF form at sf0.1). The caller owns the
     seed actually baked into those hashes; ``seed`` still travels in

@@ -91,8 +91,8 @@ def decode_image(payload: bytes) -> "object":
 def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
     """Deterministic stand-in featurizer: byte-sum folds per stride.
 
-    Reproducible in SQL, so the full mapInPandas path can be value-checked
-    despite the stubbed decode.
+    Reproducible in SQL (see catalog oracle) so the full mapInPandas path is
+    correctness-gated despite the stubbed decode.
     """
     if not payload:
         return [0.0] * dim
@@ -166,8 +166,9 @@ def resize_media(
     BEFORE any shuffle that would otherwise move full-size media.
 
     The stride downsample is reproducible in SQL over an ASCII corpus
-    (every-k-th-char + md5), so the full Arrow path is value-checkable
-    despite the stubbed decode.
+    (every-k-th-char + md5 — see the catalog entry's documented
+    oracle), so the full Arrow path is value-checkable despite the
+    stubbed decode.
     """
     from hashlib import md5 as _md5
 

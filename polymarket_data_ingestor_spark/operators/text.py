@@ -494,6 +494,42 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return with_counts.select("*", pred.alias("pred_lang"))
 
 
+def vocabulary(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    min_df: int = 1,
+) -> DataFrame:
+    """Corpus vocabulary with tf / df / smoothed idf per term.
+
+    The tokenizer-training / vocab-pruning primitive: one explode +
+    one groupBy on the term — map-side partial counts, a single shuffle
+    keyed by term (the natural key; hot stopwords are handled by the
+    partial aggregation, not by the shuffle). ``idf = ln((1 + N) /
+    (1 + df)) + 1`` (sklearn's smoothed form), exact integer counts.
+    The corpus size N rides the plan as a broadcast 1-row aggregate —
+    fully lazy, no driver-side action.
+    """
+    n_docs = F.broadcast(
+        df.agg(F.countDistinct(id_col).cast("double").alias("__n_docs"))
+    )
+    toks = df.select(
+        F.col(id_col), F.explode(tokens(text_col)).alias("term")
+    ).filter(F.col("term") != "")
+    counts = toks.groupBy("term").agg(
+        F.count(F.lit(1)).alias("tf"),
+        F.countDistinct(id_col).alias("df"),
+    )
+    idf = (
+        F.log((F.lit(1.0) + F.col("__n_docs")) / (F.col("df") + 1)) + 1.0
+    )
+    return (
+        counts.crossJoin(n_docs)
+        .filter(F.col("df") >= min_df)
+        .select("term", "tf", "df", F.round(idf, 6).alias("idf"))
+    )
+
+
 def doc_tfidf_topk(
     df: DataFrame,
     k: int = 3,
@@ -502,11 +538,10 @@ def doc_tfidf_topk(
 ) -> DataFrame:
     """Top-k TF-IDF terms per document (keyword extraction).
 
-    Composes a smoothed idf (sklearn's ``ln((1 + N) / (1 + df)) + 1``)
-    with per-document term counts: one extra groupBy on (doc, term) and
-    a broadcast-friendly join on the term (the vocabulary is orders of
-    magnitude smaller than the token stream). Deterministic ranking:
-    score desc, then term.
+    Composes :func:`vocabulary`'s idf with per-document term counts: one
+    extra groupBy on (doc, term) and a broadcast-friendly join on the
+    term (the vocabulary is orders of magnitude smaller than the token
+    stream). Deterministic ranking: score desc, then term.
     """
     from pyspark.sql import Window
 
@@ -516,8 +551,8 @@ def doc_tfidf_topk(
     doc_tf = toks.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("doc_tf")
     )
-    # unrounded idf: the score must multiply the raw value or
-    # cross-engine ranks drift
+    # unrounded idf here (vocabulary() rounds its public column; the
+    # score must multiply the raw value or cross-engine ranks drift)
     n_docs = F.broadcast(
         df.agg(F.countDistinct(id_col).cast("double").alias("__n_docs"))
     )
@@ -553,7 +588,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Polynomial rolling hash over word hashes: ``acc = (acc*31 +
     hash32(word)) mod 1e9+7`` — an ``F.aggregate`` fold, JVM-side, exact
-    int64 arithmetic (reproducible in any engine).
+    int64 arithmetic (reproducible in any engine; see catalog oracle).
     Detects exact + near-exact (same word order) duplicates cheaply.
     """
     word_hashes = F.transform(tokens(text_col), lambda w: hash32(w))

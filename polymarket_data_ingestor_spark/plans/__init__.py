@@ -1,3 +1,4 @@
 from polymarket_data_ingestor_spark.plans.catalog import CATALOG, QueryDef, table
+from polymarket_data_ingestor_spark.plans import catalog_trainingdata  # noqa: F401
 
 __all__ = ["CATALOG", "QueryDef", "table"]

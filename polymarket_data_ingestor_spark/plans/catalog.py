@@ -2853,3 +2853,8 @@ def q_grouping_sets_revenue(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
     )
 
+
+# Training-data operator entries register themselves on import (placed at
+# module end: they import `register`/`table` from this partially-initialized
+# module, which works because those are defined above).
+from polymarket_data_ingestor_spark.plans import catalog_trainingdata  # noqa: E402,F401

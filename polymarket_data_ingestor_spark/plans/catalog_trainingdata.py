@@ -1632,8 +1632,7 @@ def _sql_jl_axis(j: int, d: int = 64, seed: int = 1) -> str:
 
 @register(
     "random_projection_embeddings",
-    # flipped from rows-only in r14 (the r13 window was at capacity;
-    # ROUND13.md §0) — unlike the fitted PCA rotation this construction
+    # unlike the fitted PCA rotation this construction
     # IS fully SQL-expressible because the matrix is a pure function of
     # (seed, dims); also pinned BIT-exact against a sequential python
     # fold in tests/test_trainingdata_ops.py
@@ -2908,13 +2907,9 @@ def q_frame_sample(spark, sf_dir):
 
 @register(
     "resize_media",
-    None,  # rows-only for WINDOW CAPACITY only (the r13 JL precedent):
-    # 149 oracle-paired is the ceiling that leaves one seed slot per
-    # round under the 50-slot / 2-round-staleness contract — a 150th
-    # would lock every future window to exactly the stalest cohort
-    # with zero room for code-changed seeds. The oracle is written and
-    # ready to flip when capacity frees (ASCII corpus => the stride
-    # downsample is SQL-reproducible, the multimodal_features recipe):
+    None,  # rows-only; the oracle is written and ready to pair
+    # (ASCII corpus => the stride downsample is SQL-reproducible, the
+    # multimodal_features recipe):
     #
     #   SELECT doc_id,
     #          octet_length(encode(r)) AS n_bytes, md5(r) AS digest
@@ -3738,10 +3733,6 @@ def q_substring_trim_materialize(spark, sf_dir):
 
 
 # --- Relational widening: CUBE, pivot, lag/lead deltas ---------------------
-# Registered here (not in plans/catalog.py) purely for registration-order
-# stability: catalog.py entries register first, so inserting there would
-# shift every later entry's position and disturb the driver's 50-row
-# correctness window (see the epilogue below).
 
 
 @register(
@@ -4002,98 +3993,3 @@ def q_funnel_user_paths_multipass(spark, sf_dir):
 
     e = table(spark, sf_dir, "events")
     return funnel_steps_multipass(e, ["view", "click", "purchase"])
-
-
-# ---------------------------------------------------------------------------
-# Registration-order epilogue: the driver records correctness rows for only
-# the first 50 catalog entries per round, so window composition rotates each
-# round to maximize first-party driver coverage under the staleness
-# contract (every oracle-paired entry should hold a driver row <= 2 rounds
-# old).
-#
-# Round 9 on: the ordering is COMPUTED, not hand-listed. The repo already
-# carries the full driver history (CORRECTNESS_r0*.json at the repo root),
-# so the window is a staleness-priority queue derived from it:
-#
-#   1. entries whose operator/wrapper code changed this round (the one
-#      fact the history cannot know — a short hand list per round);
-#   2. everything else by ascending last-driver-green round — never-green
-#      entries sort first (round 0), then the stalest greens — with
-#      registration order as the deterministic tie-break.
-#
-# Rows-only (no-oracle, ``sql is None``) entries are pinned PAST position
-# 50 programmatically — a window slot spent on a tier-3 entry can only
-# ever produce an `err` row (r7 lesson: approx_distinct_users /
-# approx_value_quantiles burned two slots). If the history files are
-# missing (package vendored without the repo root), the queue degrades to
-# registration order with rows-only still pinned last — never an import
-# error.
-import json as _json
-import re as _re
-from pathlib import Path as _Path
-
-from polymarket_data_ingestor_spark.plans.catalog import CATALOG as _CATALOG
-
-#: Entries whose Spark-side code (operator or catalog wrapper) changed in
-#: the CURRENT round — the only hand-maintained input to the queue; they
-#: take the head of the window regardless of staleness so every change
-#: gets a first-party driver row in its own round.
-_CODE_CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # r15: EMPTY by necessity — the r12-stale cohort is exactly 50
-    # entries (the driver's r13 and r14 samples were disjoint except
-    # dsir_weights, so both samples' complements are now 2 rounds
-    # stale), and the staleness contract fills every slot: seeding ANY
-    # code-changed entry would evict a must-rotate entry and fail
-    # test_no_oracle_entry_goes_three_rounds_stale. Entries whose code
-    # changes this optimization round are re-verified bit-exact locally
-    # at sf0.001 AND sf0.01/0.1 (tools/check.py, recorded in
-    # OPTIMIZATION_r15.md) and rotate into driver coverage naturally
-    # next round; any that already sit in the stale cohort get their
-    # first-party row this round for free.
-)
-
-
-def _driver_green_history() -> dict[str, int]:
-    """name -> latest round with a green driver row (hash_match true).
-
-    Reads every CORRECTNESS_r*.json the driver has committed at the repo
-    root; `err` and hash-mismatch rows do NOT count as green (that is
-    the point — r8's two err rows left their entries at round 0 and the
-    queue promotes them first)."""
-    last: dict[str, int] = {}
-    root = _Path(__file__).resolve().parents[2]
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = _re.search(r"r(\d+)", p.name)
-        if m is None:
-            continue
-        rnd = int(m.group(1))
-        try:
-            doc = _json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(doc, dict):
-            continue
-        for name, row in doc.items():
-            if isinstance(row, dict) and row.get("hash_match") is True:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-_reg_order = {n: i for i, n in enumerate(_CATALOG)}
-_oracle = [n for n, q in _CATALOG.items() if q.sql is not None]
-_rows_only = [n for n, q in _CATALOG.items() if q.sql is None]
-_last_green = _driver_green_history()
-_order = sorted(
-    _oracle,
-    key=lambda n: (
-        0 if n in _CODE_CHANGED_THIS_ROUND else 1,
-        _last_green.get(n, 0),
-        _reg_order[n],
-    ),
-) + _rows_only
-assert len(_order) == len(set(_order)) == len(_CATALOG), (
-    len(_order), len(_CATALOG)
-)
-assert len(_oracle) >= 50, len(_oracle)  # window is all oracle-paired
-for _n in _order:
-    _CATALOG[_n] = _CATALOG.pop(_n)

@@ -15,7 +15,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # ---------------------------------------------------------------------------
@@ -126,26 +125,5 @@ TICK_SCHEMA = StructType(
         StructField("side", StringType(), False),  # BID | ASK (sink labels)
         StructField("price", DoubleType(), False),
         StructField("size", DoubleType(), False),
-    ]
-)
-
-# Replay output carries an explicit global sequence so callers can reproduce
-# the reference's strict log-order output file (SURVEY §7 "global row order"):
-TICK_WITH_SEQ_SCHEMA = StructType(
-    list(TICK_SCHEMA.fields) + [StructField("seq", LongType(), False)]
-)
-
-# ---------------------------------------------------------------------------
-# Driver synthetic tables (TESTDATA.md) — explicit schemas so reads prune
-# columns deterministically.
-# ---------------------------------------------------------------------------
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType(), True),
-        StructField("ts", TimestampType(), True),
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("props", StringType(), True),
     ]
 )

@@ -10,346 +10,15 @@ when results stay correct.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from polymarket_data_ingestor_spark.operators import analytics as A
-from polymarket_data_ingestor_spark.operators import dedup as D
-from polymarket_data_ingestor_spark.operators import similarity as S
-from polymarket_data_ingestor_spark.operators import text as T
-from polymarket_data_ingestor_spark.operators.packing import pack_sequences
-from polymarket_data_ingestor_spark.operators.sampling import (
-    hash_split,
-    mixture_sample,
-    stratified_sample,
-    temperature_sample,
-)
-from polymarket_data_ingestor_spark.plans.catalog import CATALOG, table
+from polymarket_data_ingestor_spark.plans.catalog import CATALOG
 
 SF = "/root/testdata/sf0.01"
 
-#: Operator builds gated below that are not catalog entries: each is a
-#: package operator over one of the test tables, keyed by the name its
-#: gate uses.
-OPERATOR_ENTRIES = {}
-
-
-def _op(name):
-    def deco(fn):
-        OPERATOR_ENTRIES[name] = fn
-        return fn
-
-    return deco
-
-
-def entry(spark, name: str, sf: str = SF):
-    if name in CATALOG:
-        return CATALOG[name].spark(spark, sf)
-    return OPERATOR_ENTRIES[name](spark, sf)
-
 
 def plan_of(spark, name: str) -> str:
-    df = entry(spark, name)
+    df = CATALOG[name].spark(spark, SF)
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _docs(spark, sf):
-    return table(spark, sf, "documents")
-
-
-def _source_gram_hashes(spark, sf):
-    d = _docs(spark, sf).filter(F.col("text").isNotNull())
-    return d.select(
-        "source", F.explode(D.gram_hashes_vectorized("text", 3)).alias("gh")
-    )
-
-
-def _price_cents(spark, sf, *extra):
-    return table(spark, sf, "lineitem").select(
-        *extra,
-        "l_returnflag",
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
-    )
-
-
-@_op("minhash_lsh_pairs")
-def _minhash_lsh_pairs(spark, sf):
-    return D.minhash_lsh_pairs(_docs(spark, sf), num_hashes=16, bands=8)
-
-
-@_op("dedup_exact")
-def _dedup_exact(spark, sf):
-    return D.exact_dedup_groups(_docs(spark, sf))
-
-
-@_op("dedup_incremental")
-def _dedup_incremental(spark, sf):
-    docs = _docs(spark, sf)
-    return D.dedup_against(
-        docs.filter(F.col("doc_id") % 2 == 1),
-        docs.filter(F.col("doc_id") % 2 == 0),
-    ).select("doc_id", "lang", "source", "n_chars")
-
-
-@_op("dedup_transitive_materialize")
-def _dedup_transitive_materialize(spark, sf):
-    docs = _docs(spark, sf)
-    pairs = D.minhash_lsh_pairs(docs, num_hashes=16, bands=8)
-    return D.drop_dup_clusters(docs, pairs).select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-
-
-@_op("minhash_signatures")
-def _minhash_signatures(spark, sf):
-    d = _docs(spark, sf).filter(F.col("doc_id") < 60)
-    return D.minhash_signatures(d, num_hashes=16)
-
-
-@_op("simhash_docs")
-def _simhash_docs(spark, sf):
-    return D.simhash(_docs(spark, sf).filter(F.col("doc_id") < 100), bits=32)
-
-
-@_op("hamming_dup_pairs")
-def _hamming_dup_pairs(spark, sf):
-    d = _docs(spark, sf).filter(F.col("doc_id") < 100)
-    return D.hamming_pairs(D.simhash(d, bits=32), max_distance=4)
-
-
-@_op("benchmark_decontaminate")
-def _benchmark_decontaminate(spark, sf):
-    d = _docs(spark, sf)
-    return D.benchmark_ngram_overlap(
-        d.filter(F.col("doc_id") % 50 != 0),
-        d.filter(F.col("doc_id") % 50 == 0),
-        n=3,
-        threshold=0.05,
-    )
-
-
-@_op("line_dedup_clean")
-def _line_dedup_clean(spark, sf):
-    d = _docs(spark, sf).filter(F.col("doc_id") < 200)
-    aug = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("(c) "),
-            F.col("source"),
-            F.lit(" all rights reserved\n"),
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 2 == 0,
-                F.lit("\nsubscribe to our newsletter"),
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return D.remove_boilerplate_lines(aug, min_docs=5)
-
-
-@_op("substring_dup_pairs")
-def _substring_dup_pairs(spark, sf):
-    return D.substring_dup_pairs(
-        _docs(spark, sf), k=8, min_shared=2, max_gram_docs=50
-    )
-
-
-@_op("substring_trim_materialize")
-def _substring_trim_materialize(spark, sf):
-    return D.substring_trim_docs(_docs(spark, sf), k=8)
-
-
-@_op("cosine_topk")
-def _cosine_topk(spark, sf):
-    emb = table(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return S.cosine_topk(emb, queries, k=5).select(
-        "query_id", "vec_id", "cos", "rank"
-    )
-
-
-@_op("label_centroids")
-def _label_centroids(spark, sf):
-    return S.label_centroids(table(spark, sf, "embeddings")).select(
-        "label", "n_vecs", F.posexplode("centroid").alias("dim", "centroid_v")
-    )
-
-
-@_op("hashed_embedding_docs")
-def _hashed_embedding_docs(spark, sf):
-    return S.hashed_embedding(_docs(spark, sf), n_dims=64, dense=False)
-
-
-@_op("stratified_sample")
-def _stratified_sample(spark, sf):
-    rates = {"en": 0.8, "de": 0.5, "fr": 0.25, "zh": 0.1}
-    return stratified_sample(_docs(spark, sf), rates, seed=1).select(
-        "doc_id", "lang", "source"
-    )
-
-
-@_op("mixture_sample")
-def _mixture_sample(spark, sf):
-    budgets = {f"src{i}": 600 + 300 * (i % 3) for i in range(20)}
-    return mixture_sample(_docs(spark, sf), budgets)
-
-
-@_op("hash_split_docs")
-def _hash_split_docs(spark, sf):
-    return hash_split(
-        _docs(spark, sf), {"train": 0.90, "val": 0.05, "test": 0.05}, seed=7
-    ).select("doc_id", "lang", "source", "split")
-
-
-@_op("temperature_sample_docs")
-def _temperature_sample_docs(spark, sf):
-    return temperature_sample(
-        _docs(spark, sf),
-        temperature=2.0,
-        target_fraction=0.5,
-        stratum_col="source",
-        seed=3,
-    ).select("doc_id", "lang", "source")
-
-
-@_op("pack_sequences")
-def _pack_sequences(spark, sf):
-    # shard_size 100 → many shards even on the small fixture, so the
-    # two-level prefix sum is genuinely exercised
-    return pack_sequences(_docs(spark, sf), seq_len=128, shard_size=100)
-
-
-@_op("vocab_coverage")
-def _vocab_coverage(spark, sf):
-    return T.vocab_coverage(_docs(spark, sf), top_k=16)
-
-
-@_op("doc_bigram_lm")
-def _doc_bigram_lm(spark, sf):
-    return T.bigram_lm_score(_docs(spark, sf))
-
-
-@_op("quality_percentile_filter")
-def _quality_percentile_filter(spark, sf):
-    return T.quality_percentile_filter(_docs(spark, sf), q=0.5).select(
-        "doc_id", "lang", "quality", "q_rank"
-    )
-
-
-@_op("inverted_index")
-def _inverted_index(spark, sf):
-    return T.inverted_index(_docs(spark, sf), min_df=2, max_postings=1000)
-
-
-@_op("bm25_search")
-def _bm25_search(spark, sf):
-    return T.bm25_scores(_docs(spark, sf), ("query", "window", "scan"),
-                         top_n=50)
-
-
-@_op("source_token_drift")
-def _source_token_drift(spark, sf):
-    return T.source_token_drift(_docs(spark, sf))
-
-
-@_op("term_pmi_pairs")
-def _term_pmi_pairs(spark, sf):
-    return T.term_pmi_pairs(_docs(spark, sf), min_pair_docs=5, top_k=100)
-
-
-@_op("bpe_train_merges")
-def _bpe_train_merges(spark, sf):
-    merges = T.train_bpe(_docs(spark, sf), n_merges=8)
-    return spark.createDataFrame(
-        [(i,) + m for i, m in enumerate(merges)],
-        "rank long, left string, right string, merged string, n long",
-    )
-
-
-@_op("funnel_conversion")
-def _funnel_conversion(spark, sf):
-    return A.funnel_counts(
-        table(spark, sf, "events"), ["view", "click", "purchase"]
-    )
-
-
-@_op("part_supplier_pagerank")
-def _part_supplier_pagerank(spark, sf):
-    li = table(spark, sf, "lineitem").select(
-        F.concat(F.lit("p:"), F.col("l_partkey")).alias("src"),
-        F.concat(F.lit("s:"), F.col("l_suppkey")).alias("dst"),
-    )
-    return A.pagerank(li, n_iter=8)
-
-
-@_op("winsorized_prices_approx")
-def _winsorized_prices_approx(spark, sf):
-    c = _price_cents(spark, sf, "l_orderkey", "l_linenumber")
-    return A.winsorize(c, "cents", 0.05, 0.95, approx_accuracy=10000)
-
-
-@_op("price_outliers")
-def _price_outliers(spark, sf):
-    c = _price_cents(spark, sf, "l_orderkey", "l_linenumber")
-    return A.iqr_outliers(c, "cents", "l_returnflag", k_tenths=5)
-
-
-@_op("price_outliers_approx")
-def _price_outliers_approx(spark, sf):
-    c = _price_cents(spark, sf, "l_orderkey", "l_linenumber")
-    return A.iqr_outliers(
-        c, "cents", "l_returnflag", k_tenths=5, approx_accuracy=10000
-    )
-
-
-@_op("robust_price_stats_approx")
-def _robust_price_stats_approx(spark, sf):
-    return A.robust_stats(
-        _price_cents(spark, sf), "cents", "l_returnflag",
-        approx_accuracy=10000,
-    )
-
-
-@_op("minhash_rollup")
-def _minhash_rollup(spark, sf):
-    return A.finalize_minhash_rollup(
-        A.minhash_rollup_state(_source_gram_hashes(spark, sf), ("source",),
-                               "gh", n_hashes=16, seed=0, prehashed=True)
-    )
-
-
-@_op("minhash_source_similarity")
-def _minhash_source_similarity(spark, sf):
-    st = A.minhash_rollup_state(_source_gram_hashes(spark, sf), ("source",),
-                                "gh", n_hashes=16, seed=0, prehashed=True)
-    return A.minhash_similarity_pairs(st, ("source",))
-
-
-@_op("minhash_pairs_banded")
-def _minhash_pairs_banded(spark, sf):
-    st = A.minhash_rollup_state(_source_gram_hashes(spark, sf), ("source",),
-                                "gh", n_hashes=16, seed=0, prehashed=True)
-    return A.minhash_similarity_pairs(st, ("source",), min_similarity=0.05,
-                                      banded=True)
-
-
-@_op("corr_rollup")
-def _corr_rollup(spark, sf):
-    cols = ("n_chars", "n_tokens", "n_unique_tokens")
-    feats = T.token_stats(
-        _docs(spark, sf).filter(
-            F.col("text").isNotNull() & F.col("source").isNotNull())
-    ).select("doc_id", "source", *cols)
-    keys = ("source",)
-    hist = A.corr_rollup_state(
-        feats.filter(F.col("doc_id") % 10 < 7), keys, cols)
-    delta = A.corr_rollup_state(
-        feats.filter(F.col("doc_id") % 10 >= 7), keys, cols)
-    return A.finalize_corr_rollup(
-        A.merge_corr_rollup(hist, delta, keys=keys), cols)
 
 
 def test_filter_pushdown_and_column_pruning(spark):
@@ -939,6 +608,36 @@ def test_spread_scan_python_byte_parser_fallback(spark):
         assert _max_split_bytes(_NoJvmSpark(spark, raw)) == expected, raw
 
 
+def test_cube_is_one_expand_one_shuffle(spark):
+    """CUBE must expand grouping sets inside a single aggregation — one
+    Expand node feeding one hash-partition exchange, not a rescan or
+    union per grouping set."""
+    plan = plan_of(spark, "cube_lineitem")
+    assert plan.count("Expand") >= 1
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "partial_sum" in plan  # map-side partials survive the cube
+
+
+def test_pivot_is_two_chained_aggregations(spark):
+    """Explicit pivot values lower to Spark's two chained aggregations —
+    pre-agg on (year, status), then pivotfirst per year — BOTH with
+    map-side partials, so each shuffle carries already-aggregated rows.
+    Value discovery would prepend a distinct-scan job; a union-per-value
+    plan would rescan the table."""
+    plan = plan_of(spark, "pivot_status_year")
+    assert plan.count("Exchange hashpartitioning") == 2
+    assert "partial_sum" in plan and "partial_pivotfirst" in plan
+    assert "Union" not in plan
+
+
+def test_window_deltas_partition_shuffle_only(spark):
+    """lag/lead over user_id must hash-partition once and sort within
+    partitions — never collapse to a single-partition global window."""
+    plan = plan_of(spark, "user_event_deltas")
+    assert "Exchange hashpartitioning(user_id" in plan
+    assert "Exchange SinglePartition" not in plan
+
+
 def test_vocab_coverage_takeordered_and_broadcast(spark):
     """Top-k vocab must lower to TakeOrdered (per-partition top-k + k-row
     merge, never a full sort shuffle) and join the token stream via
@@ -991,7 +690,7 @@ def test_bigram_lm_single_corpus_scan(spark):
     with the V anti-collapse guard removed) the corpus is scanned and
     exploded up to four times — a 100-TB bug invisible at test scale.
     Runtime plan required: reuse is an AQE decision, not a static one."""
-    df = entry(spark, "doc_bigram_lm")
+    df = CATALOG["doc_bigram_lm"].spark(spark, SF)
     df.collect()
     final = (
         df._jdf.queryExecution().executedPlan().toString()
@@ -1008,7 +707,7 @@ def test_substring_dup_single_gram_extraction(spark):
     per consumer — four corpus passes). Runtime plan: reuse is AQE's
     call. Also: no cartesian anywhere — candidates meet on gram-hash
     equi-keys only."""
-    df = entry(spark, "substring_dup_pairs")
+    df = CATALOG["substring_dup_pairs"].spark(spark, SF)
     df.collect()
     final = (
         df._jdf.queryExecution().executedPlan().toString()
@@ -1608,7 +1307,11 @@ def test_minhash_similarity_materializes_state_once(spark):
     job still re-ran the build): the returned plan reads the
     keys-sized checkpointed blocks, so it contains ZERO FileScans and
     no Python — the corpus was scanned exactly once, at call time."""
-    df = entry(spark, "minhash_source_similarity", "/root/testdata/sf0.001")
+    from polymarket_data_ingestor_spark.plans.catalog import CATALOG
+
+    df = CATALOG["minhash_source_similarity"].spark(
+        spark, "/root/testdata/sf0.001"
+    )
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FileScan" not in plan, plan  # reads checkpointed state
@@ -1628,8 +1331,10 @@ def test_pairwise_banded_entries_plan_no_cartesian(spark):
     localCheckpoint). Python stays out of the join: the minhash
     entry's single ArrowEvalPython is the gram-hash kernel below the
     state aggregate, which runs at build time, not in this plan."""
+    from polymarket_data_ingestor_spark.plans.catalog import CATALOG
+
     for name in ("minhash_pairs_banded", "kmv_overlap_banded"):
-        df = entry(spark, name, "/root/testdata/sf0.001")
+        df = CATALOG[name].spark(spark, "/root/testdata/sf0.001")
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, (name, plan)
@@ -1647,9 +1352,8 @@ def test_catalog_scan_budget_no_silent_rederivation(spark):
     the parent subtree — the single worst plan regression this suite
     has caught (a 4x corpus re-scan in an early doc_bigram_lm, and a
     ~2^rounds lineage explosion in pagerank before per-round
-    checkpoints) — so the budget is pinned per entry (catalog entries
-    and the operator builds above) and any new double-scan must raise
-    it here, with a reason, to ship.
+    checkpoints) — so the budget is pinned per entry and any new
+    double-scan must raise it here, with a reason, to ship.
 
     A budget of 2 is the agg-then-join-back pattern (the SCAN is the
     cheap half — column-pruned parquet; the point of the pattern is
@@ -1660,7 +1364,13 @@ def test_catalog_scan_budget_no_silent_rederivation(spark):
     import collections
     import re
 
+    from polymarket_data_ingestor_spark.plans.catalog import CATALOG
+
     budgets = {
+        # compositions: one pruned re-read per pipeline stage (was 12
+        # before the quality-score self-join was removed in r9)
+        "curation_pipeline": 6,
+        "funnel_user_paths_multipass": 7,
         # corpus + marginals + broadcast vocab restriction
         "term_pmi_pairs": 5,
         # existing-corpus digests + bands + incoming batch
@@ -1668,7 +1378,16 @@ def test_catalog_scan_budget_no_silent_rederivation(spark):
         # pair generation + per-side gram rollups / verify joins
         "substring_dup_pairs": 4,
         "hamming_dup_pairs": 4,
+        "embedding_dup_pairs_lsh": 4,
         "doc_bigram_lm": 4,
+        "dedup_histogram": 4,
+        "containment_pairs": 4,
+        # recall gates: approximate path + exact reference top-k
+        "pq_topk_recall": 3,
+        "ivf_topk_recall": 3,
+        "cosine_topk_lsh_recall": 3,
+        "doc_tfidf_topk": 3,
+        "dedup_near_materialize": 3,
         # positional-gram kernel pass + token stream + per-doc base
         # row — three column-pruned reads; the kernel subtree PRINTS
         # twice in the initial plan (both consumers of the anchored
@@ -1676,12 +1395,33 @@ def test_catalog_scan_budget_no_silent_rederivation(spark):
         # test_substring_trim_plan_linear_no_self_join pins exactly
         # one ArrowEvalPython in the FINAL plan
         "substring_trim_materialize": 4,
+        # semdedup: assignment projection + the two sides of the
+        # within-cluster candidate equi-join — pair-entry convention
+        # (embedding_dup_pairs_lsh reads 4); the quadratic is bounded
+        # by n_clusters, never a cartesian
+        "embedding_cluster_dedup": 3,
+        # pure composition over semdedup — same 3 reads, the balance
+        # stage adds only an exchange
+        "cluster_balanced_sample": 3,
+        # production-codebook twin: same semdedup plan (the KMeans fit
+        # runs eagerly outside the returned plan)
+        "semdedup_kmeans": 3,
+        # dsir: per-doc counts + corpus histogram (featurize twice,
+        # both map-side-combined pruned scans — the documented trade
+        # against shuffling raw feature instances) + the target slice
+        "dsir_weights": 3,
+        "dsir_resample": 3,
     }
     default_budget = 2
 
     over = {}
-    for name in [*CATALOG, *OPERATOR_ENTRIES]:
-        plan = plan_of(spark, name)
+    for name, q in CATALOG.items():
+        plan = (
+            q.spark(spark, SF)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
         locs = re.findall(r"Location: [^\[]*\[([^\]]*)", plan)
         per_table = collections.Counter(loc.split(",")[0] for loc in locs)
         worst = max(per_table.values(), default=0)
@@ -1700,7 +1440,7 @@ def test_substring_trim_plan_linear_no_self_join(spark):
     anti-join, final per-doc left join). Runtime reuse is AQE's call
     (the substring_dup_pairs convention): collect, then read the
     FINAL plan."""
-    df = entry(spark, "substring_trim_materialize")
+    df = CATALOG["substring_trim_materialize"].spark(spark, SF)
     df.collect()
     final = (
         df._jdf.queryExecution().executedPlan().toString()
@@ -1747,7 +1487,7 @@ def test_iterative_entries_release_their_caches(spark):
         "bpe_train_merges",            # vocab persist per merge round
         "dedup_incremental",           # existing-side persist-once
     ):
-        entry(spark, name, sf).write.format("noop").mode(
+        CATALOG[name].spark(spark, sf).write.format("noop").mode(
             "overwrite"
         ).save()
         assert cm.isEmpty(), f"{name} left persisted relations behind"

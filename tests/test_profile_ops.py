@@ -1957,29 +1957,6 @@ def test_cusum_matches_naive_model_and_alarms(spark):
         cusum_series([1.0, float("nan")], 50.5, 49.5)
 
 
-_MINHASH_ROLLUP_SQL = r"""
-WITH
-  toks AS (SELECT source, string_split_regex(trim(text), '\s+') AS toks
-           FROM documents WHERE text IS NOT NULL),
-  grams AS (SELECT source,
-                   (('0x' || substr(md5(CAST(gram AS VARCHAR)), 1, 8))::BIGINT)
-                   AS h
-            FROM (SELECT source, unnest(list_distinct(list_transform(
-                    generate_series(0, greatest(len(toks) - 3, 0)),
-                    i -> array_to_string(toks[i+1:i+3], ' ')))) AS gram
-                  FROM toks)
-            WHERE gram <> ''),
-  slots AS (SELECT unnest(generate_series(0, 15)) AS slot),
-  sig AS (
-    SELECT source, CAST(slot AS BIGINT) AS slot,
-           min(((2 * slot + 1) * h + slot * 987654321)
-               % 2147483647) AS min_hash
-    FROM grams CROSS JOIN slots GROUP BY 1, 2
-  )
-SELECT source, slot, min_hash FROM sig
-"""
-
-
 def test_minhash_entry_empty_text_parity_with_oracle(spark, tmp_path):
     """r11 review finding, pinned: the Arrow gram kernel drops the ''
     gram (produced only by empty/whitespace-only texts) in-kernel, and
@@ -1987,8 +1964,7 @@ def test_minhash_entry_empty_text_parity_with_oracle(spark, tmp_path):
     whitespace-only document contributes NOTHING on either side, and a
     source whose docs are ALL empty has no signature row on either
     side. The shipped test data has zero empty texts, so this is the
-    only pin exercising the divergence the old oracle had. The oracle
-    is the DuckDB form of the rollup the retired catalog entry carried."""
+    only pin exercising the divergence the old oracle had."""
     import duckdb
 
     from polymarket_data_ingestor_spark.operators import dedup as D
@@ -1996,6 +1972,7 @@ def test_minhash_entry_empty_text_parity_with_oracle(spark, tmp_path):
         finalize_minhash_rollup,
         minhash_rollup_state,
     )
+    from polymarket_data_ingestor_spark.plans.catalog import CATALOG
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta", "s_mixed"),
@@ -2021,10 +1998,10 @@ def test_minhash_entry_empty_text_parity_with_oracle(spark, tmp_path):
     ]
     assert {g[0] for g in got} == {"s_mixed"}  # s_empty: no row
 
-    # oracle side: the same rollup in DuckDB SQL over the same parquet
+    # oracle side: the entry's own SQL over the same parquet
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}/*.parquet'")
-    want = con.execute(_MINHASH_ROLLUP_SQL).fetchall()
+    want = con.execute(CATALOG["minhash_rollup"].sql).fetchall()
     want = sorted((r[0], r[1], r[2]) for r in want)
     assert got == want
 

@@ -1,6 +1,6 @@
 """Tests for dedup / similarity / text / multimodal operator APIs.
 
-The catalog oracles (tools/check.py, driver t2) pin cross-engine value
+The catalog oracles (tools/check.py) pin cross-engine value
 parity; these tests pin operator *semantics*: LSH recall vs brute force,
 dedup materialization, Hamming near-dup behavior, and the multimodal
 mapInPandas plumbing.
@@ -919,8 +919,8 @@ def test_substring_dup_hot_window_cap(spark):
 # ---------------------------------------------------------------------------
 # EXACTNESS tier-2 recall at 10x scale: the small-fixture recall pins above
 # prove the banding math; these re-assert it at the first size where the
-# occupancy rule could break (the tools/scale_slope.py fixture shape —
-# 10 perturbed copies of the sf0.01 tables, ~5k rows).
+# occupancy rule could break (10 perturbed copies of the sf0.01 tables,
+# ~5k rows).
 # ---------------------------------------------------------------------------
 
 def _docs_10x(spark):
@@ -961,9 +961,8 @@ def test_minhash_lsh_recall_at_10x_scale(spark):
 
 def test_embedding_lsh_recall_at_10x_scale(spark):
     """Occupancy-rule recall at 5k vectors: band_bits raised by
-    log2(10)≈3 per the documented rule (8 → 11, exactly what
-    tools/scale_slope.py and the catalog's scale story prescribe); the
-    planted cos≈0.99 twins must still surface at ≥95% recall."""
+    log2(10)≈3 per the documented rule (8 → 11); the planted cos≈0.99
+    twins must still surface at ≥95% recall."""
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     ecopies = [
         emb.select(
