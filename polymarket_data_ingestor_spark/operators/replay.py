@@ -83,7 +83,7 @@ TICK_COLUMNS = ["timestamp", "kind", "market", "asset", "side", "price", "size"]
 REPLAY_KEY = ["file_hour", "line_id", "msg_idx"]
 ORDER_COLUMNS = [*REPLAY_KEY, "emit_idx"]
 
-# Packed message kind codes (see replay_feed_messages).
+# Packed message kind codes (see pack_feed_messages).
 KIND_BOOK, KIND_CHANGE, KIND_TRADE = 0, 1, 2
 
 #: Output enum lookup tables for the kernel: indexing these with a
@@ -117,7 +117,7 @@ def _replay_rows(pdf: pd.DataFrame, resets: list[int], book: list) -> pd.DataFra
     ``book`` is left holding the state after the last row, so a group
     that spans two frames replays exactly as if it were one.
 
-    Input is the packed form produced by :func:`replay_feed_messages`:
+    Input is the packed form produced by :func:`pack_feed_messages`:
     levels arrive as flat ``array<double>`` columns (``[p1, s1, p2, s2,
     ...]``; change prices sign-encode the side, BUY positive / SELL
     negative) — numpy-friendly, no per-level dicts through Arrow. A
@@ -314,65 +314,16 @@ def _replay_partition(
         yield _replay_rows(pdf, np.flatnonzero(starts).tolist(), book)
 
 
-def replay_feed_messages(
-    feed: DataFrame,
-    markets: Iterable[str] | None = None,
-    in_log_order: bool = False,
-    split_at_snapshots: bool = False,
-    snapshots_per_segment: int = 1000,
-    assume_skewed: bool = False,
-) -> DataFrame:
-    """Feed-message rows → tick DataFrame via the stateful kernel.
+def pack_feed_messages(feed: DataFrame) -> DataFrame:
+    """Feed-message rows → the packed rows the replay kernel reads.
 
-    ``feed`` is the output of :func:`...sources.frames.parse_feed_messages`.
-    ``markets`` is the optional market-id filter (F2,
-    ``cli/src/tick_generator.rs:229-231``) — applied *before* the shuffle so
-    the filter prunes at the scan, exactly as the reference checks it before
-    mutating state.
-
-    ``in_log_order=True`` globally sorts the result by the replay key,
-    reproducing the reference's strict interleaved log-order Parquet. Default
-    keeps per-asset-contiguous order (cheaper: no extra global sort).
-
-    ``split_at_snapshots=True`` is the hot-asset skew mitigation: a
-    ``book`` snapshot fully resets per-asset state, so an asset's stream
-    factors into independent segments at snapshot boundaries — segment 0
-    (pre-snapshot diffs against an empty book, ``tick_generator.rs:339-343``)
-    plus one segment per ``snapshots_per_segment`` snapshots (coarse on
-    purpose: the stride is also the gate threshold below, and the window
-    and join that assign segments only pay off for an asset hot enough
-    to reach it). The kernel then partitions and resets on
-    ``(asset_id, segment)`` instead of ``asset_id``, spreading a
-    hyper-active asset across executors;
-    outputs are identical row-for-row (the order columns still
-    reconstruct global order).
-
-    Safe-by-default: a cheap column-pruned gate pass (per-(asset, file)
-    book-event counts — no array packing, no window) runs FIRST, and
-    when no (asset, file) cell reaches ``snapshots_per_segment`` the
-    plain per-asset path is taken — the ordinal window / carry-join /
-    segment machinery never enters the plan, so on a uniform profile
-    the only cost over the default is the gate's tokenize+count scan.
-    When the gate fires, the machinery costs a per-(asset, file)
-    ordinal window — its sorts parallelize across files, so no stage is
-    serial in one asset's volume — plus the per-file VALID-snapshot
-    totals pass (boundaries land only on snapshots the kernel will
-    apply; malformed books never open a segment). Per-file resolution
-    means an asset whose snapshots spread just under
-    ``snapshots_per_segment`` per file never splits — pick the stride
-    at or below the hottest asset's per-file snapshot density.
-    ``assume_skewed=True`` skips the gate and runs the machinery
-    unconditionally — for callers that already established skew
-    externally (:func:`replay`'s raw-text manifest gate).
-    Measured on the bench's skewed fixture (one asset = 50% of 1.2M
-    messages, sf0.1): ~3.9 s vs ~11 s unsplit.
+    ``feed`` is :func:`...sources.frames.parse_feed_messages` output,
+    batch or streaming. Keeps book, price-change and trade messages
+    that carry an asset, market and timestamp, and projects each to the
+    replay key, ``timestamp``, ``market``, a ``kind_code`` and three
+    flat level arrays. The validity rules live here, so batch replay
+    and :func:`...streaming.live.live_ticks` reject the same messages.
     """
-    if markets is not None:
-        ids = list(markets)
-        # Literal IN for small sets — Catalyst pushes it to the scan; for
-        # very large sets callers should pre-join a broadcast id table.
-        feed = feed.filter(F.col("market").isin(ids))
-
     # One scan, one shuffle: every message is packed JVM-side into a slim
     # row — a kind code plus flat double arrays (pairs of [price, size];
     # change/trade prices sign-encode BUY(+)/SELL(-)). The Arrow→pandas hop
@@ -446,7 +397,7 @@ def replay_feed_messages(
         "WHEN 'last_trade_price' THEN "
         "array(named_struct('price', price, 'size', size, 'side', side)) END"
     )
-    packed = feed.where(
+    return feed.where(
         "event_type IN ('book', 'price_change', 'last_trade_price')"
         # malformed messages without a key would otherwise form a null
         # group; serde in the reference rejects them at parse time
@@ -466,6 +417,68 @@ def replay_feed_messages(
         f"{level_pairs('asks')} AS asks_flat",
         f"{signed_pairs(changes)} AS changes_flat",
     )
+
+
+def replay_feed_messages(
+    feed: DataFrame,
+    markets: Iterable[str] | None = None,
+    in_log_order: bool = False,
+    split_at_snapshots: bool = False,
+    snapshots_per_segment: int = 1000,
+    assume_skewed: bool = False,
+) -> DataFrame:
+    """Feed-message rows → tick DataFrame via the stateful kernel.
+
+    ``feed`` is the output of :func:`...sources.frames.parse_feed_messages`.
+    ``markets`` is the optional market-id filter (F2,
+    ``cli/src/tick_generator.rs:229-231``) — applied *before* the shuffle so
+    the filter prunes at the scan, exactly as the reference checks it before
+    mutating state.
+
+    ``in_log_order=True`` globally sorts the result by the replay key,
+    reproducing the reference's strict interleaved log-order Parquet. Default
+    keeps per-asset-contiguous order (cheaper: no extra global sort).
+
+    ``split_at_snapshots=True`` is the hot-asset skew mitigation: a
+    ``book`` snapshot fully resets per-asset state, so an asset's stream
+    factors into independent segments at snapshot boundaries — segment 0
+    (pre-snapshot diffs against an empty book, ``tick_generator.rs:339-343``)
+    plus one segment per ``snapshots_per_segment`` snapshots (coarse on
+    purpose: the stride is also the gate threshold below, and the window
+    and join that assign segments only pay off for an asset hot enough
+    to reach it). The kernel then partitions and resets on
+    ``(asset_id, segment)`` instead of ``asset_id``, spreading a
+    hyper-active asset across executors;
+    outputs are identical row-for-row (the order columns still
+    reconstruct global order).
+
+    Safe-by-default: a cheap column-pruned gate pass (per-(asset, file)
+    book-event counts — no array packing, no window) runs FIRST, and
+    when no (asset, file) cell reaches ``snapshots_per_segment`` the
+    plain per-asset path is taken — the ordinal window / carry-join /
+    segment machinery never enters the plan, so on a uniform profile
+    the only cost over the default is the gate's tokenize+count scan.
+    When the gate fires, the machinery costs a per-(asset, file)
+    ordinal window — its sorts parallelize across files, so no stage is
+    serial in one asset's volume — plus the per-file VALID-snapshot
+    totals pass (boundaries land only on snapshots the kernel will
+    apply; malformed books never open a segment). Per-file resolution
+    means an asset whose snapshots spread just under
+    ``snapshots_per_segment`` per file never splits — pick the stride
+    at or below the hottest asset's per-file snapshot density.
+    ``assume_skewed=True`` skips the gate and runs the machinery
+    unconditionally — for callers that already established skew
+    externally (:func:`replay`'s raw-text manifest gate).
+    Measured on the bench's skewed fixture (one asset = 50% of 1.2M
+    messages, sf0.1): ~3.9 s vs ~11 s unsplit.
+    """
+    if markets is not None:
+        ids = list(markets)
+        # Literal IN for small sets — Catalyst pushes it to the scan; for
+        # very large sets callers should pre-join a broadcast id table.
+        feed = feed.filter(F.col("market").isin(ids))
+
+    packed = pack_feed_messages(feed)
     if split_at_snapshots:
         from pyspark.sql import Window
 

@@ -1,11 +1,13 @@
 """REST market-scan ingestion (SURVEY §2.1 S1/S2) — driver-side I/O.
 
-The reference discovers markets via the CLOB REST API: concurrent paginated
-``/markets`` (30 pages in flight, base64 numeric cursors, 500-row stride,
-retry + linear backoff; ``collector/src/client/mod.rs:281-366``) and the
-sequential-cursor ``/sampling-markets`` (``:221-250``). Pagination is I/O,
-not a Spark operator — the result lands in ``spark.createDataFrame(...,
-MARKET_SCHEMA)`` and everything after that is the engine.
+The reference discovers markets via the CLOB REST API: paginated
+``/markets`` (base64 numeric cursors, 500-row stride, retry + linear
+backoff; ``collector/src/client/mod.rs:281-366``) and the sequential-cursor
+``/sampling-markets`` (``:221-250``). The reference keeps 30 ``/markets``
+pages in flight (``mod.rs:288``); :func:`fetch_markets` requests them one
+after another. Pagination is I/O, not a Spark operator — the result lands
+in ``spark.createDataFrame(..., MARKET_SCHEMA)`` and everything after that
+is the engine.
 
 The HTTP transport is injectable (``fetch_page``) so the pagination/cursor/
 retry logic is fully testable offline; wiring a real transport is one
@@ -20,7 +22,6 @@ import time
 from typing import Any, Callable, Iterable
 
 PAGE_SIZE = 500  # cursor stride (collector/src/client/mod.rs:297)
-MAX_CONCURRENT_PAGES = 30  # reference fan-out (mod.rs:288)
 MAX_RETRIES = 3
 CLOB_BASE = "https://clob.polymarket.com"
 

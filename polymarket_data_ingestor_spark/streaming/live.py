@@ -2,15 +2,17 @@
 
 Batch replay (``operators.replay``) is the parity path; this module is the
 *live* path (SURVEY §2.9 T8, §7 step 5): ``readStream`` over the collector's
-frame files → the same book semantics keyed per asset with
-``applyInPandasWithState`` → an append stream of ticks.
+frame files → replay's own packing and book kernel, run per asset by
+``applyInPandasWithState`` → an append stream of ticks. Live and batch share
+one set of rejection rules and one book loop, so over the same files they
+emit the same ticks.
 
 Ordering: the reference relies on per-connection FIFO order as logged
 (SURVEY §2.9 note). Streaming preserves that per micro-batch by sorting each
-group on ``(file_hour, line_id)``; across micro-batches the file source's
-chronological discovery (hourly filenames) preserves it end-to-end. Late
-*files* are not reordered — same contract as the reference, which never
-reorders either.
+group on the replay key ``(file_hour, line_id, msg_idx)``; across
+micro-batches the file source's chronological discovery (hourly filenames)
+preserves it end-to-end. Late *files* are not reordered — same contract as
+the reference, which never reorders either.
 
 State: one small JSON blob per asset (two price→size maps). With the
 RocksDB state store on a real cluster this scales to millions of assets;
@@ -21,7 +23,6 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -30,15 +31,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StringType, StructField, StructType
 
-try:  # Spark 4 forward-path state API (absent on Spark 3.x)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-except ImportError:  # pragma: no cover - Spark 3.x fallback
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = Any  # type: ignore[assignment,misc]
-
+from polymarket_data_ingestor_spark.operators.replay import (
+    REPLAY_KEY,
+    TICK_COLUMNS,
+    _replay_rows,
+    pack_feed_messages,
+)
 from polymarket_data_ingestor_spark.schemas import FRAME_SCHEMA, TICK_SCHEMA
 from polymarket_data_ingestor_spark.sources.frames import (
     file_hour_col,
@@ -219,216 +217,29 @@ def apply_cdc_stream(
     return writer.start()
 
 
-def _tick_rows(
-    out: dict[str, list],
-    ts: str,
-    market: str,
-    asset: str,
-    bids: dict,
-    asks: dict,
-    best_bid: float | None,
-    best_ask: float | None,
-) -> None:
-    """Append the two BBO rows (ASK then BID; empty side → (0,0))."""
-    for side, levels, best in (("ASK", asks, best_ask), ("BID", bids, best_bid)):
-        if best is not None:
-            price, size = best, levels[best]
-        else:
-            price, size = 0.0, 0.0
-        out["timestamp"].append(ts)
-        out["kind"].append("BBO")
-        out["market"].append(market)
-        out["asset"].append(asset)
-        out["side"].append(side)
-        out["price"].append(price)
-        out["size"].append(size)
-
-
-def _is_null(v: Any) -> bool:
-    return v is None or (isinstance(v, float) and v != v)
-
-
-def _is_num(v: Any) -> bool:
-    try:
-        float(v)
-        return True
-    except (TypeError, ValueError):
-        return False
-
-
-def _row_valid(row: Any) -> bool:
-    """Message-level validity, mirroring the batch packed filter (and the
-    reference's serde rejection): keys present; BUY/SELL sides; numeric
-    prices/sizes on every level/change/trade. A missing/null collection
-    rejects the whole message — the reference structs make
-    changes/bids/asks required ``Vec``s (tick_generator.rs
-    BookDiffMessage.changes, BookSnapshotMessage.bids/asks), so serde
-    fails there too; empty-but-present collections stay valid."""
-    if _is_null(row.asset_id) or _is_null(row.market) \
-            or _is_null(row.timestamp):
-        return False
-    et = row.event_type
-    # NULL ELEMENTS inside a collection (`"bids": [{...}, null]` parses
-    # to a None entry) must reject the message, not crash the kernel:
-    # lv["price"] on None raises, the task fails, and the checkpoint
-    # replays the same poison micro-batch forever — the exact crash
-    # loop this function exists to prevent (review finding, reproduced;
-    # the batch path drops the same input via NULL propagation).
-    if et == "book":
-        for side in (row.bids, row.asks):
-            if _is_null(side):
-                return False
-            for lv in side:
-                if lv is None or not (
-                    _is_num(lv["price"]) and _is_num(lv["size"])
-                ):
-                    return False
-        return True
-    if et == "price_change":
-        if _is_null(row.changes):
-            return False
-        return all(
-            ch is not None
-            and ch["side"] in ("BUY", "SELL")
-            and _is_num(ch["price"]) and _is_num(ch["size"])
-            for ch in row.changes
-        )
-    if et == "last_trade_price":
-        return (row.side in ("BUY", "SELL")
-                and _is_num(row.price) and _is_num(row.size))
-    return True
-
-
-def _run_book_kernel(
-    book_json: str | None, pdfs: Iterator[pd.DataFrame]
-) -> tuple[list[pd.DataFrame], str]:
-    """Shared per-asset stateful core: same semantics as the batch replay
-    (tick_generator.rs:224-367), state persisted across micro-batches.
-
-    Used by BOTH streaming state APIs — ``applyInPandasWithState``
-    (:func:`_live_kernel`) and Spark 4's ``transformWithStateInPandas``
-    (:class:`BookStatefulProcessor`) — so the book semantics exist in
-    exactly one place. Returns (output frames, new state JSON).
-
-    Book uses float price keys (wire decimal strings are ≤4 dp — float
-    equality on parsed values is exact in that domain) serialized to JSON
-    between batches.
-    """
-    book = json.loads(book_json) if book_json else {"bids": [], "asks": []}
-    bids = {float(p): float(s) for p, s in book["bids"]}
-    asks = {float(p): float(s) for p, s in book["asks"]}
-    # incremental top-of-book, same O(1)-amortized scheme as the batch
-    # kernel (recompute only when the best level is deleted)
-    best_bid = max(bids) if bids else None
-    best_ask = min(asks) if asks else None
-
-    # A hot asset's micro-batch can arrive as multiple Arrow chunks and
-    # the pre-kernel shuffle does not guarantee order across them —
-    # concatenate and sort the WHOLE group once (chunk count per
-    # micro-batch is bounded; books are small), exactly like the batch
-    # kernel sorts its full group.
-    chunks = list(pdfs)
-    frames = (
-        [pd.concat(chunks, ignore_index=True)] if len(chunks) > 1 else chunks
-    )
-    outputs: list[pd.DataFrame] = []
-    for pdf in frames:
-        pdf = pdf.sort_values(["file_hour", "line_id", "msg_idx"],
-                              kind="mergesort")
-        out: dict[str, list] = {f.name: [] for f in TICK_SCHEMA.fields}
-        for row in pdf.itertuples(index=False):
-            if not _row_valid(row):
-                # the reference's serde rejects unparseable messages whole;
-                # a poison-pill message must not kill the stream
-                continue
-            et = row.event_type
-            if et == "book":
-                bids.clear()
-                asks.clear()
-                if not _is_null(row.bids):
-                    for lv in row.bids:
-                        bids[float(lv["price"])] = float(lv["size"])
-                if not _is_null(row.asks):
-                    for lv in row.asks:
-                        asks[float(lv["price"])] = float(lv["size"])
-                best_bid = max(bids) if bids else None
-                best_ask = min(asks) if asks else None
-                _tick_rows(out, row.timestamp, row.market, row.asset_id,
-                           bids, asks, best_bid, best_ask)
-            elif et == "price_change":
-                if not _is_null(row.changes):
-                    for ch in row.changes:
-                        price = float(ch["price"])
-                        if ch["side"] == "BUY":
-                            if float(ch["size"]) == 0.0:
-                                if bids.pop(price, None) is not None \
-                                        and price == best_bid:
-                                    best_bid = max(bids) if bids else None
-                            else:
-                                bids[price] = float(ch["size"])
-                                if best_bid is None or price > best_bid:
-                                    best_bid = price
-                        else:
-                            if float(ch["size"]) == 0.0:
-                                if asks.pop(price, None) is not None \
-                                        and price == best_ask:
-                                    best_ask = min(asks) if asks else None
-                            else:
-                                asks[price] = float(ch["size"])
-                                if best_ask is None or price < best_ask:
-                                    best_ask = price
-                _tick_rows(out, row.timestamp, row.market, row.asset_id,
-                           bids, asks, best_bid, best_ask)
-            elif et == "last_trade_price":
-                out["timestamp"].append(row.timestamp)
-                out["kind"].append("TRADE")
-                out["market"].append(row.market)
-                out["asset"].append(row.asset_id)
-                out["side"].append("BID" if row.side == "BUY" else "ASK")
-                out["price"].append(float(row.price))
-                out["size"].append(float(row.size))
-        if out["timestamp"]:
-            outputs.append(pd.DataFrame(out))
-
-    new_state = json.dumps({
-        "bids": [[p, s] for p, s in bids.items()],
-        "asks": [[p, s] for p, s in asks.items()],
-    })
-    return outputs, new_state
-
-
 def _live_kernel(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState adapter over :func:`_run_book_kernel`."""
-    prev = state.get[0] if state.exists else None
-    outputs, new_state = _run_book_kernel(prev, pdfs)
-    state.update((new_state,))
-    yield from outputs
+    """``applyInPandasWithState`` function: replay one asset's micro-batch
+    with batch replay's kernel, carrying the book in ``state``.
 
-
-class BookStatefulProcessor(StatefulProcessor):
-    """Spark 4 ``transformWithStateInPandas`` adapter over the same
-    :func:`_run_book_kernel` core (the forward-path state API; requires
-    the RocksDB state store provider).
-
-    Same book-reconstruction semantics, new handle-based state: one
-    ValueState holding the serialized book per asset key.
+    A hot asset's micro-batch can arrive as several Arrow chunks in no
+    particular order, so the chunks are joined and sorted by the replay
+    key before :func:`_replay_rows` continues from the stored book. The
+    state is one JSON string, ``{"bids": [[p, s], ...], "asks": [...]}``.
     """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("book", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: Any
-    ) -> Iterator[pd.DataFrame]:
-        prev = self._state.get()[0] if self._state.exists() else None
-        outputs, new_state = _run_book_kernel(prev, rows)
-        self._state.update((new_state,))
-        yield from outputs
-
-    def close(self) -> None:
-        pass
+    book = (json.loads(state.get[0]) if state.exists
+            else {"bids": [], "asks": []})
+    bids, asks = dict(book["bids"]), dict(book["asks"])
+    carry = [bids, asks, max(bids, default=None), min(asks, default=None)]
+    pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+        REPLAY_KEY, kind="mergesort"
+    )
+    ticks = _replay_rows(pdf, [], carry)
+    state.update((json.dumps({
+        "bids": list(carry[0].items()), "asks": list(carry[1].items())
+    }),))
+    yield ticks[TICK_COLUMNS]
 
 
 def dedup_feed_stream(
@@ -603,44 +414,18 @@ def live_sessions(
     )
 
 
-def live_ticks(
-    frames_stream: DataFrame, state_api: str = "apply"
-) -> DataFrame:
+def live_ticks(frames_stream: DataFrame) -> DataFrame:
     """Streaming frames → streaming ticks (append mode, per-asset state).
 
-    ``state_api`` picks the Structured Streaming state API:
-
-    * ``"apply"`` (default) — ``applyInPandasWithState`` (Spark 3.4+; the
-      broadly-available API).
-    * ``"transform"`` — Spark 4's ``transformWithStateInPandas``
-      (:class:`BookStatefulProcessor`), the forward path. Needs the
-      RocksDB state store provider
-      (``spark.sql.streaming.stateStore.providerClass`` →
-      ``...RocksDBStateStoreProvider``).
-
-    Both adapters share :func:`_run_book_kernel`, so semantics are
-    identical; a parity test drives each against the batch replay.
+    The streaming twin of :func:`...operators.replay.replay`: the same
+    packing (:func:`...operators.replay.pack_feed_messages`, so the same
+    messages are rejected) and the same book loop, run per asset by
+    ``applyInPandasWithState`` with the book kept between micro-batches.
+    Over the same files it emits the same tick rows as batch replay, in
+    micro-batch order rather than log order.
     """
-    feed = parse_feed_messages(frames_stream)
-    feed = feed.filter(
-        F.col("event_type").isin("book", "price_change", "last_trade_price")
-    )
-    grouped = feed.groupBy("asset_id")
-    if state_api == "transform":
-        if not hasattr(grouped, "transformWithStateInPandas"):
-            raise NotImplementedError(
-                "transformWithStateInPandas needs Spark >= 4.0; "
-                "use state_api='apply'"
-            )
-        return grouped.transformWithStateInPandas(
-            statefulProcessor=BookStatefulProcessor(),
-            outputStructType=TICK_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    if state_api != "apply":
-        raise ValueError(f"unknown state_api {state_api!r}")
-    return grouped.applyInPandasWithState(
+    packed = pack_feed_messages(parse_feed_messages(frames_stream))
+    return packed.groupBy("asset_id").applyInPandasWithState(
         _live_kernel,
         outputStructType=TICK_SCHEMA,
         stateStructType=STATE_SCHEMA,

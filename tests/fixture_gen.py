@@ -309,9 +309,11 @@ def naive_replay(paths: list[Path], markets: set[str] | None = None) -> list[tup
 
 
 def _dec_ok(v) -> bool:
+    """Whether the reference's Decimal parse accepts ``v``. Python's
+    ``Decimal`` also parses "NaN", "Infinity" and "sNaN"; the reference
+    rejects them, so only finite values pass."""
     try:
-        Decimal(v)
-        return True
+        return Decimal(v).is_finite()
     except Exception:  # noqa: BLE001 - InvalidOperation/TypeError alike
         return False
 

@@ -1031,6 +1031,7 @@ def test_nonfinite_prices_rejected_like_reference_serde(spark, tmp_path):
         ("3000", "BBO", mkt, asset, "ASK", 0.6, 2.0),
         ("3000", "BBO", mkt, asset, "BID", 0.45, 7.0),
     ]
+    assert rows == naive_replay([p])
 
 
 def test_zero_price_side_encoding(spark, tmp_path):

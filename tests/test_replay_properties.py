@@ -9,6 +9,8 @@ arbitrary arrival order vs sort keys.
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
@@ -21,6 +23,7 @@ from polymarket_data_ingestor_spark.operators.replay import (
     _replay_group,
     _replay_partition,
 )
+from polymarket_data_ingestor_spark.streaming.live import _live_kernel
 
 prices = st.integers(1, 60).map(lambda i: round(0.3 + i * 0.01, 2))
 sizes = st.integers(0, 50).map(float)
@@ -188,3 +191,56 @@ def test_partition_kernel_matches_per_group_kernel(case):
     cols = REPLAY_OUTPUT_SCHEMA.fieldNames()
     assert list(got.columns) == cols
     pd.testing.assert_frame_equal(got, want[cols])
+
+
+class _FakeGroupState:
+    """The slice of ``GroupState`` the live kernel uses. The state tuple
+    goes through JSON on every update, as it would through a state store
+    between micro-batches."""
+
+    def __init__(self):
+        self._value = None
+
+    @property
+    def exists(self):
+        return self._value is not None
+
+    @property
+    def get(self):
+        return tuple(json.loads(self._value))
+
+    def update(self, value):
+        self._value = json.dumps(list(value))
+
+
+@given(st.lists(message(), min_size=1, max_size=40), st.data())
+@settings(max_examples=100, deadline=None)
+def test_live_kernel_carries_book_across_micro_batches(msgs, data):
+    """The live state function, fed one asset's feed as random
+    micro-batches (each shuffled and cut into Arrow-like chunks), emits
+    what one replay of the whole feed emits."""
+    rejected = data.draw(st.lists(st.booleans(), min_size=len(msgs),
+                                  max_size=len(msgs)))
+    rows = []
+    for i, ((kind, b, a, c), bad) in enumerate(zip(msgs, rejected)):
+        if bad:  # rejected by the packing pass
+            b, a, c = (None, None, c) if kind == KIND_BOOK else (b, a, None)
+        rows.append({
+            "asset_id": "x", "file_hour": "h", "line_id": i, "msg_idx": 0,
+            "timestamp": str(1000 + i), "market": "m", "kind_code": kind,
+            "bids_flat": b, "asks_flat": a, "changes_flat": c,
+        })
+    pdf = pd.DataFrame(rows)
+    cuts = data.draw(st.lists(st.integers(1, len(pdf)), max_size=4))
+    bounds = sorted({0, *cuts, len(pdf)})
+    state = _FakeGroupState()
+    got = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        batch = pdf.iloc[lo:hi].sample(
+            frac=1, random_state=data.draw(st.integers(0, 2**31 - 1)))
+        n_chunks = data.draw(st.integers(1, 3))
+        chunks = [batch.iloc[j::n_chunks] for j in range(n_chunks)]
+        got.extend(_live_kernel(("x",), iter(chunks), state))
+    got = pd.concat(got, ignore_index=True)
+    want = _replay_group(pdf)[TICK_COLUMNS]
+    pd.testing.assert_frame_equal(got, want)

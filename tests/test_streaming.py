@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 from datetime import datetime, timedelta, timezone
 from pathlib import Path
 
@@ -25,7 +26,13 @@ from polymarket_data_ingestor_spark.streaming.live import (
     read_frames_stream,
 )
 
-from fixture_gen import make_markets, naive_replay, write_fixture_files
+from fixture_gen import (
+    _asset_id,
+    _mkt_id,
+    make_markets,
+    naive_replay,
+    write_fixture_files,
+)
 
 
 # --- sharding (mirrors the reference's own split_markets unit tests,
@@ -439,130 +446,6 @@ def test_live_ohlc_bars_match_batch(spark, tmp_path):
         assert r["close"] in set(g[g["event_time"] == g["event_time"].max()]["price"])
 
 
-@pytest.mark.slow
-def test_book_stateful_processor_adapter_offline():
-    """BookStatefulProcessor (the transformWithStateInPandas adapter)
-    drives the shared kernel correctly through the handle/ValueState
-    protocol — exercised offline with a fake handle, since the real
-    runner needs protobuf (absent here). State must carry across calls."""
-    from polymarket_data_ingestor_spark.streaming.live import (
-        BookStatefulProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, new):
-            self.v = new
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.states.setdefault(name, FakeValueState())
-
-    mkt, asset = "0x" + "c" * 64, "42"
-
-    def row(i, et, **kw):
-        base = {"event_type": et, "timestamp": str(1000 + i), "market": mkt,
-                "asset_id": asset, "bids": None, "asks": None,
-                "changes": None, "side": None, "price": None, "size": None,
-                "file_hour": "2025-09-30-14", "line_id": i, "msg_idx": 0}
-        base.update(kw)
-        return base
-
-    proc = BookStatefulProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-    # batch 1: snapshot
-    pdf1 = pd.DataFrame([row(0, "book",
-                             bids=[{"price": "0.4", "size": "10"}],
-                             asks=[{"price": "0.6", "size": "4"}])])
-    out1 = pd.concat(list(proc.handleInputRows((asset,), iter([pdf1]), None)))
-    assert list(out1[["side", "price", "size"]].itertuples(index=False)) == [
-        ("ASK", 0.6, 4.0), ("BID", 0.4, 10.0)]
-    # batch 2: a POISON message (garbage price) then a valid change — the
-    # garbage is rejected whole (serde semantics), never kills the stream
-    pdf2 = pd.DataFrame([
-        row(1, "price_change",
-            changes=[{"price": "garbage", "size": "1", "side": "BUY"}]),
-        row(2, "last_trade_price", side="HOLD", price="0.5", size="1"),
-        row(3, "price_change",
-            changes=[{"price": "0.45", "size": "7", "side": "BUY"}]),
-    ])
-    out2 = pd.concat(list(proc.handleInputRows((asset,), iter([pdf2]), None)))
-    assert list(out2[["side", "price", "size"]].itertuples(index=False)) == [
-        ("ASK", 0.6, 4.0), ("BID", 0.45, 7.0)]
-    proc.close()
-
-
-def test_live_ticks_transform_with_state_parity(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas path ≡ the naive oracle (same
-    shared kernel as the applyInPandasWithState path; needs the RocksDB
-    state store provider)."""
-    import pyspark
-
-    if int(pyspark.__version__.split(".")[0]) < 4:
-        pytest.skip("transformWithStateInPandas needs Spark >= 4.0")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "transformWithStateInPandas' state protocol needs the "
-            "'protobuf' package (absent in this sandbox); the adapter "
-            "shares _run_book_kernel with the tested apply path"
-        )
-    src = tmp_path / "frames"
-    paths = write_fixture_files(src, n_hours=2, msgs_per_hour=60, seed=13)
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_frames_stream(spark, str(src) + "/*.jsonl",
-                                    max_files_per_trigger=1)
-        q = (
-            live_ticks(stream, state_api="transform")
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        if old is not None:
-            spark.conf.set(provider_key, old)
-        else:
-            spark.conf.unset(provider_key)
-
-    got = (
-        pd.read_parquet(out)
-        .sort_values(TICK_COLUMNS, kind="mergesort")
-        .reset_index(drop=True)
-    )
-    want = (
-        pd.DataFrame(naive_replay(paths), columns=TICK_COLUMNS)
-        .sort_values(TICK_COLUMNS, kind="mergesort")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-
-
 def test_dedup_feed_stream_drops_redelivered_frames(spark, tmp_path):
     """A frame re-delivered after a reconnect must replay once: the
     deduped stream keeps one copy of each (asset, time, content) message
@@ -632,6 +515,71 @@ def test_live_ticks_matches_batch_replay(spark, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_live_ticks_rejects_poison_like_batch_replay(spark, tmp_path):
+    """Messages the reference's serde rejects are dropped by the live
+    twin exactly as by batch replay: no emission, no state change, and
+    the stream keeps running. The poison hour follows a valid hour, so
+    the final valid change replays against the book carried across
+    micro-batches."""
+    src = tmp_path / "frames"
+    paths = write_fixture_files(src, n_hours=1, msgs_per_hour=60, seed=5)
+    mkt, asset = _mkt_id(0), _asset_id(0, 0)  # present in the valid hour
+
+    def change(price, size, side="BUY"):
+        return {"event_type": "price_change", "changes": [
+            {"price": price, "size": size, "side": side}]}
+
+    poison = [
+        change("NaN", "3"),
+        change("0.5", "Infinity"),
+        {"event_type": "book", "bids": [{"price": "-Infinity", "size": "1"}],
+         "asks": []},
+        change("garbage", "1"),
+        {"event_type": "last_trade_price", "side": "HOLD", "price": "0.5",
+         "size": "1"},
+        {"event_type": "book", "bids": [{"price": "0.4", "size": "1"}, None],
+         "asks": []},
+        {"event_type": "price_change", "changes": [None]},
+        {"event_type": "price_change"},  # no changes collection
+        change("0.45", "7"),  # valid: replays on the carried book
+    ]
+    hour = src / "2025-09-30-15.jsonl"
+    hour.write_text("".join(
+        json.dumps({
+            "timestamp": f"2025-09-30T15:00:{i:02d}+00:00",
+            "message_type": "feed_message",
+            "content": json.dumps([dict(m, timestamp=str(1759244400000 + i),
+                                        market=mkt, asset_id=asset)]),
+        }) + "\n"
+        for i, m in enumerate(poison)
+    ))
+    paths.append(hour)
+    for i, p in enumerate(paths):  # the file source replays by mtime
+        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    out = tmp_path / "out"
+    q = (
+        live_ticks(read_frames_stream(spark, str(src) + "/*.jsonl",
+                                      max_files_per_trigger=1))
+        .writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+
+    def ordered(pdf):
+        return pdf.sort_values(TICK_COLUMNS, kind="mergesort").reset_index(
+            drop=True)
+
+    got = ordered(pd.read_parquet(out))
+    want = ordered(replay(spark, [str(p) for p in paths]).toPandas())
+    pd.testing.assert_frame_equal(got, want)
+    # of the poison hour, only the last (valid) change emits: one BBO pair
+    assert (got["timestamp"] >= "1759244400000").sum() == 2
 
 
 @pytest.mark.slow
@@ -2538,32 +2486,6 @@ def test_live_corr_rollup_maintained_and_crash_replay(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # r13 session-2 review fixes (streaming/live.py)
 # ---------------------------------------------------------------------------
-
-def test_row_valid_null_collection_elements_rejected():
-    """A null ELEMENT inside bids/asks/changes must reject the message,
-    not crash the kernel: the crash escapes to the task, the checkpoint
-    replays the same micro-batch, and the stream dies in a permanent
-    poison-pill loop (review finding, reproduced). No Spark needed —
-    _row_valid is plain python over Row-likes."""
-    from types import SimpleNamespace as NS
-
-    from polymarket_data_ingestor_spark.streaming.live import _row_valid
-
-    base = dict(asset_id="a", market="m", timestamp="1700000000000",
-                bids=None, asks=None, changes=None, side=None,
-                price=None, size=None)
-    ok_book = NS(**{**base, "event_type": "book",
-                    "bids": [{"price": "0.5", "size": "1"}],
-                    "asks": []})
-    assert _row_valid(ok_book)
-    poisoned = NS(**{**base, "event_type": "book",
-                     "bids": [{"price": "0.5", "size": "1"}, None],
-                     "asks": []})
-    assert _row_valid(poisoned) is False  # drops, never raises
-    poisoned_chg = NS(**{**base, "event_type": "price_change",
-                         "changes": [None]})
-    assert _row_valid(poisoned_chg) is False
-
 
 def test_write_frames_stream_seq_orders_a_split_source_file(
     spark, tmp_path
