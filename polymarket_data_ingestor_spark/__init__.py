@@ -5,8 +5,8 @@ A from-scratch Spark re-expression of the capability surface of
 ``/root/reference``): streaming ingestion of framed order-book feed logs,
 batch replay (stateful limit-order-book reconstruction -> tick table), and a
 query layer over markets and ticks — plus the large-scale training-data
-operators (dedup, similarity search, text analysis, multimodal plumbing) a
-100 TB pipeline needs.
+operators (dedup, similarity search, text analysis) a 100 TB pipeline
+needs.
 
 Design principles (see SURVEY.md):
 

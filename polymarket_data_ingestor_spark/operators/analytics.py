@@ -473,9 +473,7 @@ def snapshot_diff(
     null-safe: a NULL key carries no identity, so a NULL-keyed row
     present in both snapshots reports as ``removed`` + ``added`` rather
     than pairing up — plain SQL equi-join semantics, identical in the
-    DuckDB oracle (pinned). This is the opposite convention from
-    ``asof_join``'s NULL ``by``-keys (which group together); a diff
-    needs per-ROW identity where asof needs per-GROUP membership, and
+    DuckDB oracle (pinned). A diff needs per-ROW identity, and
     null-safe diff keys would nondeterministically pair up MULTIPLE
     NULL-keyed rows. ``unchanged`` rows are dropped
     unless asked for — the diff of two mostly-identical 100 TB
@@ -1255,8 +1253,8 @@ def scd2_build(
     half-open validity intervals, a 1-based ``version``, and
     ``is_current`` on the open row — the classic warehouse pattern that
     turns "what is X now" tables into "what was X at time t" tables
-    (compose with ``asof_join``/``interval_overlap_join`` downstream
-    for point-in-time enrichment).
+    (join on the key and ``valid_from_ms <= t < valid_to_ms``
+    downstream for point-in-time enrichment).
 
     With ``collapse_unchanged`` (default), a log row whose attribute
     equals the key's previous value opens no version (null-safe

@@ -1067,7 +1067,7 @@ def dup_components(
     here means a corrupt hand-fed pair list — and unguarded it would
     emit a garbage ``(doc_id=NULL, component=<neighbor's label>)`` row
     while silently NOT connecting the NULL edge's endpoints (NULL never
-    equi-joins), the silent-loss class the pack_sequences/asof reviews
+    equi-joins), the silent-loss class the pack_sequences review
     closed. The guard rides the cast expression itself so no pushed
     filter can prune the row before it evaluates.
     """

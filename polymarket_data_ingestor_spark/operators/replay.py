@@ -118,11 +118,11 @@ def _replay_rows(pdf: pd.DataFrame, resets: list[int], book: list) -> pd.DataFra
     that spans two frames replays exactly as if it were one.
 
     Input is the packed form produced by :func:`pack_feed_messages`:
-    levels arrive as flat ``array<double>`` columns (``[p1, s1, p2, s2,
-    ...]``; change prices sign-encode the side, BUY positive / SELL
-    negative) — numpy-friendly, no per-level dicts through Arrow. A
-    trade packs into ``changes_flat`` as one signed pair and leaves the
-    book untouched.
+    levels arrive as flat ``array<double>`` columns — book sides as
+    ``[p1, s1, p2, s2, ...]`` pairs, changes as ``[p1, s1, side1, ...]``
+    triples with side 1.0 for BUY and 0.0 for SELL — numpy-friendly, no
+    per-level dicts through Arrow. A trade packs into ``changes_flat``
+    as one triple and leaves the book untouched.
 
     Numeric note: the wire's decimal strings are cast to f64 JVM-side;
     within the tick domain (≤4 dp prices, ≤6 dp sizes) the string→double
@@ -147,17 +147,14 @@ def _replay_rows(pdf: pd.DataFrame, resets: list[int], book: list) -> pd.DataFra
     sizes: list[float] = []
 
     # Python-native hot loop: numpy SCALARS (np.float64/np.int8) pay a
-    # C-object dispatch on every compare, negate, hash and dict probe —
+    # C-object dispatch on every compare, hash and dict probe —
     # measured ~2-3x the whole kernel on large groups. ``tolist()``
     # converts each message's arrays to Python floats ONCE (bit-exact:
-    # float64 → Python float is the identity on the value), and
-    # ``math.copysign`` replaces ``np.signbit`` (identical -0.0
-    # semantics) so the loop touches no numpy scalar at all. Cells
-    # arrive as numpy arrays under Arrow but plain lists when the
-    # kernel is driven directly (tests, seeded restarts) — ``_pl``
-    # accepts both; a list's elements are already Python floats.
-    from math import copysign
-
+    # float64 → Python float is the identity on the value), so the loop
+    # touches no numpy scalar at all. Cells arrive as numpy arrays under
+    # Arrow but plain lists when the kernel is driven directly (tests,
+    # seeded restarts) — ``_pl`` accepts both; a list's elements are
+    # already Python floats.
     def _pl(a):
         return a.tolist() if hasattr(a, "tolist") else a
 
@@ -188,14 +185,12 @@ def _replay_rows(pdf: pd.DataFrame, resets: list[int], book: list) -> pd.DataFra
                 continue
         if kind == KIND_TRADE:
             # One TRADE row; no book mutation (tick_generator.rs:322-330).
-            cl = _pl(c_flat)
-            sp = cl[0]
-            buy = copysign(1.0, sp) > 0.0  # sign bit: 0.0 vs -0.0 exact
+            price, size, buy = _pl(c_flat)
             src_idx.append(i)
             is_trade.append(True)
             is_ask_row.append(not buy)
-            prices.append(sp if buy else -sp)
-            sizes.append(cl[1])
+            prices.append(price)
+            sizes.append(size)
             continue
         if kind == KIND_BOOK:
             # Snapshot replaces both sides (tick_generator.rs:242-254).
@@ -206,12 +201,10 @@ def _replay_rows(pdf: pd.DataFrame, resets: list[int], book: list) -> pd.DataFra
             best_bid = max(bids) if bids else None
             best_ask = min(asks) if asks else None
         else:
-            # Diff upserts; size==0 deletes (tick_generator.rs:257-272);
-            # sign of the packed price encodes BUY(+)/SELL(-).
+            # Diff upserts; size==0 deletes (tick_generator.rs:257-272).
             cl = _pl(c_flat)
-            for sp, size in zip(cl[0::2], cl[1::2]):
-                if copysign(1.0, sp) > 0.0:
-                    price = sp
+            for price, size, buy in zip(cl[0::3], cl[1::3], cl[2::3]):
+                if buy:
                     if size == 0.0:
                         if bids.pop(price, None) is not None \
                                 and price == best_bid:
@@ -221,7 +214,6 @@ def _replay_rows(pdf: pd.DataFrame, resets: list[int], book: list) -> pd.DataFra
                         if best_bid is None or price > best_bid:
                             best_bid = price
                 else:
-                    price = -sp
                     if size == 0.0:
                         if asks.pop(price, None) is not None \
                                 and price == best_ask:
@@ -325,11 +317,12 @@ def pack_feed_messages(feed: DataFrame) -> DataFrame:
     and :func:`...streaming.live.live_ticks` reject the same messages.
     """
     # One scan, one shuffle: every message is packed JVM-side into a slim
-    # row — a kind code plus flat double arrays (pairs of [price, size];
-    # change/trade prices sign-encode BUY(+)/SELL(-)). The Arrow→pandas hop
+    # row — a kind code plus flat double arrays (book levels as [price,
+    # size] pairs, changes and trades as [price, size, side] triples with
+    # side 1.0 for BUY and 0.0 for SELL). The Arrow→pandas hop
     # then moves numpy float arrays instead of per-level dicts (~10x
     # cheaper), and the raw JSON is scanned exactly once. Trades ride the
-    # same shuffle as packed pairs: at 100 TB re-scanning the raw logs for
+    # same shuffle as packed triples: at 100 TB re-scanning the raw logs for
     # a stateless trade branch would cost far more than shuffling these
     # few extra bytes.
     #
@@ -363,9 +356,6 @@ def pack_feed_messages(feed: DataFrame) -> DataFrame:
     # expression node they build. Each level's strings are cast once,
     # into a struct, by an inner transform; the outer transform validates
     # and packs from the struct's fields, so no string is parsed twice.
-    # The SELL price is negated with unary minus: a SELL at "0" packs as
-    # -0.0, whose sign bit the kernel reads, where 0 - p would give +0.0
-    # and flip the level to BUY.
     def finite(v):
         return f"{v} > double('-Infinity') AND {v} < double('Infinity')"
 
@@ -380,18 +370,17 @@ def pack_feed_messages(feed: DataFrame) -> DataFrame:
             f"{finite('lv.s')} THEN array(lv.p, lv.s) END))"
         )
 
-    def signed_pairs(col):
-        # Sign-encodes BUY(+)/SELL(-); an unknown side yields NULL (not
-        # a sign-encoded guess), poisoning the element → message.
+    def side_triples(col):
+        # An unknown side yields NULL, poisoning the element → message.
         return (
             f"flatten(transform(transform({col}, ch -> named_struct("
             f"'side', ch.side, {cast('ch')})), ch -> CASE WHEN "
             f"{finite('ch.p')} AND {finite('ch.s')} THEN CASE ch.side "
-            f"WHEN 'BUY' THEN array(ch.p, ch.s) "
-            f"WHEN 'SELL' THEN array(-ch.p, ch.s) END END))"
+            f"WHEN 'BUY' THEN array(ch.p, ch.s, 1D) "
+            f"WHEN 'SELL' THEN array(ch.p, ch.s, 0D) END END))"
         )
 
-    # a trade packs as a one-element change list: same rules, one pair
+    # a trade packs as a one-element change list: same rules, one triple
     changes = (
         "CASE event_type WHEN 'price_change' THEN changes "
         "WHEN 'last_trade_price' THEN "
@@ -415,7 +404,7 @@ def pack_feed_messages(feed: DataFrame) -> DataFrame:
         "AS kind_code",
         f"{level_pairs('bids')} AS bids_flat",
         f"{level_pairs('asks')} AS asks_flat",
-        f"{signed_pairs(changes)} AS changes_flat",
+        f"{side_triples(changes)} AS changes_flat",
     )
 
 

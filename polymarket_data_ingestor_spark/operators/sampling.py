@@ -139,10 +139,8 @@ def _dsir_feature_stream(
     text_col: str,
     id_col: str,
     n_buckets: int,
-    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, *extra_cols, bucket) row per hashed unigram/bigram feature
-    instance.
+    """(id, bucket) row per hashed unigram/bigram feature instance.
 
     The DSIR feature map: whitespace unigrams plus space-joined bigrams,
     each hashed into ``n_buckets`` via the portable :func:`hash32` — so
@@ -157,9 +155,7 @@ def _dsir_feature_stream(
     ``_h32``/``_py_tokens`` twins are the exact pinned replicas of
     ``hash32``/``tokens``, so every bucket value is unchanged (the
     DuckDB oracles and the Hypothesis python-model pins verify this
-    bit-exactly). One explode, zero joins, as before. ``extra_cols``
-    ride through unchanged (the NB classifier threads its label this
-    way — no corpus-sized join back for it)."""
+    bit-exactly). One explode, zero joins, as before."""
     from pyspark.sql.functions import pandas_udf
 
     from polymarket_data_ingestor_spark.operators.dedup import (
@@ -190,12 +186,10 @@ def _dsir_feature_stream(
             out.append(feats)
         return pd.Series(out)
 
-    extra = [F.col(c) for c in extra_cols]
     return (
         df.filter(F.col(id_col).isNotNull())
         .select(
             F.col(id_col),
-            *extra,
             F.explode(feat_buckets(F.col(text_col))).alias("__b"),
         )
     )
@@ -302,15 +296,14 @@ def _dsir_decimal_weights(
     """(id, n_feats, __lw decimal(28,9)) — shared exact-decimal core of
     :func:`dsir_log_weights` / :func:`dsir_resample`.
 
-    NOTE (r15): the nb_predict treatment — collect the model, fold the
-    λ summation into the featurize kernel as long-nano per-row
-    partials, drop the count exchange + broadcast join — was
-    implemented, verified hash-identical, and REVERTED on an
-    interleaved A/B (sf0.1, one session: old min 1.08 / med 1.35 s vs
-    new min 1.23 / med 1.53 s). Unlike nb_predict (whose model is
-    prefit, so collecting is free), the DSIR model derives from the
-    SAME plan: collecting it splits the one fused fit+score job into
-    two (an eager model job at build plus the scoring job), and that
+    NOTE (r15): collecting the model and folding the λ summation into
+    the featurize kernel as long-nano per-row partials, dropping the
+    count exchange + broadcast join, was implemented, verified
+    hash-identical, and REVERTED on an interleaved A/B (sf0.1, one
+    session: old min 1.08 / med 1.35 s vs new min 1.23 / med 1.53 s).
+    Collecting is free only for a prefit model; the DSIR model derives
+    from the SAME plan: collecting it splits the one fused fit+score job
+    into two (an eager model job at build plus the scoring job), and that
     extra driver round-trip costs more than the per-(doc, bucket)
     count exchange saves — the exchange input is already map-side
     combined to distinct (doc, bucket) pairs. The fused lazy single

@@ -1319,68 +1319,6 @@ def q_hourly_volume_salted(spark, sf_dir):
 
 
 @register(
-    "range_join_count",
-    """
-    SELECT p.event_id, p.user_id, epoch_ms(p.ts) AS ts_ms,
-           CAST((SELECT count(*) FROM events c
-                 WHERE c.event_type = 'click' AND c.user_id = p.user_id
-                   AND epoch_ms(c.ts) > epoch_ms(p.ts) - 600000
-                   AND epoch_ms(c.ts) <= epoch_ms(p.ts)) AS BIGINT)
-             AS n_in_window
-    FROM events p WHERE p.event_type = 'purchase'
-    """,
-    doc="Range join: clicks within 10 min before each purchase (per user). "
-    "Spark side is bin-bucketed (reference side pre-aggregated per "
-    "(key, bin), each probe touches <=2 bins) - an equi-join, not a "
-    "theta-join; oracle is the literal correlated range count.",
-    tags=("join", "range"),
-)
-def q_range_join_count(spark, sf_dir):
-    from polymarket_data_ingestor_spark.operators.rangejoin import (
-        range_join_count,
-    )
-
-    e = table(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = e.filter(F.col("event_type") == "click").select("user_id", "ts")
-    out = range_join_count(
-        purchases, clicks, key="user_id", window_seconds=600
-    )
-    return out.select(
-        "event_id", "user_id", F.unix_millis("ts").alias("ts_ms"),
-        "n_in_window",
-    )
-
-
-@register(
-    "multires_rollup",
-    """
-    SELECT date_trunc('hour', ts) AS bar_time, event_type,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total,
-           count(*) AS n,
-           arg_max(value, event_id) AS last_value
-    FROM events GROUP BY 1, 2
-    """,
-    doc="Hypertable-style continuous aggregate: hour bars derived FROM "
-    "minute bars (sum of sums, last-of-lasts via carried order key) - raw "
-    "scanned once per refresh, not once per resolution. Oracle computes "
-    "the hour level directly from raw; equality proves the composition "
-    "is lossless.",
-    tags=("agg", "bars", "rollup"),
-)
-def q_multires_rollup(spark, sf_dir):
-    from polymarket_data_ingestor_spark.operators.rangejoin import (
-        multi_resolution_bars,
-    )
-
-    e = table(spark, sf_dir, "events")
-    _minute, hour = multi_resolution_bars(e)
-    return hour
-
-
-@register(
     "pivot_event_counts",
     """
     SELECT user_id,
@@ -1416,46 +1354,6 @@ def q_pivot_event_counts(spark, sf_dir):
         F.coalesce(F.col("purchase_v"), F.lit(0).cast("decimal(18,2)"))
         .cast("double")
         .alias("purchase_value"),
-    )
-
-
-@register(
-    "asof_join",
-    """
-    SELECT c.event_id, c.user_id, epoch_ms(c.ts) AS ts_ms,
-           p.value AS last_purchase_value
-    FROM (SELECT * FROM events WHERE event_type = 'click') c
-    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-      ON c.user_id = p.user_id AND p.event_id <= c.event_id
-    """,
-    doc="As-of join (SURVEY §2.3: 'BBO prevailing at time t'): each click "
-    "gets the user's most recent purchase value at-or-before it. Spark "
-    "side is the union-tag + window composition (one shuffle, no range "
-    "explosion); oracle is DuckDB's native ASOF JOIN.",
-    tags=("join", "asof"),
-)
-def q_asof_join(spark, sf_dir):
-    from polymarket_data_ingestor_spark.operators.asof import asof_join
-
-    e = table(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        "event_id",
-        F.col("value").alias("last_purchase_value"),
-    )
-    joined = asof_join(
-        clicks,
-        purchases,
-        by=["user_id"],
-        order_col="event_id",
-        value_cols=["last_purchase_value"],
-    )
-    return joined.select(
-        "event_id", "user_id", F.unix_millis("ts").alias("ts_ms"),
-        "last_purchase_value",
     )
 
 
@@ -2655,7 +2553,7 @@ def q_morton_codes(spark, sf_dir):
     "half-open validity intervals of their latest event_type 'state', "
     "with no-op changes collapsed (null-safe compare) — the classic "
     "warehouse pattern turning a change log into a point-in-time "
-    "dimension (compose with asof_join / interval_overlap_join for "
+    "dimension (join on the key and a validity-interval predicate for "
     "as-at enrichment). Epoch-ms integers keep intervals engine-exact. "
     "Scale shape: ONE shuffle on the key — change-detection lag, "
     "interval-closing lead, and the version row_number all ride the "

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from polymarket_data_ingestor_spark.functions.scalars import sql_hash32
 from polymarket_data_ingestor_spark.operators import dedup as D
-from polymarket_data_ingestor_spark.operators import multimodal as M
 from polymarket_data_ingestor_spark.operators import similarity as S
 from polymarket_data_ingestor_spark.operators import text as T
 from polymarket_data_ingestor_spark.plans.catalog import (
@@ -2077,104 +2076,6 @@ def q_dsir_resample(spark, sf_dir):
     return dsir_resample(d, d.filter(F.col("lang") == "en"), k=100)
 
 
-# Hashed-n-gram Naive-Bayes classifier (operators/classify.py): the
-# oracle replicates the fit (per-(class, bucket) add-one-smoothed
-# log-likelihoods + log priors over the hash_split seed-7 'train'
-# slice) and the predict (exact-decimal per-class scores, argmax with
-# smallest-label tie-break, runner-up margin). Shares the DSIR feature
-# CTE — same unigram+bigram hash32 buckets.
-_SQL_NB_FEATS = _SQL_DSIR_FEATS
-
-
-@register(
-    "nb_classify_lang",
-    f"""
-    WITH docs AS (
-      SELECT doc_id, lang, {_SQL_TOKS} AS arr FROM documents
-      WHERE doc_id IS NOT NULL
-    ), train AS (
-      SELECT * FROM docs
-      WHERE lang IS NOT NULL
-        AND ({sql_hash32("CAST(doc_id AS VARCHAR)", seed=7)}
-             % 10000) BETWEEN 500 AND 9499
-    ), tfeats AS ({_SQL_NB_FEATS.format(d='train')}
-    ), hist AS (
-      SELECT t.lang, f.b, count(*) AS m
-      FROM tfeats f JOIN (SELECT doc_id, lang FROM train) t
-        USING (doc_id)
-      GROUP BY 1, 2
-    ), totc AS (
-      SELECT lang, CAST(sum(m) AS BIGINT) AS tc FROM hist GROUP BY 1
-    ), pr AS (
-      SELECT lang, count(*) AS ndc FROM train GROUP BY 1
-    ), nn AS (
-      SELECT CAST(sum(ndc) AS BIGINT) AS nd FROM pr
-    ), classes AS (
-      SELECT p.lang,
-             CAST(round(ln((0 + 1.0) / (coalesce(t.tc, 0) + 10000)), 9)
-                  AS DECIMAL(18,9)) AS w0,
-             CAST(round(ln(CAST(p.ndc AS DOUBLE) / nd), 9)
-                  AS DECIMAL(18,9)) AS prior
-      FROM pr p LEFT JOIN totc t USING (lang) CROSS JOIN nn
-    ), weights AS (
-      SELECT h.lang, h.b,
-             CAST(round(ln((h.m + 1.0) / (t.tc + 10000)), 9)
-                  AS DECIMAL(18,9)) AS w
-      FROM hist h JOIN totc t USING (lang)
-    ), afeats AS ({_SQL_NB_FEATS.format(d='docs')}
-    ), dcnt AS (
-      SELECT doc_id, b, count(*) AS m FROM afeats GROUP BY 1, 2
-    ), scores AS (
-      SELECT d.doc_id, c.lang,
-             CAST(sum(d.m) AS BIGINT) AS n_feats,
-             CAST(sum(CAST(d.m AS DECIMAL(10,0)) * coalesce(w.w, c.w0))
-                  AS DECIMAL(28,9)) + c.prior AS score
-      FROM dcnt d
-      CROSS JOIN classes c
-      LEFT JOIN weights w ON w.lang = c.lang AND w.b = d.b
-      GROUP BY d.doc_id, c.lang, c.prior
-    ), ranked AS (
-      SELECT doc_id, n_feats, lang, score,
-             row_number() OVER (PARTITION BY doc_id
-                                ORDER BY score DESC, lang) AS rn,
-             lead(score) OVER (PARTITION BY doc_id
-                               ORDER BY score DESC, lang) AS second
-      FROM scores
-    )
-    SELECT doc_id, n_feats, lang AS label,
-           CAST(score AS DOUBLE) AS score,
-           CAST(score - second AS DOUBLE) AS margin
-    FROM ranked WHERE rn = 1
-    """,
-    doc="Hashed-n-gram Naive-Bayes language classifier (operators/"
-    "classify.py, Joulin et al. arXiv:1607.01759 made engine-native): "
-    "fit nb_model on the hash_split seed-7 'train' slice with lang "
-    "labels, nb_predict over the whole corpus — per-doc exact-decimal "
-    "class scores (prior + sum of 9-dp-pre-rounded log-likelihoods, "
-    "unseen buckets scoring the class's smoothing weight), argmax with "
-    "smallest-label tie-break, runner-up margin. The fastText-style "
-    "domain/lang/quality gate as a first-class operator. Scale shape: "
-    "ONE corpus featurize scan; the model re-enters as a broadcast "
-    "bucket -> map<class, weight> LocalRelation (<= n_buckets rows) "
-    "joined straight onto the gram stream, all K class sums ride one "
-    "groupBy(doc) whose map-side combine collapses grams to doc "
-    "partials BEFORE the exchange, and the argmax window reuses that "
-    "partitioning — ONE shuffle exchange total, moving docs x K "
-    "decimals, never gram instances.",
-    tags=("trainmix", "text"),
-)
-def q_nb_classify_lang(spark, sf_dir):
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_predict,
-    )
-    from polymarket_data_ingestor_spark.operators.sampling import hash_split
-
-    d = table(spark, sf_dir, "documents")
-    train = hash_split(
-        d, {"train": 0.90, "val": 0.05, "test": 0.05}, seed=7
-    ).filter(F.col("split") == "train")
-    return nb_predict(d, nb_model(train, label_col="lang"))
 
 
 @register(
@@ -2842,104 +2743,6 @@ def q_curation_pipeline(spark, sf_dir):
         sampled.select("doc_id", "lang", "quality"), "doc_id"
     ).select("seq_id", "doc_id", "lang", "quality")
 
-@register(
-    "multimodal_features",
-    """
-    WITH meta AS (
-      SELECT doc_id, encode(text) AS payload, text FROM documents
-      WHERE doc_id < 100
-    ), feats AS (
-      -- NULL-text docs emit no feature rows (Spark: NULL payload ->
-      -- NULL features, dropped by the entry's posexplode — the batch
-      -- absence-propagates convention); fixture has none, kept aligned
-      -- for the latent class
-      SELECT doc_id, f.i AS feat_idx,
-             CAST(COALESCE((
-               SELECT sum(ascii(substr(m.text, p.i, 1)))
-               FROM (SELECT unnest(generate_series(1, length(m.text))) AS i) p
-               WHERE (p.i - 1) % 8 = f.i), 0) % 997 AS DOUBLE) AS feat
-      FROM meta m CROSS JOIN
-           (SELECT unnest(generate_series(0, 7)) AS i) f
-      WHERE m.text IS NOT NULL
-    )
-    SELECT m.doc_id, 'application/octet-stream' AS media_type,
-           octet_length(m.payload) AS n_bytes,
-           md5(m.text) AS digest,
-           f.feat_idx, f.feat
-    FROM meta m JOIN feats f ON m.doc_id = f.doc_id
-    """,
-    doc="Multimodal plumbing: opaque binary payload + metadata through a "
-    "real mapInPandas Arrow path; decode stubbed with a deterministic "
-    "byte-fold featurizer (ASCII corpus ⇒ SQL-reproducible).",
-    tags=("multimodal",),
-)
-def q_multimodal_features(spark, sf_dir):
-    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    media = M.attach_payload(d)
-    feats = M.extract_features(media)
-    return feats.select(
-        "doc_id",
-        "media_type",
-        "n_bytes",
-        "digest",
-        F.posexplode("features").alias("feat_idx", "feat"),
-    ).withColumn("feat_idx", F.col("feat_idx").cast("long"))
-
-
-@register(
-    "frame_sample",
-    """
-    SELECT doc_id, f.i AS frame_no, f.i * 64 AS byte_offset
-    FROM (SELECT doc_id, octet_length(encode(text)) AS n FROM documents
-          WHERE doc_id < 100) d
-    CROSS JOIN LATERAL
-      (SELECT unnest(generate_series(0, greatest((n - 1) // 64, 0))) AS i) f
-    """,
-    doc="Frame-sampling shape: 1->N rows per payload at fixed strides "
-    "(posexplode of a computed index).",
-    tags=("multimodal",),
-)
-def q_frame_sample(spark, sf_dir):
-    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    media = M.attach_payload(d)
-    return M.frame_sample(media, every_n_bytes=64)
-
-
-@register(
-    "resize_media",
-    None,  # rows-only; the oracle is written and ready to pair
-    # (ASCII corpus => the stride downsample is SQL-reproducible, the
-    # multimodal_features recipe):
-    #
-    #   SELECT doc_id,
-    #          octet_length(encode(r)) AS n_bytes, md5(r) AS digest
-    #   FROM (SELECT doc_id, array_to_string(list_transform(
-    #           generate_series(1, length(text), 4),
-    #           i -> substr(text, i, 1)), '') AS r
-    #         FROM documents WHERE doc_id < 100)
-    #
-    # Meanwhile the value path is pinned bit-exact against a python
-    # byte-stride twin in tests/test_trainingdata_ops.py, including
-    # the resize->featurize composition.
-    doc="Media 'resize' stub (multimodal.py::resize_media): "
-    "deterministic byte-stride downsample payload->payload with "
-    "metadata recomputed for the resized bytes — the brief's "
-    "image-resize slot, schema-preserving so it composes with "
-    "extract_features/frame_sample (resize-then-featurize, the "
-    "production thumbnail pipeline shape). mapInPandas Arrow "
-    "batches, constant memory; output ~1/stride of input, so it "
-    "runs before any shuffle that would move full-size media.",
-    tags=("multimodal",),
-)
-def q_resize_media(spark, sf_dir):
-    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    resized = M.resize_media(M.attach_payload(d), stride=4)
-    return resized.select(
-        "doc_id",
-        F.col("media_meta.n_bytes").alias("n_bytes"),
-        F.col("media_meta.digest").alias("digest"),
-    )
-
 
 @register(
     "doc_repetition",
@@ -3047,182 +2850,6 @@ def q_variant_schema_profile(spark, sf_dir):
             F.count_distinct("__s").cast("long").alias("n_schemas"),
             F.count(F.lit(1)).alias("n"),
         )
-    )
-
-
-@register(
-    "asof_join_tolerance",
-    """
-    SELECT c.event_id, c.user_id,
-           CASE WHEN c.event_id - p.event_id <= 1000
-                THEN p.value END AS last_purchase_value
-    FROM (SELECT * FROM events WHERE event_type = 'click') c
-    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-      ON c.user_id = p.user_id AND p.event_id <= c.event_id
-    """,
-    doc="As-of join with a staleness bound (pandas merge_asof "
-    "tolerance): matches older than 1000 event-ids yield nulls. The "
-    "carried reference order rides the same single window pass, so the "
-    "bound costs no extra shuffle; oracle is DuckDB ASOF + CASE.",
-    tags=("join", "asof"),
-)
-def q_asof_join_tolerance(spark, sf_dir):
-    from polymarket_data_ingestor_spark.operators.asof import asof_join
-
-    e = table(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id"
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", F.col("value").alias("last_purchase_value")
-    )
-    return asof_join(
-        clicks,
-        purchases,
-        by=["user_id"],
-        order_col="event_id",
-        value_cols=["last_purchase_value"],
-        tolerance=1000,
-    )
-
-
-@register(
-    "asof_join_forward",
-    """
-    SELECT c.event_id, c.user_id, p.value AS next_purchase_value
-    FROM (SELECT * FROM events WHERE event_type = 'click') c
-    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-      ON c.user_id = p.user_id AND p.event_id >= c.event_id
-    """,
-    doc="Forward as-of join (merge_asof direction='forward' parity): "
-    "each click gets the EARLIEST purchase at-or-after it per user — "
-    "the 'next event after' query. Same union-tag single-shuffle plan "
-    "as the backward form, with the window frame and tie order "
-    "mirrored (current..following + first instead of "
-    "preceding..current + last); oracle is DuckDB's native forward "
-    "ASOF JOIN.",
-    tags=("join", "asof"),
-)
-def q_asof_join_forward(spark, sf_dir):
-    from polymarket_data_ingestor_spark.operators.asof import asof_join
-
-    e = table(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id"
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", F.col("value").alias("next_purchase_value")
-    )
-    return asof_join(
-        clicks,
-        purchases,
-        by=["user_id"],
-        order_col="event_id",
-        value_cols=["next_purchase_value"],
-        direction="forward",
-    )
-
-
-@register(
-    "interval_overlap_join",
-    """
-    WITH c AS (
-      SELECT event_id AS click_id, user_id,
-             epoch_ms(ts) AS ls, epoch_ms(ts) + 300000 AS le
-      FROM events WHERE event_type = 'click'
-    ), p AS (
-      SELECT event_id AS purchase_id, user_id,
-             epoch_ms(ts) AS rs, epoch_ms(ts) + 600000 AS re
-      FROM events WHERE event_type = 'purchase'
-    )
-    SELECT c.user_id, c.click_id, p.purchase_id
-    FROM c JOIN p ON c.user_id = p.user_id
-                 AND p.rs < c.le AND c.ls < p.re
-    """,
-    doc="Interval x interval overlap join per user: 5-minute click "
-    "windows vs 10-minute purchase windows, all intersecting pairs. "
-    "Bin-bucketed equi-join (no theta-join): intervals explode to "
-    "covered bins, pairs meet on (key, bin), and the "
-    "max-start-bin rule emits each pair exactly once with no distinct "
-    "pass. Oracle is the plain theta join, exact at sf scale.",
-    tags=("join", "range"),
-)
-def q_interval_overlap_join(spark, sf_dir):
-    from polymarket_data_ingestor_spark.operators.rangejoin import (
-        interval_overlap_join,
-    )
-
-    e = table(spark, sf_dir, "events")
-    ms = F.unix_millis(F.col("ts").cast("timestamp"))
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.timestamp_millis(ms).alias("start"),
-        F.timestamp_millis(ms + 300000).alias("end"),
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        F.timestamp_millis(ms).alias("start"),
-        F.timestamp_millis(ms + 600000).alias("end"),
-    )
-    return interval_overlap_join(
-        clicks, purchases,
-        key="user_id",
-        left_cols=["click_id"], right_cols=["purchase_id"],
-        bin_seconds=600,
-    )
-
-
-@register(
-    "asof_join_nearest",
-    """
-    WITH c AS (
-      SELECT event_id, user_id FROM events WHERE event_type = 'click'
-    ), b AS (
-      SELECT c.event_id, c.user_id, p.event_id AS ob, p.value AS vb
-      FROM c ASOF LEFT JOIN
-           (SELECT * FROM events WHERE event_type = 'purchase') p
-        ON c.user_id = p.user_id AND p.event_id <= c.event_id
-    ), f AS (
-      SELECT c.event_id, p.event_id AS o_f, p.value AS vf
-      FROM c ASOF LEFT JOIN
-           (SELECT * FROM events WHERE event_type = 'purchase') p
-        ON c.user_id = p.user_id AND p.event_id >= c.event_id
-    )
-    SELECT b.event_id, b.user_id,
-           CASE WHEN o_f IS NULL THEN vb
-                WHEN ob IS NULL THEN vf
-                WHEN b.event_id - ob <= o_f - b.event_id THEN vb
-                ELSE vf END AS nearest_purchase_value
-    FROM b JOIN f USING (event_id)
-    """,
-    doc="Nearest as-of join (merge_asof direction='nearest' parity): "
-    "each click gets whichever purchase is closer in event-id order, "
-    "equal distance preferring backward — pandas' rule. Both window "
-    "passes ride ONE union + one hash exchange (opposite tie orders "
-    "cost a second sort, not a second shuffle); oracle composes "
-    "DuckDB's two ASOF directions with the same CASE.",
-    tags=("join", "asof"),
-)
-def q_asof_join_nearest(spark, sf_dir):
-    from polymarket_data_ingestor_spark.operators.asof import asof_join
-
-    e = table(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id"
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id",
-        F.col("value").alias("nearest_purchase_value"),
-    )
-    return asof_join(
-        clicks,
-        purchases,
-        by=["user_id"],
-        order_col="event_id",
-        value_cols=["nearest_purchase_value"],
-        direction="nearest",
     )
 
 

@@ -612,10 +612,9 @@ def live_interval_join(
     join state is provably bounded).
 
     Emits ALL in-band matches, not the single latest one: a streaming
-    "as-of" pick needs custom ordered state (``transformWithState``) —
-    the standard pipeline does this interval join live and the exact
-    :func:`~polymarket_data_ingestor_spark.operators.asof.asof_join`
-    in the batch layer. ``right_ts`` must differ from ``left_ts``
+    "as-of" pick needs custom ordered state (``transformWithState``),
+    so a caller that wants only the latest match per left event picks
+    it from this output. ``right_ts`` must differ from ``left_ts``
     (both survive into the output).
 
     Scale shape: both streams shuffle on the key; per-key state holds

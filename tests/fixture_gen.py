@@ -321,8 +321,8 @@ def _dec_ok(v) -> bool:
 def _serde_ok(msg: dict) -> bool:
     """Mirror the reference's serde struct rules (tick_generator.rs):
     required keys present; required Vec collections present (null/missing
-    rejects, empty is fine); Decimal-parseable prices/sizes; BUY/SELL
-    side enums."""
+    rejects, empty is fine) and made of objects (a null element rejects);
+    Decimal-parseable prices/sizes; BUY/SELL side enums."""
     if (msg.get("asset_id") is None or msg.get("market") is None
             or msg.get("timestamp") is None):
         return False
@@ -332,14 +332,15 @@ def _serde_ok(msg: dict) -> bool:
             if msg.get(side) is None:
                 return False
             for lv in msg[side]:
-                if not (_dec_ok(lv.get("price")) and _dec_ok(lv.get("size"))):
+                if not (isinstance(lv, dict) and _dec_ok(lv.get("price"))
+                        and _dec_ok(lv.get("size"))):
                     return False
         return True
     if et == "price_change":
         if msg.get("changes") is None:
             return False
         return all(
-            ch.get("side") in ("BUY", "SELL")
+            isinstance(ch, dict) and ch.get("side") in ("BUY", "SELL")
             and _dec_ok(ch.get("price")) and _dec_ok(ch.get("size"))
             for ch in msg["changes"]
         )

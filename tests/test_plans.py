@@ -354,6 +354,8 @@ def test_reliable_checkpoint_switch(spark, tmp_path):
             minhash_lsh_pairs(df, num_hashes=16, bands=8)
         ).collect())
     )
+    sc = spark.sparkContext
+    prior_dir = sc.getCheckpointDir()
     try:
         spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true")
         # no checkpoint dir yet → loud failure, not a silent fallback
@@ -381,6 +383,11 @@ def test_reliable_checkpoint_switch(spark, tmp_path):
         assert found, f"no checkpoint files under {ckdir}"
     finally:
         spark.conf.unset(RELIABLE_CHECKPOINT_CONF)
+        # SparkContext has no public unset: write the prior value back,
+        # so a session that had no checkpoint dir has none again
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(prior_dir)
+        )
 
 
 def test_lsh_pairs_single_signature_pass(spark):

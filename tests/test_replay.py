@@ -483,9 +483,9 @@ def test_malformed_messages_without_keys_are_dropped(spark, tmp_path):
 
 
 def test_malformed_side_and_price_are_dropped(spark, tmp_path):
-    """A change/trade with a non-BUY/SELL side or an unparseable price is
-    rejected whole, like the reference's serde — not sign-encoded into
-    the book as garbage."""
+    """A change/trade with a non-BUY/SELL side, an unparseable price or a
+    null level is rejected whole, like the reference's serde — not packed
+    into the book as garbage."""
     mkt, asset = _mkt_id(8), _asset_id(8, 0)
     msgs = [
         {"event_type": "book", "timestamp": "1000", "market": mkt,
@@ -518,6 +518,18 @@ def test_malformed_side_and_price_are_dropped(spark, tmp_path):
         {"event_type": "book", "timestamp": "5800", "market": mkt,
          "asset_id": asset,
          "asks": [{"price": "0.9", "size": "1"}]},  # missing bids field
+        # a null element inside a collection fails serde like a null
+        # collection does
+        {"event_type": "book", "timestamp": "5810", "market": mkt,
+         "asset_id": asset, "bids": [{"price": "0.3", "size": "1"}, None],
+         "asks": []},  # null bid level
+        {"event_type": "book", "timestamp": "5820", "market": mkt,
+         "asset_id": asset, "bids": [],
+         "asks": [None, {"price": "0.9", "size": "1"}]},  # null ask level
+        {"event_type": "price_change", "timestamp": "5830", "market": mkt,
+         "asset_id": asset,
+         "changes": [{"price": "0.41", "size": "3", "side": "BUY"},
+                     None]},  # null change
         {"event_type": "price_change", "timestamp": "5900", "market": mkt,
          "asset_id": asset, "changes": []},  # empty-but-present: VALID
         {"event_type": "last_trade_price", "timestamp": "6000", "market": mkt,
@@ -1036,14 +1048,17 @@ def test_nonfinite_prices_rejected_like_reference_serde(spark, tmp_path):
 
 def test_zero_price_side_encoding(spark, tmp_path):
     """A SELL at price "0" lands on ASK and a BUY at "0.0" on BID, for
-    changes and trades alike. The packing encodes the side in the sign
-    bit of the price (SELL as -p), so a SELL at zero must pack as -0.0:
-    0 - p would give +0.0 and flip it to BID."""
+    changes and trades alike (first input). A BUY at a negative price or
+    at "-0" stays a bid (second input): the side is packed in its own
+    slot, so no price value, whatever its sign, turns a BUY into a
+    SELL. The reference keeps such a level as a bid at its Decimal
+    price."""
     mkt, asset = _mkt_id(12), _asset_id(12, 0)
-    msgs = [
-        {"event_type": "book", "timestamp": "1000", "market": mkt,
-         "asset_id": asset, "bids": [{"price": "0.4", "size": "5"}],
-         "asks": [{"price": "0.6", "size": "2"}]},
+    book = {"event_type": "book", "timestamp": "1000", "market": mkt,
+            "asset_id": asset, "bids": [{"price": "0.4", "size": "5"}],
+            "asks": [{"price": "0.6", "size": "2"}]}
+    zero_msgs = [
+        book,
         {"event_type": "price_change", "timestamp": "2000", "market": mkt,
          "asset_id": asset,
          "changes": [{"price": "0", "size": "4", "side": "SELL"}]},
@@ -1058,13 +1073,7 @@ def test_zero_price_side_encoding(spark, tmp_path):
          "market": mkt, "asset_id": asset, "side": "BUY",
          "price": "0.0", "size": "2"},
     ]
-    p = tmp_path / "2025-10-01-10.jsonl"
-    p.write_text("\n".join(
-        json.dumps({"timestamp": "t", "message_type": "feed_message",
-                    "content": json.dumps([m])}) for m in msgs) + "\n")
-    rows = _spark_rows(replay(spark, [str(p)], in_log_order=True,
-                              ticks_only=False))
-    assert rows == [
+    zero_rows = [
         ("1000", "BBO", mkt, asset, "ASK", 0.6, 2.0),
         ("1000", "BBO", mkt, asset, "BID", 0.4, 5.0),
         ("2000", "BBO", mkt, asset, "ASK", 0.0, 4.0),
@@ -1074,4 +1083,43 @@ def test_zero_price_side_encoding(spark, tmp_path):
         ("4000", "BBO", mkt, asset, "BID", 0.0, 3.0),
         ("5000", "TRADE", mkt, asset, "BID", 0.0, 2.0),
     ]
-    assert rows == naive_replay([p])
+    negative_msgs = [
+        book,
+        {"event_type": "price_change", "timestamp": "2000", "market": mkt,
+         "asset_id": asset,
+         "changes": [{"price": "-0.5", "size": "3", "side": "BUY"}]},
+        {"event_type": "price_change", "timestamp": "3000", "market": mkt,
+         "asset_id": asset,
+         "changes": [{"price": "0.4", "size": "0", "side": "BUY"}]},
+        {"event_type": "price_change", "timestamp": "4000", "market": mkt,
+         "asset_id": asset,
+         "changes": [{"price": "-0", "size": "1", "side": "BUY"}]},
+        {"event_type": "last_trade_price", "timestamp": "5000",
+         "market": mkt, "asset_id": asset, "side": "BUY",
+         "price": "-0", "size": "2"},
+        {"event_type": "last_trade_price", "timestamp": "6000",
+         "market": mkt, "asset_id": asset, "side": "BUY",
+         "price": "-0.5", "size": "1"},
+    ]
+    negative_rows = [
+        ("1000", "BBO", mkt, asset, "ASK", 0.6, 2.0),
+        ("1000", "BBO", mkt, asset, "BID", 0.4, 5.0),
+        ("2000", "BBO", mkt, asset, "ASK", 0.6, 2.0),
+        ("2000", "BBO", mkt, asset, "BID", 0.4, 5.0),
+        ("3000", "BBO", mkt, asset, "ASK", 0.6, 2.0),
+        ("3000", "BBO", mkt, asset, "BID", -0.5, 3.0),
+        ("4000", "BBO", mkt, asset, "ASK", 0.6, 2.0),
+        ("4000", "BBO", mkt, asset, "BID", 0.0, 1.0),
+        ("5000", "TRADE", mkt, asset, "BID", 0.0, 2.0),
+        ("6000", "TRADE", mkt, asset, "BID", -0.5, 1.0),
+    ]
+    cases = [(zero_msgs, zero_rows), (negative_msgs, negative_rows)]
+    for hour, (msgs, want) in enumerate(cases, start=10):
+        p = tmp_path / f"2025-10-01-{hour}.jsonl"
+        p.write_text("\n".join(
+            json.dumps({"timestamp": "t", "message_type": "feed_message",
+                        "content": json.dumps([m])}) for m in msgs) + "\n")
+        rows = _spark_rows(replay(spark, [str(p)], in_log_order=True,
+                                  ticks_only=False))
+        assert rows == want, p.name
+        assert rows == naive_replay([p]), p.name

@@ -42,11 +42,11 @@ def message(draw):
         flat = []
         for _ in range(n):
             p = draw(prices)
-            sign = draw(st.sampled_from([1.0, -1.0]))
-            flat += [sign * p, draw(sizes)]  # size 0 ⇒ delete
+            side = draw(st.sampled_from([1.0, 0.0]))  # BUY / SELL
+            flat += [p, draw(sizes), side]  # size 0 ⇒ delete
         return kind, None, None, flat
-    side = draw(st.sampled_from([1.0, -1.0]))
-    return kind, None, None, [side * draw(prices), draw(sizes)]
+    side = draw(st.sampled_from([1.0, 0.0]))
+    return kind, None, None, [draw(prices), draw(sizes), side]
 
 
 def model_replay(msgs):
@@ -56,17 +56,16 @@ def model_replay(msgs):
     for i, (kind, b, a, c) in enumerate(msgs):
         ts, mkt, asset = str(1000 + i), "m", "x"
         if kind == KIND_TRADE:
-            sp, sz = c
+            p, sz, sd = c
             rows.append((ts, "TRADE", mkt, asset,
-                         "BID" if sp > 0 else "ASK", abs(sp), sz))
+                         "BID" if sd == 1.0 else "ASK", p, sz))
             continue
         if kind == KIND_BOOK:
             bids = dict(zip(b[0::2], b[1::2]))
             asks = dict(zip(a[0::2], a[1::2]))
         else:
-            for sp, sz in zip(c[0::2], c[1::2]):
-                levels = bids if sp > 0 else asks
-                p = abs(sp)
+            for p, sz, sd in zip(c[0::3], c[1::3], c[2::3]):
+                levels = bids if sd == 1.0 else asks
                 if sz == 0:
                     levels.pop(p, None)
                 else:

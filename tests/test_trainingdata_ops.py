@@ -1,9 +1,8 @@
-"""Tests for dedup / similarity / text / multimodal operator APIs.
+"""Tests for dedup / similarity / text operator APIs.
 
 The catalog oracles (tools/check.py) pin cross-engine value
 parity; these tests pin operator *semantics*: LSH recall vs brute force,
-dedup materialization, Hamming near-dup behavior, and the multimodal
-mapInPandas plumbing.
+dedup materialization and Hamming near-dup behavior.
 """
 
 from __future__ import annotations
@@ -12,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from polymarket_data_ingestor_spark.operators import dedup as D
-from polymarket_data_ingestor_spark.operators import multimodal as M
 from polymarket_data_ingestor_spark.operators import similarity as S
 from polymarket_data_ingestor_spark.operators import text as T
 
@@ -413,80 +411,6 @@ def test_fingerprint_order_sensitivity(spark):
     fps = {r.doc_id: r.fingerprint for r in T.fingerprint(df).collect()}
     assert fps[1] == fps[3]
     assert fps[1] != fps[2]
-
-
-def test_multimodal_pipeline_and_stub(spark, docs):
-    media = M.attach_payload(docs.filter(F.col("doc_id") < 10))
-    feats = M.extract_features(media).toPandas()
-    assert len(feats) == 10
-    assert all(len(f) == M.FEATURE_DIM for f in feats.features)
-    # digest matches Spark-side md5 of the payload
-    md = media.select(F.md5("payload").alias("d"), "media_meta.digest").toPandas()
-    assert (md.d == md.digest).all()
-    with pytest.raises(NotImplementedError):
-        M.decode_image(b"\x89PNG...")
-
-
-def test_frame_sample_row_shape(spark, docs):
-    media = M.attach_payload(docs.filter(F.col("doc_id") < 5))
-    frames = M.frame_sample(media, every_n_bytes=50).toPandas()
-    sizes = {r.doc_id: r["media_meta"]["n_bytes"]
-             for r in media.select("doc_id", "media_meta").collect()}
-    for doc_id, grp in frames.groupby("doc_id"):
-        expected = max((sizes[doc_id] - 1) // 50, 0) + 1
-        assert len(grp) == expected
-        assert list(grp.sort_values("frame_no").byte_offset) == \
-            [i * 50 for i in range(expected)]
-
-
-def test_resize_media_python_twin_and_composition(spark, docs):
-    """resize_media == a python byte-stride twin bit-for-bit (payload,
-    size, digest), preserves the media schema, and COMPOSES with
-    extract_features — the resized features equal featurizing the
-    strided bytes directly (the production resize-then-featurize
-    shape)."""
-    from hashlib import md5 as _md5
-
-    src = docs.filter(F.col("doc_id") < 10)
-    media = M.attach_payload(src)
-    resized = M.resize_media(media, stride=4)
-    assert resized.schema == media.schema
-    texts = {r.doc_id: r.text for r in src.select("doc_id", "text").collect()}
-    rows = {r.doc_id: r for r in resized.collect()}
-    assert set(rows) == set(texts)
-    for i, t in texts.items():
-        want = t.encode("utf-8")[::4]
-        r = rows[i]
-        assert bytes(r.payload) == want, i
-        assert r.media_meta.n_bytes == len(want), i
-        assert r.media_meta.digest == _md5(want).hexdigest(), i
-        assert r.media_meta.media_type == "application/octet-stream"
-    feats = {
-        r.doc_id: list(r.features)
-        for r in M.extract_features(resized).collect()
-    }
-    for i, t in texts.items():
-        assert feats[i] == M._fake_features(t.encode("utf-8")[::4]), i
-
-
-def test_resize_media_null_payload_and_guards(spark):
-    """NULL payloads pass through as NULL rows (never dropped), with
-    NULL size/digest; stride < 1 refuses."""
-    media = spark.createDataFrame(
-        [(1, b"abcdefgh", ("application/octet-stream", 8, "x")),
-         (2, None, ("application/octet-stream", None, None))],
-        M.attach_payload(
-            spark.createDataFrame([(1, "a")], "doc_id long, text string")
-        ).schema,
-    )
-    out = {r.doc_id: r for r in M.resize_media(media, stride=2).collect()}
-    assert bytes(out[1].payload) == b"aceg"
-    assert out[1].media_meta.n_bytes == 4
-    assert out[2].payload is None
-    assert out[2].media_meta.n_bytes is None
-    assert out[2].media_meta.digest is None
-    with pytest.raises(ValueError, match="stride must be >= 1"):
-        M.resize_media(media, stride=0)
 
 
 def test_benchmark_decontamination_flags_overlap(spark):
@@ -1100,7 +1024,7 @@ def test_dup_components_raises_on_null_pair_or_node_ids(spark):
     raises loudly: unguarded, the NULL never equi-joins, so its edge
     silently fails to connect its endpoints AND a garbage
     (doc_id=NULL, component=<neighbor>) row leaks into the output —
-    the silent-loss class the pack_sequences/asof reviews closed. The
+    the silent-loss class the pack_sequences review closed. The
     guard rides the cast expression, so no pushed filter prunes it."""
     import pytest as _pytest
 
@@ -1497,8 +1421,7 @@ def test_snapshot_diff_classification(spark):
     assert (row2.old_v, row2.new_v) == (20.0, 21.0)
     # NULL join keys carry no identity: a NULL-keyed row in both
     # snapshots reports removed + added, never pairs (plain SQL
-    # equi-join semantics, same in the DuckDB oracle; deliberate
-    # opposite of asof_join's NULL by-key grouping — see docstring)
+    # equi-join semantics, same in the DuckDB oracle — see docstring)
     nold = spark.createDataFrame([(None, 1.0)], "k long, v double")
     nnew = spark.createDataFrame([(None, 1.0)], "k long, v double")
     nd = [(r.k, r.change) for r in snapshot_diff(nold, nnew, ("k",)).collect()]
@@ -2593,39 +2516,6 @@ def test_hamming_pairs_refuses_degenerate_bands(spark):
     assert D.hamming_pairs(
         sig, max_distance=40, bits=32, all_pairs=True
     ).count() == 6
-
-
-def test_extract_features_null_payload_passthrough(spark):
-    """resize_media and attach_payload both emit NULL payloads for
-    missing inputs, but extract_features crashed the composition with
-    an opaque mid-kernel TypeError (bytes(None) / int(None) —
-    reproduced). NULL payloads now flow through as NULL-feature rows;
-    the featurizer is never called on them."""
-    docs = spark.createDataFrame(
-        [(1, "hello"), (2, None)], "doc_id long, text string"
-    )
-    feats = {r.doc_id: r for r in
-             M.extract_features(M.attach_payload(docs)).collect()}
-    assert feats[1].features is not None and feats[1].n_bytes == 5
-    assert feats[2].features is None
-    assert feats[2].n_bytes is None and feats[2].digest is None
-    # a poisoning featurizer proves the kernel never ran on the NULL
-    def boom(payload):
-        raise AssertionError("featurizer called on NULL payload")
-    only_null = M.attach_payload(docs.filter(F.col("doc_id") == 2))
-    out = M.extract_features(only_null, featurizer=boom).collect()
-    assert len(out) == 1 and out[0].features is None
-
-
-def test_frame_sample_refuses_zero_stride(spark):
-    """every_n_bytes=0 was a mid-job ANSI DIVIDE_BY_ZERO (the
-    length_bucket_batches class); refuse at plan time."""
-    docs = spark.createDataFrame([(1, "hello")], "doc_id long, text string")
-    media = M.attach_payload(docs)
-    with pytest.raises(ValueError, match="every_n_bytes"):
-        M.frame_sample(media, every_n_bytes=0)
-    with pytest.raises(ValueError, match="every_n_bytes"):
-        M.frame_sample(media, every_n_bytes=-4)
 
 
 def test_h32_cached_equals_h32_and_bounds_memory():

@@ -609,78 +609,6 @@ def test_dsir_guards(spark):
         semdedup(emb, codebook=[])
 
 
-# ---------------------------------------------------------------------------
-# Naive-Bayes classifier (operators/classify.py)
-# ---------------------------------------------------------------------------
-
-def _py_nb(train, B=1000):
-    """Pure-python NB twin: hashed unigram+bigram buckets, add-one
-    smoothing, exact-decimal scores, argmax with smallest-label ties.
-    Returns (classes, predict) where predict(text) ->
-    (n_feats, label, score, margin). Tokenizer/hash are the verified
-    production twins (_py_tokens/_h32) — a local str.split() would
-    diverge on tabs/unicode whitespace (Java \\s is ASCII-only)."""
-    import math
-    from collections import Counter
-    from decimal import Decimal
-
-    from polymarket_data_ingestor_spark.operators.dedup import (
-        _h32,
-        _py_tokens,
-    )
-
-    def feats(text):
-        toks = [t for t in _py_tokens(text or "") if t != ""]
-        grams = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-        return [_h32(g) % B for g in grams]
-
-    hist: dict = {}
-    ndc: Counter = Counter()
-    for _, text, lab in train:
-        if lab is None:
-            continue
-        ndc[lab] += 1
-        hist.setdefault(lab, Counter()).update(feats(text))
-    n = sum(ndc.values())
-    classes = sorted(ndc)
-    prior = {
-        c: Decimal(str(round(math.log(ndc[c] / n), 9))) for c in classes
-    }
-    totc = {c: sum(hist.get(c, Counter()).values()) for c in classes}
-    w = {
-        c: {
-            b: Decimal(str(round(math.log((m + 1.0) / (totc[c] + B)), 9)))
-            for b, m in hist.get(c, Counter()).items()
-        }
-        for c in classes
-    }
-    w0 = {
-        c: Decimal(str(round(math.log((0 + 1.0) / (totc[c] + B)), 9)))
-        for c in classes
-    }
-
-    def predict(text):
-        fs = feats(text)
-        scored = [
-            (
-                prior[c] + sum((w[c].get(b, w0[c]) for b in fs), Decimal(0)),
-                c,
-            )
-            for c in classes
-        ]
-        # score desc, label asc — min over (-score, label); the earlier
-        # [-ord(ch)] trick mis-ranked prefix labels on ties (review)
-        best_s, best_c = min(scored, key=lambda t: (-t[0], t[1]))
-        second = max(
-            (s for s, c in scored if (s, c) != (best_s, best_c)),
-            default=None,
-        )
-        margin = float(best_s - second) if second is not None else None
-        return (len(fs), best_c, float(best_s), margin)
-
-    return classes, predict
-
-
 _NB_TRAIN = [
     (1, "the cat sat on the mat", "en"),
     (2, "a dog ate my homework", "en"),
@@ -694,289 +622,10 @@ _NB_TRAIN = [
 ]
 
 
-def test_nb_predict_matches_python_model(spark):
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_predict,
-    )
-
-    tdf = spark.createDataFrame(
-        _NB_TRAIN, "doc_id long, text string, lang string"
-    )
-    model = nb_model(tdf, label_col="lang", n_buckets=1000)
-    test = [
-        (100, "the cat and the dog sat"),
-        (101, "le chat le chat"),
-        (102, "der ist gross"),
-        (103, "zzz totally unseen grams zzz"),
-    ]
-    got = {
-        r["doc_id"]: (r["n_feats"], r["label"], r["score"], r["margin"])
-        for r in nb_predict(
-            spark.createDataFrame(test, "doc_id long, text string"), model
-        ).collect()
-    }
-    _, predict = _py_nb(_NB_TRAIN)
-    for did, text in test:
-        nf, lab, sc, mg = predict(text)
-        assert got[did][0] == nf, did
-        assert got[did][1] == lab, did
-        assert got[did][2] == pytest.approx(sc, abs=1e-12), did
-        assert got[did][3] == pytest.approx(mg, abs=1e-12), did
-    assert got[100][1] == "en" and got[101][1] == "fr"
-    assert got[102][1] == "de"
-
-
-def test_nb_unseen_buckets_score_w0_and_prior(spark):
-    """A doc of entirely out-of-model grams scores prior_c + n*w0_c for
-    every class — so the argmax degenerates to the prior-richest class
-    ONLY when the smoothing weights tie; with per-class totals they
-    don't, and the exact expected decimal is pinned."""
-    from decimal import Decimal
-
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_predict,
-    )
-
-    tdf = spark.createDataFrame(
-        _NB_TRAIN, "doc_id long, text string, lang string"
-    )
-    model = nb_model(tdf, label_col="lang", n_buckets=1000)
-    metas = {
-        r["__c"]: (Decimal(r["__w0"]), Decimal(r["__prior"]))
-        for r in model.collect()
-        if r["__b"] is None
-    }
-    row = nb_predict(
-        spark.createDataFrame(
-            [(1, "qqq www eee")], "doc_id long, text string"
-        ),
-        model,
-    ).first()
-    # 3 unigrams + 2 bigrams = 5 feats, all unseen
-    assert row["n_feats"] == 5
-    expect = {
-        c: pr + 5 * w0 for c, (w0, pr) in metas.items()
-    }
-    best = sorted(expect.items(), key=lambda t: (-t[1], t[0]))
-    assert row["label"] == best[0][0]
-    assert row["score"] == pytest.approx(float(best[0][1]), abs=1e-12)
-    assert row["margin"] == pytest.approx(
-        float(best[0][1] - best[1][1]), abs=1e-12
-    )
-
-
-def test_nb_tie_break_smallest_label_and_single_class(spark):
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_predict,
-    )
-
-    # perfectly symmetric two-class corpus: scoring a doc from a third
-    # vocabulary gives EQUAL decimal scores -> smallest label wins with
-    # margin exactly 0.0
-    sym = spark.createDataFrame(
-        [(1, "aa bb", "x"), (2, "aa bb", "y")],
-        "doc_id long, text string, lang string",
-    )
-    row = nb_predict(
-        spark.createDataFrame([(9, "zz")], "doc_id long, text string"),
-        nb_model(sym, label_col="lang", n_buckets=64),
-    ).first()
-    assert row["label"] == "x" and row["margin"] == 0.0
-
-    single = spark.createDataFrame(
-        [(1, "aa bb", "only")], "doc_id long, text string, lang string"
-    )
-    row1 = nb_predict(
-        spark.createDataFrame([(9, "aa")], "doc_id long, text string"),
-        nb_model(single, label_col="lang", n_buckets=64),
-    ).first()
-    assert row1["label"] == "only" and row1["margin"] is None
-
-
-def test_nb_scorer_matches_batch_and_featureless_convention(spark):
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_predict,
-        nb_score,
-    )
-
-    tdf = spark.createDataFrame(
-        _NB_TRAIN, "doc_id long, text string, lang string"
-    )
-    model_rows = nb_model(tdf, label_col="lang", n_buckets=1000).collect()
-    test = spark.createDataFrame(
-        [
-            (100, "the cat and the dog"),
-            (101, "le chat noir"),
-            (102, ""),       # featureless: batch drops, scorer emits
-            (103, None),
-        ],
-        "doc_id long, text string",
-    )
-    batch = {
-        r["doc_id"]: (r["n_feats"], r["label"], r["score"], r["margin"])
-        for r in nb_predict(test, model_rows).collect()
-    }
-    scored = {
-        r["doc_id"]: (r["n_feats"], r["label"], r["score"], r["margin"])
-        for r in nb_score(test, model_rows).collect()
-    }
-    assert set(batch) == {100, 101}
-    assert set(scored) == {100, 101, 102, 103}
-    for did in batch:
-        assert batch[did] == scored[did], did
-    # featureless rows score the PRIOR argmax ('en' has the most
-    # training docs) with n_feats = 0
-    from decimal import Decimal
-
-    metas = sorted(
-        (r["__c"], Decimal(r["__prior"]))
-        for r in model_rows
-        if r["__b"] is None
-    )
-    best = min(metas, key=lambda t: (-t[1], t[0]))
-    for did in (102, 103):
-        nf, lab, sc, mg = scored[did]
-        assert nf == 0 and lab == best[0]
-        assert sc == pytest.approx(float(best[1]), abs=1e-12)
-
-
-def test_nb_streaming_scorer_twin(spark, tmp_path):
-    """nb_score is a stateless projection: the SAME kernel runs on a
-    file stream and produces the same rows as the batch call."""
-    import json
-
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_score,
-    )
-
-    tdf = spark.createDataFrame(
-        _NB_TRAIN, "doc_id long, text string, lang string"
-    )
-    model_rows = nb_model(tdf, label_col="lang", n_buckets=1000).collect()
-    src = tmp_path / "docs"
-    src.mkdir()
-    with open(src / "batch.jsonl", "w") as fh:
-        for did, text, _ in _NB_TRAIN[:6]:
-            fh.write(json.dumps({"doc_id": did, "text": text}) + "\n")
-    stream = (
-        spark.readStream.schema("doc_id long, text string").json(str(src))
-    )
-    out = tmp_path / "out"
-    q = (
-        nb_score(stream, model_rows)
-        .writeStream.format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["doc_id"]: (r["n_feats"], r["label"], r["score"], r["margin"])
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    want = {
-        r["doc_id"]: (r["n_feats"], r["label"], r["score"], r["margin"])
-        for r in nb_score(
-            tdf.select("doc_id", "text").filter(F.col("doc_id") <= 6),
-            model_rows,
-        ).collect()
-    }
-    assert got == want and len(got) == 6
-
-
-def test_nb_guards_and_plan_gates(spark):
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_predict,
-        nb_score,
-    )
-
-    from polymarket_data_ingestor_spark.operators.classify import (
-        _MODEL_SCHEMA,
-    )
-
-    tdf = spark.createDataFrame(
-        _NB_TRAIN, "doc_id long, text string, lang string"
-    )
-    model = nb_model(tdf, label_col="lang", n_buckets=256)
-    # the persistable-model contract: nb_model's output matches the
-    # documented schema exactly (a model written to parquet today must
-    # be readable by tomorrow's appliers)
-    assert [(f.name, f.dataType) for f in model.schema.fields] == [
-        (f.name, f.dataType) for f in _MODEL_SCHEMA.fields
-    ]
-    with pytest.raises(ValueError, match="meta rows"):
-        nb_predict(tdf, model.filter(F.lit(False)))
-    mixed = model.collect() + nb_model(
-        tdf, label_col="lang", n_buckets=128
-    ).collect()
-    with pytest.raises(ValueError, match="hash-space"):
-        nb_score(tdf, mixed)
-
-    pred = nb_predict(tdf.select("doc_id", "text"), model)
-    pred.collect()
-    final = (
-        pred._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    # r15: featurize + class scoring are FUSED into one Arrow kernel
-    # emitting per-ROW long-nano partials — the model never joins at
-    # all (the r14 shape broadcast the bucket→weights map onto an
-    # exploded per-gram-instance stream; the aggregate's input is now
-    # #rows, not #gram-instances). One ArrowEvalPython, map-side
-    # combine collapses rows to doc partials before the ONE shuffle,
-    # and the argmax window reuses that aggregate's partitioning —
-    # one shuffle exchange, zero joins, zero Generate/explode before
-    # the aggregate.
-    assert "ArrowEvalPython" in final, final
-    assert "BatchEvalPython" not in final, final
-    assert "Join" not in final, final  # no broadcast/SMJ/cartesian
-    assert "CartesianProduct" not in final, final
-    import re
-
-    assert len(re.findall(r"Exchange hashpartitioning", final)) == 1, final
-    # the only Generate is the K-way argmax explode AFTER the per-doc
-    # aggregate (docs x K rows) — nothing explodes gram instances
-    agg_pos = final.index("HashAggregate")
-    gen_pos = [m.start() for m in re.finditer("Generate", final)]
-    assert all(g < agg_pos for g in gen_pos), final  # plan prints top-down
-
-
-def test_nb_truncated_model_refused(spark):
-    """Weight rows whose class lost its meta row (a filtered model)
-    refuse loudly — the appliers would otherwise silently never predict
-    that class."""
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_predict,
-    )
-
-    tdf = spark.createDataFrame(
-        _NB_TRAIN, "doc_id long, text string, lang string"
-    )
-    model = nb_model(tdf, label_col="lang", n_buckets=256)
-    truncated = model.filter(
-        F.col("__b").isNotNull() | (F.col("__c") != "fr")
-    )
-    with pytest.raises(ValueError, match="no.*meta row|meta row"):
-        nb_predict(tdf.select("doc_id", "text"), truncated)
-
-
 def test_scorer_append_column_collisions_refused(spark):
-    """nb_score / dsir_score APPEND columns; an input already carrying
-    one of those names would produce duplicate columns and
-    AMBIGUOUS_REFERENCE on every later use — both refuse loudly
-    (review finding)."""
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_score,
-    )
+    """dsir_score APPENDS columns; an input already carrying one of
+    those names would produce duplicate columns and AMBIGUOUS_REFERENCE
+    on every later use — it refuses loudly (review finding)."""
     from polymarket_data_ingestor_spark.operators.sampling import (
         dsir_model,
         dsir_score,
@@ -985,11 +634,6 @@ def test_scorer_append_column_collisions_refused(spark):
     tdf = spark.createDataFrame(
         _NB_TRAIN, "doc_id long, text string, lang string"
     )
-    rows = nb_model(tdf, label_col="lang", n_buckets=256).collect()
-    with pytest.raises(ValueError, match="already has \\['label'\\]"):
-        nb_score(
-            tdf.withColumn("label", F.col("lang")), rows
-        )
     rdf = tdf.select("doc_id", "text")
     dmodel = dsir_model(rdf, rdf, n_buckets=256)
     with pytest.raises(ValueError, match="already has \\['n_feats'\\]"):

@@ -178,103 +178,3 @@ def test_dsir_matches_python_model(spark, corpus):
     )
     ranked = sorted(want.items(), key=lambda kv: (-kv[1][2], kv[0]))
     assert sel == sorted(d for d, _ in ranked[:k])
-
-
-# ---------------------------------------------------------------------------
-# NB classifier (operators/classify.py) vs a pure-python model
-# ---------------------------------------------------------------------------
-
-_NB_B = 128
-
-
-def _py_nb_predict(train, tests):
-    """Pure-python NB over hashed unigram+bigram buckets: exact-decimal
-    scores, argmax with smallest-label tie-break. Returns
-    {doc_id: (n_feats, label, score, margin)} for feature-bearing docs."""
-
-    def feats(text):
-        toks = [w for w in _py_tokens(text) if w != ""]
-        grams = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-        return [_h32(g) % _NB_B for g in grams]
-
-    hist: dict = {}
-    ndc: Counter = Counter()
-    for _, text, lab in train:
-        if lab is None:
-            continue
-        ndc[lab] += 1
-        hist.setdefault(lab, Counter()).update(feats(text))
-    n = sum(ndc.values())
-    classes = sorted(ndc)
-    prior = {
-        c: Decimal(str(round(math.log(ndc[c] / n), 9))) for c in classes
-    }
-    totc = {c: sum(hist.get(c, Counter()).values()) for c in classes}
-    w = {
-        c: {
-            b: Decimal(
-                str(round(math.log((m + 1.0) / (totc[c] + _NB_B)), 9))
-            )
-            for b, m in hist.get(c, Counter()).items()
-        }
-        for c in classes
-    }
-    w0 = {
-        c: Decimal(str(round(math.log((0 + 1.0) / (totc[c] + _NB_B)), 9)))
-        for c in classes
-    }
-    out = {}
-    for did, text in tests:
-        fs = feats(text)
-        if not fs:
-            continue
-        scored = [
-            (
-                prior[c]
-                + sum((w[c].get(b, w0[c]) for b in fs), Decimal(0)),
-                c,
-            )
-            for c in classes
-        ]
-        # score desc, label asc
-        scored.sort(key=lambda t: (-t[0], t[1]))
-        margin = (
-            float(scored[0][0] - scored[1][0]) if len(scored) > 1 else None
-        )
-        out[did] = (len(fs), scored[0][1], float(scored[0][0]), margin)
-    return out
-
-
-_lab = st.sampled_from(["x", "y", "z"])
-nb_corpora = st.tuples(
-    # labeled training docs (every drawn label set is whatever appears)
-    st.lists(st.tuples(_doc, _lab), min_size=1, max_size=8),
-    # test docs (empty docs included: must drop from the batch path)
-    st.lists(_doc, min_size=1, max_size=6),
-)
-
-
-@given(nb_corpora)
-@settings(max_examples=5, deadline=None)
-def test_nb_matches_python_model(spark, corpus):
-    from polymarket_data_ingestor_spark.operators.classify import (
-        nb_model,
-        nb_predict,
-    )
-
-    labeled, tests = corpus
-    train = [(i, t, lab) for i, (t, lab) in enumerate(labeled)]
-    test_rows = [(100 + i, t) for i, t in enumerate(tests)]
-    tdf = spark.createDataFrame(
-        train, "doc_id long, text string, lang string"
-    )
-    model = nb_model(tdf, label_col="lang", n_buckets=_NB_B)
-    got = {
-        r["doc_id"]: (r["n_feats"], r["label"], r["score"], r["margin"])
-        for r in nb_predict(
-            spark.createDataFrame(test_rows, "doc_id long, text string"),
-            model,
-        ).collect()
-    }
-    want = _py_nb_predict(train, test_rows)
-    assert got == want
