@@ -19,7 +19,15 @@ Design principles (see SURVEY.md):
   multi-executor cluster even though tests run on ``local[*]``.
 """
 
-from polymarket_data_ingestor_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    # PEP 562: importing a submodule (the collector, the manifest) does
+    # not start importing pyspark; ``get_spark`` loads it on first use.
+    if name == "get_spark":
+        from polymarket_data_ingestor_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -143,7 +143,7 @@ def read_frames(
             part_layout,
             F.coalesce(
                 F.col("seq"),
-                F.unix_micros(F.to_timestamp("timestamp")),
+                F.unix_micros(F.try_to_timestamp("timestamp")),
                 F.monotonically_increasing_id(),
             ),
         )

@@ -49,7 +49,14 @@ STATE_SCHEMA = StructType([StructField("book_json", StringType(), True)])
 def read_frames_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Streaming scan of framed JSONL logs (same shape as read_frames)."""
+    """Streaming scan of framed JSONL logs (same shape as read_frames).
+
+    ``line_id`` is the persisted ``seq``, else the frame's timestamp in
+    epoch micros. A frame with neither (no ``seq``, and a NULL or
+    unparseable timestamp) gets a NULL ``line_id``, which the replay sort
+    puts last in its hour (nulls last). Batch ``read_frames`` gives such
+    a frame a row id that sorts first; a streaming plan has no row id.
+    """
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType(
@@ -73,7 +80,7 @@ def read_frames_stream(
         *[c for c in df.columns if c != "seq"],
         file_hour_col().alias("file_hour"),
         F.coalesce(
-            F.col("seq"), F.unix_micros(F.to_timestamp("timestamp"))
+            F.col("seq"), F.unix_micros(F.try_to_timestamp("timestamp"))
         ).alias("line_id"),
     )
 

@@ -55,6 +55,25 @@ def test_parse_feed_messages_skips_pong_and_keeps_position(spark, fixture_paths)
     assert feed.filter("event_type = 'tick_size_change'").count() > 0
 
 
+def test_read_frames_unparseable_timestamp_gets_the_row_id_key(spark,
+                                                              tmp_path):
+    # an hour=<hour>/part-* file written before ``seq`` existed keys each
+    # frame by its timestamp; one that does not parse gets a row id
+    # (sorting first in its hour) instead of failing the scan under ANSI
+    part = tmp_path / "hour=2025-01-01-00" / "part-0.json"
+    part.parent.mkdir()
+    part.write_text(
+        '{"timestamp": "2025-01-01T00:00:01.000Z", '
+        '"message_type": "feed_message", "content": "PONG"}\n'
+        '{"timestamp": "t", "message_type": "feed_message", '
+        '"content": "PONG"}\n'
+    )
+    rows = {r.timestamp: r for r in read_frames(spark, str(part)).collect()}
+    assert rows["2025-01-01T00:00:01.000Z"].line_id == 1_735_689_601_000_000
+    assert rows["t"].line_id < 1 << 40
+    assert {r.file_hour for r in rows.values()} == {"2025-01-01-00"}
+
+
 # --- markets --------------------------------------------------------------
 
 def test_read_market_info_and_filters(spark, fixture_paths):
