@@ -195,23 +195,33 @@ def trade_summary(ticks: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
     ``df.summary()`` uses approximate percentiles; this uses exact
     ``percentile`` (they differ; the notebook's pandas ``describe`` is also
     exact, so exact is the parity choice).
+
+    The three quartiles of a column come from ONE ``percentile`` over an
+    array of levels: each exact percentile keeps its own value→count
+    buffer, so three separate calls hold and sort the same buffer three
+    times. The aggregate is SQL text, parsed JVM-side, so building it
+    costs a few dozen py4j round trips rather than one per Column node.
     """
-    trades = ticks.filter(F.col("kind") == "TRADE")
-    aggs = []
+    aggs, out = [], [f"`{c}`" for c in by]
     for c in ("price", "size"):
         aggs += [
-            F.count(c).alias(f"{c}_count"),
-            F.avg(c).alias(f"{c}_mean"),
-            F.stddev_samp(c).alias(f"{c}_std"),
-            F.min(c).alias(f"{c}_min"),
-            F.percentile(c, F.lit(0.25)).alias(f"{c}_p25"),
-            F.percentile(c, F.lit(0.5)).alias(f"{c}_p50"),
-            F.percentile(c, F.lit(0.75)).alias(f"{c}_p75"),
-            F.max(c).alias(f"{c}_max"),
+            f"count({c}) AS {c}_count",
+            f"avg({c}) AS {c}_mean",
+            f"stddev_samp({c}) AS {c}_std",
+            f"min({c}) AS {c}_min",
+            f"percentile({c}, array(0.25, 0.5, 0.75)) AS {c}_q",
+            f"max({c}) AS {c}_max",
         ]
-    if by:
-        return trades.groupBy(*by).agg(*aggs)
-    return trades.agg(*aggs)
+        out += [f"{c}_{s}" for s in ("count", "mean", "std", "min")]
+        out += [f"{c}_q[{i}] AS {c}_{q}"
+                for i, q in enumerate(("p25", "p50", "p75"))]
+        out.append(f"{c}_max")
+    return (
+        ticks.where("kind = 'TRADE'")
+        .groupBy(*by)
+        .agg(*map(F.expr, aggs))
+        .selectExpr(*out)
+    )
 
 
 def label_outcomes(ticks: DataFrame, tokens: DataFrame) -> DataFrame:

@@ -35,10 +35,11 @@ Scale notes: state per group is one small dict-of-dicts (books are tiny),
 carried across Arrow batches when a group spans two, so Python memory per
 task is bounded by one batch — like the reference's single pass, but
 parallel across assets. The kernel's input exchange is a numbered
-repartition (``spark.sql.shuffle.partitions``), which AQE does not coalesce,
-so the CPU-bound kernel stage keeps one task per core however few bytes it
-reads; on the plain path it is the only shuffle. A hyper-active asset would
-bound its partition's task by its volume; the ``split_at_snapshots`` path
+repartition (``spark.sql.shuffle.partitions``), which AQE does not coalesce
+(see ``get_spark``'s AQE bullet), so the CPU-bound kernel stage keeps one
+task per core however few bytes it reads; on the plain path it is the only
+shuffle. A hyper-active asset would bound its partition's task by its
+volume; the ``split_at_snapshots`` path
 cuts such an asset into segments at book snapshots, which fully reset its
 state, and spreads them over partitions.
 """
@@ -640,11 +641,12 @@ def replay_feed_messages(
     else:
         group_cols = ["asset_id"]
     # One explicit-count exchange, then one sorted pass per partition. A
-    # numbered repartition is an exchange AQE leaves alone: coalescing by
-    # shuffle bytes would squeeze this CPU-bound stage onto fewer tasks
-    # than cores. The sort puts each group's rows together and in replay
-    # order (nulls last, as pandas sorts them), so the kernel walks each
-    # partition once, with no pandas frame, sort or Arrow batch per group.
+    # numbered repartition is an exchange AQE leaves alone (the rule is
+    # in get_spark's AQE bullet): coalescing by shuffle bytes would
+    # squeeze this CPU-bound stage onto fewer tasks than cores. The sort
+    # puts each group's rows together and in replay order (nulls last,
+    # as pandas sorts them), so the kernel walks each partition once,
+    # with no pandas frame, sort or Arrow batch per group.
     n_parts = int(feed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ticks = (
         packed.repartition(n_parts, *group_cols)
@@ -667,8 +669,10 @@ def replay_feed_messages(
 #: collector's contract, ``collector/src/main.rs`` hourly rotation), so the
 #: stat is a property of the file set — this is the in-process form of the
 #: per-file manifest a 100 TB deployment would maintain at ingest time.
-#: Local paths are additionally keyed by (size, mtime) so a rewritten file
-#: invalidates its entry. Bounded to keep long-lived drivers flat.
+#: Each path is keyed with its (size, mtime in ns), so a rewritten file
+#: misses the memo; a file set holding a path that cannot be stat'ed
+#: (remote or glob) is not memoized. Bounded to keep long-lived drivers
+#: flat.
 _GATE_STATS_CACHE: dict[tuple, int] = {}
 _GATE_STATS_CACHE_MAX = 256
 #: Parse-based gate results for replay_feed_messages, keyed by
@@ -726,10 +730,12 @@ def _max_snapshot_cell(spark, paths: Sequence[str]) -> int:
     for p in sorted(str(x) for x in paths):
         try:
             st = os.stat(p)
-            key_parts.append((p, st.st_size, int(st.st_mtime)))
-        except OSError:  # remote/glob paths: immutable-log contract applies
-            key_parts.append((p, -1, -1))
-    key = tuple(key_parts)
+        except OSError:  # remote or glob path: no stamp, so no memo
+            key = None
+            break
+        key_parts.append((p, st.st_size, st.st_mtime_ns))
+    else:
+        key = tuple(key_parts)
     if key in _GATE_STATS_CACHE:
         return _GATE_STATS_CACHE[key]
     hour_re = _re.compile(_file_hour_re())
@@ -775,9 +781,10 @@ def _max_snapshot_cell(spark, paths: Sequence[str]) -> int:
         max_cell = int(row[0]) if row and row[0] is not None else 0
     else:
         max_cell = max(side_cells.values(), default=0)
-    if len(_GATE_STATS_CACHE) >= _GATE_STATS_CACHE_MAX:
-        _GATE_STATS_CACHE.clear()
-    _GATE_STATS_CACHE[key] = max_cell
+    if key is not None:
+        if len(_GATE_STATS_CACHE) >= _GATE_STATS_CACHE_MAX:
+            _GATE_STATS_CACHE.clear()
+        _GATE_STATS_CACHE[key] = max_cell
     return max_cell
 
 
@@ -857,10 +864,10 @@ def replay(
     ``split_at_snapshots`` — see :func:`replay_feed_messages` (hot-asset
     skew mitigation; identical output). When ``paths`` are given, the
     cold-profile gate runs as a raw-text scan (regex count, no JSON parse
-    of non-book lines) whose result is memoized per immutable file set —
-    so on a uniform profile the gate costs nothing after the first call,
-    and the first call pays only the light text pass, not a second JSON
-    parse.
+    of non-book lines) whose result is memoized per local file set, keyed
+    by each file's size and mtime — so on a uniform profile the gate
+    costs nothing after the first call, and the first call pays only the
+    light text pass, not a second JSON parse.
 
     ``split_at_snapshots="auto"`` (the default since r15) applies the
     skew mitigation automatically: with ``paths``, the memoized raw-text
@@ -934,22 +941,24 @@ def write_tick_lake(
     output (the partition column).
 
     ``compact=True`` (default) hash-repartitions rows by ``file_hour``
-    before the write, so each hour lands as ONE file instead of one
-    file per upstream task — without it, every replay task holding any
-    of an hour's assets opens a writer for that hour (tasks × hours
-    small files; 372 vs 12 at the sf0.1 bench shape, and the write was
-    ~25% faster compacted). Pass ``compact=False`` when a single hour
-    is too big for one task — e.g. compose with a finer repartition on
-    ``(file_hour, asset)`` — the small-files tradeoff is then the
-    caller's.
+    into ``spark.sql.shuffle.partitions`` writer tasks before the write
+    (the sinks' write path, ``sinks._write_lake``), so each hour
+    lands as ONE file instead of one file per upstream task, and the
+    hours are written in parallel. Without it, every replay task
+    holding any of an hour's assets opens a writer for that hour
+    (tasks × hours small files). On perfbench's ``lake_queries`` lake
+    (73,903 ticks in 3 hours, 3 Spark cores of a 4-vCPU VM) the write
+    stage runs 3 tasks where an unnumbered repartition ran 1, and the
+    rewrite takes 0.42 s instead of 0.60 s (medians over seeds
+    101-110), still as 3 files. Pass ``compact=False`` when a single
+    hour is too big for one task — e.g. compose with a finer
+    repartition on ``(file_hour, asset)`` — the small-files tradeoff is
+    then the caller's.
     """
-    if compact:
-        ticks = ticks.repartition(F.col("file_hour"))
-    (
-        ticks.write.mode(mode)
-        .partitionBy("file_hour")
-        .parquet(path, compression="snappy")
-    )
+    from polymarket_data_ingestor_spark.sinks import _write_lake
+
+    _write_lake(ticks, path, ("file_hour",), mode, shuffle=compact,
+                compression="snappy")
 
 
 def with_event_time(ticks: DataFrame, column: str = "event_time") -> DataFrame:

@@ -42,6 +42,17 @@ def get_spark(
       side turns out small, and splits skewed partitions (the Spark analogue
       of the reference's hot-shard connection splitting,
       ``collector/src/client/reconnecter.rs:280-350``).
+      The engine's one rule against it: a CPU-bound stage after a small
+      shuffle gets a NUMBERED exchange, ``repartition(n, *keys)`` with
+      ``n = spark.sql.shuffle.partitions``. AQE coalesces an unnumbered
+      shuffle by bytes, so a few-MB shuffle would run the whole next
+      stage on one task; it leaves a numbered one alone. The replay
+      kernel's input and every partitioned lake write
+      (``sinks._write_lake``) follow it: the ~74k-tick, 3-hour perfbench
+      lake writes its hours on 3 tasks instead of 1. The cost shows at
+      cluster scale, where shuffle partitions far outnumber the keys: a
+      write of 24 hours at 2,000 shuffle partitions schedules at least
+      1,976 empty tasks (they open no file, but each is a task launch).
     * Arrow execution for the replay kernel (SURVEY §2.10 O1).
       Batch size 131072: a local sweep (10k/32k/64k/128k/256k rows on the
       sf0.1 replay fixture) shows the Python-worker hop cost is dominated

@@ -13,10 +13,17 @@ This module packages those two decisions:
   into directory pruning, checked by the ``PartitionFilters`` plan gate
   in ``tests/test_sinks.py``;
 * ``maxRecordsPerFile`` caps file size without an extra repartition
-  job, and an optional pre-shuffle on the partition columns collapses
-  the files-per-directory count to ~1 per in-flight task writing into
-  it (otherwise EVERY upstream task writes a sliver into every
-  directory it touches: tasks x partitions small files).
+  job, and an optional pre-shuffle on the partition columns sends each
+  directory's rows to ONE writer task (otherwise EVERY upstream task
+  writes a sliver into every directory it touches: tasks x partitions
+  small files).
+
+Every partitioned write here, and the tick lake's
+(``operators.replay.write_tick_lake``), goes through :func:`_write_lake`.
+Its pre-shuffle is a numbered exchange, so AQE keeps one writer task per
+shuffle partition instead of merging a small shuffle into one task; the
+rule and its cost at cluster scale are in the AQE bullet of
+:func:`polymarket_data_ingestor_spark.session.get_spark`.
 """
 
 from __future__ import annotations
@@ -49,8 +56,8 @@ def write_partitioned_lake(
     output stream when it passes the cap — no extra job). With
     ``coalesce_partitions`` (default) the data is shuffled on the
     partition columns first, so each output directory is written by the
-    tasks that OWN that key range — files per directory ≈ data volume /
-    cap, not (upstream tasks × directories). Disable it when the input
+    one task that owns it — files per directory ≈ data volume / cap,
+    not (upstream tasks × directories). Disable it when the input
     is already clustered by the partition columns (e.g. a streaming
     micro-batch of one hour) and the shuffle would be pure cost.
 
@@ -61,15 +68,35 @@ def write_partitioned_lake(
     (``collector`` hourly logs), which is exactly a time-partitioned
     layout by hand.
     """
-    out = df
-    if coalesce_partitions:
-        out = out.repartition(*[F.col(c) for c in partition_cols])
-    (
-        out.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_cols)
-        .parquet(path)
+    _write_lake(
+        df, path, partition_cols, mode, shuffle=coalesce_partitions,
+        maxRecordsPerFile=max_records_per_file,
     )
+
+
+def _write_lake(
+    df: DataFrame,
+    path: str,
+    partition_cols: tuple[str, ...],
+    mode: str,
+    shuffle: bool = True,
+    **options,
+) -> None:
+    """Write ``df`` as hive-partitioned parquet under ``path``, passing
+    ``options`` to the writer. With ``shuffle``, rows are first
+    hash-repartitioned on ``partition_cols`` into
+    ``spark.sql.shuffle.partitions`` tasks: each directory's rows go to
+    exactly one task, so it gets one file (or one per
+    ``maxRecordsPerFile`` rows), and the directories are written in
+    parallel. The count is explicit because AQE coalesces an unnumbered
+    repartition by bytes, and a small shuffle then writes every
+    directory on one task (see ``get_spark``'s AQE bullet)."""
+    if shuffle:
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        df = df.repartition(n, *partition_cols)
+    df.write.mode(mode).options(**options).partitionBy(
+        *partition_cols
+    ).parquet(path)
 
 
 def overwrite_lake_partitions(
@@ -96,13 +123,10 @@ def overwrite_lake_partitions(
     deterministic replay pipeline wants: re-derive the day from the
     immutable logs and swap it in.
     """
-    (
-        df.repartition(*[F.col(c) for c in partition_cols])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_cols)
-        .parquet(path)
+    _write_lake(
+        df, path, partition_cols, "overwrite",
+        partitionOverwriteMode="dynamic",
+        maxRecordsPerFile=max_records_per_file,
     )
 
 

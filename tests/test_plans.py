@@ -250,12 +250,8 @@ def test_replay_plan_build_py4j_budget(spark, tmp_path, monkeypatch):
     """Building replay()'s plan over sidecar'd logs costs a bounded
     number of py4j round trips: the packing projection and its filter
     are SQL text parsed JVM-side in one call each, not Column lambdas
-    that pay a round trip for every node they build. Memory-release
-    commands are not counted: py4j flushes the releases of proxies freed
-    earlier in batches, at points no test controls."""
+    that pay a round trip for every node they build."""
     import sys
-
-    from py4j.protocol import MEMORY_COMMAND_NAME
 
     sys.path.insert(0, "tests")
     from fixture_gen import write_fixture_files
@@ -268,6 +264,70 @@ def test_replay_plan_build_py4j_budget(spark, tmp_path, monkeypatch):
     paths = [str(p) for p in write_fixture_files(
         tmp_path, n_hours=3, msgs_per_hour=30, seed=3)]
     assert write_gate_manifests(spark, paths) == len(paths)
+    calls = _py4j_calls(spark, monkeypatch, lambda: replay(spark, paths))
+    assert 0 < calls < 1000, calls
+
+
+#: py4j round trips that building each notebook cell's plan may take;
+#: measured 205, 166, 79 and 467 with pyspark 4.1 on the fixture below.
+_CELL_PY4J_BUDGET = {
+    "bbo_bars": 250,
+    "volume_bars": 200,
+    "trade_summary": 100,
+    "label_outcomes": 550,
+}
+
+
+def test_notebook_cells_py4j_budget(spark, tmp_path, monkeypatch):
+    """Building each bbo.ipynb cell's plan over a small tick lake costs
+    a bounded number of py4j round trips; trade_summary's aggregate is
+    SQL text, so it no longer pays a round trip per Column node.
+    label_outcomes' build includes reading the markets dimension."""
+    import sys
+
+    sys.path.insert(0, "tests")
+    from fixture_gen import write_fixture_files
+
+    from polymarket_data_ingestor_spark.operators.bars import (
+        bbo_bars,
+        label_outcomes,
+        trade_summary,
+        volume_bars,
+    )
+    from polymarket_data_ingestor_spark.operators.replay import (
+        replay,
+        with_event_time,
+        write_tick_lake,
+    )
+    from polymarket_data_ingestor_spark.sources.frames import read_frames
+    from polymarket_data_ingestor_spark.sources.markets import (
+        market_tokens,
+        read_market_info,
+    )
+
+    paths = [str(p) for p in write_fixture_files(
+        tmp_path, n_hours=3, msgs_per_hour=30, seed=3)]
+    lake = str(tmp_path / "lake")
+    write_tick_lake(replay(spark, paths, ticks_only=False), lake)
+    ticks = with_event_time(spark.read.parquet(lake))
+    cells = {
+        "bbo_bars": lambda: bbo_bars(ticks),
+        "volume_bars": lambda: volume_bars(ticks),
+        "trade_summary": lambda: trade_summary(ticks),
+        "label_outcomes": lambda: label_outcomes(ticks, market_tokens(
+            read_market_info(read_frames(spark, paths)))),
+    }
+    calls = {name: _py4j_calls(spark, monkeypatch, build)
+             for name, build in cells.items()}
+    assert all(0 < calls[k] <= _CELL_PY4J_BUDGET[k] for k in cells), calls
+
+
+def _py4j_calls(spark, monkeypatch, build) -> int:
+    """The py4j round trips ``build()`` makes. Memory-release commands
+    are not counted: py4j flushes the releases of proxies freed earlier
+    in batches, at points no test controls."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = 0
@@ -278,9 +338,11 @@ def test_replay_plan_build_py4j_budget(spark, tmp_path, monkeypatch):
         return send(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting_send)
-    replay(spark, paths)
-    monkeypatch.undo()
-    assert 0 < calls < 1000, calls
+    try:
+        build()
+    finally:
+        monkeypatch.undo()
+    return calls
 
 
 def test_approx_distinct_within_rsd_of_exact(spark):

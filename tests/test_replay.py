@@ -855,6 +855,55 @@ def test_gate_sums_same_hour_files_across_directories(spark, tmp_path):
     assert _max_snapshot_cell(spark, [p1, p2]) == 600
 
 
+def test_gate_memo_misses_a_rewritten_file(spark, tmp_path):
+    """The gate's memo must not answer for a file that changed: a log
+    rewritten with the same size within the same second, and a glob
+    path whose files cannot be stamped, both get a fresh hot/cold
+    decision."""
+    import os
+
+    from polymarket_data_ingestor_spark.operators.replay import (
+        _GATE_STATS_CACHE,
+        _max_snapshot_cell,
+        replay,
+    )
+
+    p = tmp_path / "2024-01-01-00.jsonl"
+
+    def write_log(assets):
+        # asset ids of one length: every rewrite has the same size
+        p.write_text("\n".join(json.dumps(
+            {"timestamp": "t", "message_type": "feed_message",
+             "content": json.dumps([{"event_type": "book",
+                                     "timestamp": str(1000 + i),
+                                     "market": "0xm", "asset_id": a,
+                                     "bids": [], "asks": []}])})
+            for i, a in enumerate(assets)) + "\n")
+
+    def split_path(paths):
+        ticks = replay(spark, paths, snapshots_per_segment=40)
+        return "__segment" in ticks._jdf.queryExecution().analyzed().toString()
+
+    second = 1_700_000_000 * 10**9
+    _GATE_STATS_CACHE.clear()
+    write_log(["1" * 8] * 40)  # one asset, 40 snapshots: hot
+    os.utime(p, ns=(second, second + 1000))
+    assert _max_snapshot_cell(spark, [str(p)]) == 40
+    assert split_path([str(p)])
+    size = p.stat().st_size
+    write_log(["1" * 8, "2" * 8] * 20)  # two assets, 20 each: cold
+    os.utime(p, ns=(second, second + 2000))
+    assert p.stat().st_size == size
+    assert _max_snapshot_cell(spark, [str(p)]) == 20
+    assert not split_path([str(p)])
+
+    glob = str(tmp_path / "*.jsonl")
+    assert _max_snapshot_cell(spark, [glob]) == 20
+    write_log(["1" * 8] * 40)
+    assert _max_snapshot_cell(spark, [glob]) == 40
+    _GATE_STATS_CACHE.clear()
+
+
 def test_frame_writer_crash_recovery_counts_leftover_lines(tmp_path):
     """Restarting on a leftover current/log.jsonl (unclean shutdown)
     must fold the existing lines into the manifest counts — the sidecar

@@ -123,6 +123,66 @@ def test_overwrite_lake_partitions_touches_only_named_days(spark, tmp_path):
     assert got == pytest.approx(want)
 
 
+def _write_stage_tasks(spark, group: str, write) -> int:
+    """Run ``write()`` under job group ``group`` and return the task
+    count of its last stage, the one that writes the files."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "lake write")
+    try:
+        write()
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(sid)
+              for jid in tracker.getJobIdsForGroup(group)
+              for sid in tracker.getJobInfo(jid).stageIds]
+    return max((s for s in stages if s is not None),
+               key=lambda s: s.stageId).numTasks
+
+
+def test_lake_writes_run_one_task_per_shuffle_partition(spark, tmp_path):
+    """The tick lake and the sinks write through a numbered exchange:
+    AQE does not merge a small shuffle into one reducer, so the write
+    stage runs spark.sql.shuffle.partitions tasks, and each hour still
+    goes to one of them, as one data file."""
+    from polymarket_data_ingestor_spark.operators.replay import (
+        write_tick_lake,
+    )
+    from polymarket_data_ingestor_spark.sinks import (
+        overwrite_lake_partitions,
+    )
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n > 1 and spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    ticks = spark.range(0, 3000, 1, 3).selectExpr(
+        "CAST(1704067200000 + id * 3600 AS STRING) AS timestamp",
+        "IF(id % 5 = 0, 'TRADE', 'BBO') AS kind",
+        "'m' AS market",
+        "CAST(id % 7 AS STRING) AS asset",
+        "IF(id % 2 = 0, 'BID', 'ASK') AS side",
+        "0.5D AS price",
+        "CAST(id AS DOUBLE) AS size",
+        "concat('2024-01-01-0', CAST(id % 3 AS STRING)) AS file_hour",
+    )
+    lake = tmp_path / "lake"
+
+    def data_files():
+        return {d.name: len(list(d.glob("*.parquet")))
+                for d in lake.iterdir() if d.name.startswith("file_hour=")}
+
+    assert _write_stage_tasks(
+        spark, "sinks-tick-lake", lambda: write_tick_lake(ticks, str(lake))
+    ) == n
+    assert data_files() == {f"file_hour=2024-01-01-0{h}": 1 for h in range(3)}
+    fix = ticks.where("file_hour <> '2024-01-01-00'")
+    assert _write_stage_tasks(
+        spark, "sinks-overwrite",
+        lambda: overwrite_lake_partitions(fix, str(lake), ("file_hour",)),
+    ) == n
+    assert data_files() == {f"file_hour=2024-01-01-0{h}": 1 for h in range(3)}
+    assert spark.read.parquet(str(lake)).count() == 3000
+
+
 
 def _file_state(root: Path) -> dict[str, tuple[str, ...]]:
     """Per-partition tuple of (name, size, mtime_ns) — byte-identity proxy."""
